@@ -23,4 +23,13 @@ Layout:
 
 __version__ = "0.1.0"
 
-from hpat_jl_spark.session import get_spark  # noqa: F401
+
+def __getattr__(name: str):
+    # Lazy export (PEP 562): importing the package must not import
+    # pyspark, because Spark's Python workers start from
+    # ``hpat_jl_spark.worker_daemon``, which fixes sys.path first.
+    if name == "get_spark":
+        from hpat_jl_spark.session import get_spark
+
+        return get_spark
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

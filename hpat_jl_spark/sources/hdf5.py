@@ -340,6 +340,23 @@ def scan_hdf5(path: str) -> dict[str, H5Dataset]:
     return datasets
 
 
+def _split_frame(spark: SparkSession, ranges: list[tuple[int, int]]) -> DataFrame:
+    """One ``(start, stop)`` row per partition, built in the JVM.
+
+    ``spark.range`` with one partition per range gives the one-task-per-
+    range layout with no exchange (the r12 profile: a repartitionByRange
+    splits frame paid a range-sampling job and an Exchange per read),
+    and the bounds come from array literals, so the frame needs no
+    Python worker. A frame over ``parallelize(ranges)`` would run a
+    pickled Python RDD stage under the ``mapInPandas``: two Python
+    workers per task."""
+    starts = ", ".join(f"{a}L" for a, _ in ranges)
+    stops = ", ".join(f"{b}L" for _, b in ranges)
+    return spark.range(len(ranges), numPartitions=len(ranges)).selectExpr(
+        f"array({starts})[int(id)] AS start", f"array({stops})[int(id)] AS stop"
+    )
+
+
 def read_hdf5(
     spark: SparkSession,
     path: str,
@@ -401,16 +418,7 @@ def read_hdf5(
                         cols[f"c{i}"] = m[:, i]
                 yield pd.DataFrame(cols)
 
-    # One range per RDD slice (parallelize splits positionally): the
-    # r12 profile showed the former repartitionByRange splits frame
-    # paying a range-sampling job + an Exchange per invocation just to
-    # spread len(ranges) rows — parallelize gives the same one-task-
-    # per-range layout with zero exchange and one job fewer.
-    splits_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(ranges, len(ranges)),
-        "start long, stop long",
-    )
-    return splits_df.mapInPandas(kernel, out_schema)
+    return _split_frame(spark, ranges).mapInPandas(kernel, out_schema)
 
 
 def read_hdf5_table(
@@ -491,13 +499,4 @@ def read_hdf5_table(
                             out[f"{name}_c{i}"] = m2[:, i]
                 yield pd.DataFrame(out)
 
-    # One range per RDD slice (parallelize splits positionally): the
-    # r12 profile showed the former repartitionByRange splits frame
-    # paying a range-sampling job + an Exchange per invocation just to
-    # spread len(ranges) rows — parallelize gives the same one-task-
-    # per-range layout with zero exchange and one job fewer.
-    splits_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(ranges, len(ranges)),
-        "start long, stop long",
-    )
-    return splits_df.mapInPandas(kernel, out_schema)
+    return _split_frame(spark, ranges).mapInPandas(kernel, out_schema)

@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from hpat_jl_spark.session import _SCAN_LISTING_CACHE
+
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 TABLE_NAMES = [
@@ -156,7 +158,10 @@ _TABLE_CACHE: dict[tuple[str, str], tuple[SparkSession, DataFrame]] = {}
 
 
 def invalidate_table_cache() -> None:
+    """Forget every resolved table and every scan listing: both caches
+    assume a path's files never change, so they are dropped together."""
     _TABLE_CACHE.clear()
+    _SCAN_LISTING_CACHE.clear()
 
 
 def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:

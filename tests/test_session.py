@@ -85,3 +85,23 @@ def test_row_group_cap_fires_on_synthetic_single_group(spark, tmp_path):
     finally:
         for k, v in prev.items():
             spark.conf.set(k, v)
+
+
+def test_invalidate_table_cache_drops_scan_listings(spark, tmp_path):
+    """A directory restaged at the same path is re-listed only after
+    invalidate_table_cache(): the scan listing shares the table cache's
+    files-never-change assumption, so both are dropped together."""
+    import pyarrow as pa
+
+    from hpat_jl_spark.tables import invalidate_table_cache
+
+    d = tmp_path / "staged"
+    d.mkdir()
+    tbl = pa.table({"x": pa.array(range(1000))})
+    pq.write_table(tbl, str(d / "part-0.parquet"))
+    assert scan_split_count(spark, str(d)) == 1
+    for i in range(1, 4):
+        pq.write_table(tbl, str(d / f"part-{i}.parquet"))
+    assert scan_split_count(spark, str(d)) == 1  # the stale listing
+    invalidate_table_cache()
+    assert scan_split_count(spark, str(d)) == 4
