@@ -22,12 +22,14 @@ from __future__ import annotations
 import atexit
 import os
 import tempfile
+import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hpat_jl_spark.registry import register
+from hpat_jl_spark.session import scan_split_count
 from hpat_jl_spark.streaming.sources import stream_events
 from hpat_jl_spark.tables import load_table
 from hpat_jl_spark.streaming.windows import (
@@ -92,20 +94,53 @@ def _stage_events_dir(sf_dir: str, copies: int = 1) -> str:
     return d
 
 
-def _run_to_memory(stream_df: DataFrame, mode: str, prefix: str) -> DataFrame:
+# Serializes the shuffle-partition override in _run_to_memory, so two
+# replays started from different threads cannot restore each other's
+# narrowed width as the session's value.
+_STATE_WIDTH_LOCK = threading.Lock()
+
+
+def _run_to_memory(
+    stream_df: DataFrame, mode: str, prefix: str, source_dir: str
+) -> DataFrame:
     """Execute a streaming DataFrame to completion (availableNow) into a
     uniquely-named memory sink and return the sink as a batch DataFrame.
-    Unique names: the determinism sweep runs every query twice."""
+    Unique names: the determinism sweep runs every query twice.
+
+    ``source_dir`` is the directory the stream reads (the one
+    ``_stage_events_dir`` returned). The query starts with
+    ``min(spark.sql.shuffle.partitions, scan_split_count(source_dir))``
+    state partitions. AQE is off for stateful streams, so the shuffle
+    setting is an exact fan-out, not a ceiling: a one-row-group replay
+    would otherwise pay for 8-32 state-store tasks that each mostly
+    wait on checkpoint file I/O (174-230 ms per task on 18-31 ms of
+    CPU on a 4-core Xeon VM; CLAUDE.md's streaming-state trap has the
+    breakdown). The conf is set only around ``.start()`` and restored in
+    ``finally``: the query clones the session conf when it starts and
+    keeps its width for its life, and each call gets a fresh temporary
+    checkpoint, so the width is never persisted and never reaches the
+    caller. A split-rich input at scale gets back the full setting.
+    Streams with a persistent checkpoint must not use this: their
+    state width is fixed by the checkpoint."""
+    spark = stream_df.sparkSession
     sink = f"{prefix}_{uuid.uuid4().hex[:12]}"
-    q = (
+    writer = (
         stream_df.writeStream.format("memory")
         .queryName(sink)
         .outputMode(mode)
         .trigger(availableNow=True)
-        .start()
     )
+    key = "spark.sql.shuffle.partitions"
+    with _STATE_WIDTH_LOCK:
+        prev = spark.conf.get(key)
+        width = min(int(prev), scan_split_count(spark, source_dir))
+        spark.conf.set(key, str(width))
+        try:
+            q = writer.start()
+        finally:
+            spark.conf.set(key, prev)
     q.awaitTermination()
-    return stream_df.sparkSession.table(sink)
+    return spark.table(sink)
 
 
 _stream_tumbling_oracle = """
@@ -129,11 +164,13 @@ def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     The memory-sink table name is unique per invocation so repeated
     runs (the determinism sweep runs every query twice) never collide.
     """
-    ev = stream_events(spark, _stage_events_dir(sf_dir))
+    staged = _stage_events_dir(sf_dir)
+    ev = stream_events(spark, staged)
     out = _run_to_memory(
         tumbling_counts(ev, window="1 hour", watermark="2 hours"),
         mode="complete",
         prefix="stream_tumbling",
+        source_dir=staged,
     )
     return out.select(
         F.col("start").alias("win_start"),
@@ -164,11 +201,13 @@ def stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     event belongs to 4 overlapping windows; the oracle expands that
     membership explicitly. Proves the overlapping-window state logic
     (one state row per (window, type), not per event) against batch."""
-    ev = stream_events(spark, _stage_events_dir(sf_dir))
+    staged = _stage_events_dir(sf_dir)
+    ev = stream_events(spark, staged)
     out = _run_to_memory(
         sliding_counts(ev, window="1 hour", slide="15 minutes", watermark="2 hours"),
         mode="complete",
         prefix="stream_sliding",
+        source_dir=staged,
     )
     return out.select(
         F.col("start").alias("win_start"),
@@ -213,11 +252,13 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     sessionization (examples/queries_devel/q02.jl) in streaming form.
     The oracle rebuilds sessions with the lag/gap-island construction;
     session_end is last-event + gap (session_window's half-open end)."""
-    ev = stream_events(spark, _stage_events_dir(sf_dir))
+    staged = _stage_events_dir(sf_dir)
+    ev = stream_events(spark, staged)
     out = _run_to_memory(
         sessionize_stream(ev, gap="30 minutes", watermark="2 hours"),
         mode="complete",
         prefix="stream_session",
+        source_dir=staged,
     )
     return out.select(
         "user_id",
@@ -258,6 +299,7 @@ def stream_stream_join_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_stream_purchase_after_view(ev, watermark="1 hour"),
         mode="append",
         prefix="stream_join",
+        source_dir=staged,
     )
     return out.select("p_event_id", "p_user", "p_ts", "v_ts", "v_value")
 
@@ -284,9 +326,12 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     (unbounded key set → state-store death)."""
     from hpat_jl_spark.streaming.dedup import dedup_within_watermark
 
-    ev = stream_events(spark, _stage_events_dir(sf_dir, copies=2))
+    staged = _stage_events_dir(sf_dir, copies=2)
+    ev = stream_events(spark, staged)
     deduped = dedup_within_watermark(ev, keys=["event_id"], delay="1 hour")
-    out = _run_to_memory(deduped, mode="append", prefix="stream_dedup")
+    out = _run_to_memory(
+        deduped, mode="append", prefix="stream_dedup", source_dir=staged
+    )
     return out.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_events"),
         F.round(F.sum("value"), 2).alias("total_value"),
@@ -314,9 +359,13 @@ def stream_running_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     agrees with JVM aggregation exactly."""
     from hpat_jl_spark.streaming.stateful import running_user_totals
 
-    ev = stream_events(spark, _stage_events_dir(sf_dir))
+    staged = _stage_events_dir(sf_dir)
+    ev = stream_events(spark, staged)
     out = _run_to_memory(
-        running_user_totals(ev), mode="update", prefix="stream_stateful"
+        running_user_totals(ev),
+        mode="update",
+        prefix="stream_stateful",
+        source_dir=staged,
     )
     return out.groupBy("user_id").agg(
         F.max("n_events").cast("bigint").alias("n_events"),
@@ -348,7 +397,8 @@ def stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     the join, only for the windowless aggregation."""
     from hpat_jl_spark.streaming.windows import enrich_with_dim
 
-    ev = stream_events(spark, _stage_events_dir(sf_dir))
+    staged = _stage_events_dir(sf_dir)
+    ev = stream_events(spark, staged)
     dim = load_table(spark, "customer", sf_dir).select(
         F.col("c_custkey").alias("user_id"), F.col("c_mktsegment").alias("segment")
     )
@@ -359,7 +409,9 @@ def stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n_events"),
         F.round(F.sum("value"), 2).alias("total_value"),
     )
-    out = _run_to_memory(agg, mode="complete", prefix="stream_enrich")
+    out = _run_to_memory(
+        agg, mode="complete", prefix="stream_enrich", source_dir=staged
+    )
     return out.select("segment", "event_type", "n_events", "total_value")
 
 

@@ -15,11 +15,26 @@ import re
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
 _LOCAL_MASTER = re.compile(r"local(\[[^\]]*\])?")
 # the directory that holds the hpat_jl_spark package
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def local_cpus() -> int:
+    """Worker threads for a local master and the default shuffle width:
+    ``SPARK_GRAFT_CPUS``, else the CPUs this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM``, else half the machine's RAM capped at
+    8g and never below 1g, so a small box does not promise the JVM more
+    heap than it has."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{max(1024, min(8192, ram_mb // 2))}m"
 
 
 def sized_shuffle_partitions(
@@ -58,8 +73,7 @@ def sized_shuffle_partitions(
                         pass
     except OSError:
         pass
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    return max(floor, min(total // target_bytes, per_core_cap * cpus))
+    return max(floor, min(total // target_bytes, per_core_cap * local_cpus()))
 
 
 # Per-path (files, sizes, total_row_groups) listing memo. Fixtures are
@@ -207,7 +221,7 @@ def get_spark(
     a fixed fan-out: at 100 TB you set it high (e.g. 2000+) and let
     coalescing shrink small stages.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = local_cpus()
     # Silence pyspark's own worker-side pandas FutureWarning (VERDICT
     # r05 #7): serializers.py concats Arrow batches per partition and
     # trips pandas' empty-or-all-NA concat deprecation once per task —
@@ -225,7 +239,7 @@ def get_spark(
         .master(master or f"local[{cpus}]")
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+            str(shuffle_partitions or cpus),
         )
         # AQE: runtime re-plan (coalesce small shuffle partitions, convert
         # to broadcast join when a side turns out small, split skew).
@@ -273,7 +287,7 @@ def get_spark(
         # Timestamps in fixtures are ns-precision; keep them lossless.
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", driver_memory())
     )
     conf = dict(extra_conf or {})
     if _LOCAL_MASTER.fullmatch(master or f"local[{cpus}]"):

@@ -29,6 +29,28 @@ import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
+# VERDICT r12 #7: how to READ a band breach on the stream_* queries -
+# against the structural micro-batch floor, not as an operator
+# regression. ASCII only: BENCH_BANDS.json carries this text byte for
+# byte (tests/test_bench_contract.py pins the match).
+BAND_NOTES = {
+    "streaming_floor": (
+        "stream_* queries carry a structural ~0.3 s/micro-batch "
+        "trigger floor from the local file-source replay harness "
+        "(listing + offset log + state-store commit per batch), "
+        "independent of the operators; at sf0.1 each stream query "
+        "is 2-3 batches, so ~0.6-0.9 s of any stream wall is "
+        "floor, not plan. A breach on a stream band therefore "
+        "needs the per-trigger medians from CAPACITY.md's "
+        "state-store grid before it reads as a regression: "
+        "in-memory store medians are 30-80 ms/trigger at bench "
+        "scale (RocksDB at worst 1.85x on delete-heavy watermark "
+        "dedup, parity elsewhere; state MB identical) - a real "
+        "operator regression shows up THERE, a floor artifact "
+        "shows up only in wall seconds."
+    ),
+}
+
 
 def main() -> None:
     src = sys.argv[1] if len(sys.argv) > 1 else os.path.join(REPO, "BENCH_DETAIL.json")
@@ -60,26 +82,7 @@ def main() -> None:
         "source_total_s": d.get("value"),
         "box_before": box,
         "bands": bands,
-        # VERDICT r12 #7: how to READ a band breach on the stream_*
-        # queries — against the structural micro-batch floor, not as an
-        # operator regression.
-        "notes": {
-            "streaming_floor": (
-                "stream_* queries carry a structural ~0.3 s/micro-batch "
-                "trigger floor from the local file-source replay harness "
-                "(listing + offset log + state-store commit per batch), "
-                "independent of the operators; at sf0.1 each stream query "
-                "is 2-3 batches, so ~0.6-0.9 s of any stream wall is "
-                "floor, not plan. A breach on a stream band therefore "
-                "needs the per-trigger medians from CAPACITY.md's "
-                "state-store grid before it reads as a regression: "
-                "in-memory store medians are 30-80 ms/trigger at bench "
-                "scale (RocksDB at worst 1.85x on delete-heavy watermark "
-                "dedup, parity elsewhere; state MB identical) — a real "
-                "operator regression shows up THERE, a floor artifact "
-                "shows up only in wall seconds."
-            ),
-        },
+        "notes": BAND_NOTES,
     }
     # Band-source compute yardstick (r12): bench.py records its
     # pure-compute calibration in box.calibration_s; carrying it here
@@ -97,6 +100,7 @@ def main() -> None:
     path = os.path.join(REPO, "BENCH_BANDS.json")
     with open(path, "w") as fh:
         json.dump(out, fh, indent=1)
+        fh.write("\n")
     print(f"wrote {path} ({len(bands)} bands)")
 
 

@@ -5,10 +5,17 @@ sf0.01 and report failures. Exit 0 iff all green.
 
 Every FAIL line is re-printed in the final summary (VERDICT r03 #3:
 a one-off failure once scrolled out of a captured tail and the flake's
-name was lost — the summary must be self-contained evidence)."""
+name was lost — the summary must be self-contained evidence).
+
+Usage: python scripts/oracle_sweep.py [SF_DIR] [--tag TAG]
+
+``--tag TAG`` sweeps only the queries registered with that tag (the
+``tags`` of their ``QuerySpec``), e.g. ``--tag streaming`` for the
+``stream_*`` queries."""
 
 from __future__ import annotations
 
+import argparse
 import sys
 import time
 
@@ -20,9 +27,17 @@ from hpat_jl_spark.testing import check_query
 
 
 def main() -> int:
+    p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    p.add_argument("--tag", help="sweep only queries registered with TAG")
+    args, sys.argv[1:] = p.parse_known_args()  # leaves the SF_DIR positional
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    spark = get_spark(app_name="oracle-sweep")
     qs = registry.queries()
+    if args.tag:
+        qs = {n: f for n, f in qs.items() if args.tag in registry.REGISTRY[n].tags}
+        if not qs:
+            print(f"no registered query has tag {args.tag!r}", file=sys.stderr)
+            return 2
+    spark = get_spark(app_name="oracle-sweep")
     oracles = registry.oracle_sql()
     failures: list[str] = []
     for name in qs:

@@ -89,10 +89,11 @@ def profile(spark, name: str, sf_dir: str) -> None:
         task_ms += st.get("executorRunTime", 0)
         print(f"{sid:>6} {st['numTasks']:>6} {st.get('executorRunTime', 0):>8}"
               f" {st['status']:>9}  {st['name'].splitlines()[0][:60]}")
+    from hpat_jl_spark.session import local_cpus
+
+    cpus = local_cpus()
     print(f"sum executorRunTime: {task_ms/1000:.3f}s "
-          f"(÷{os.environ.get('SPARK_GRAFT_CPUS', '32')} threads ≈ "
-          f"{task_ms/1000/int(os.environ.get('SPARK_GRAFT_CPUS', '32')):.3f}s "
-          f"ideal-parallel)")
+          f"(÷{cpus} threads ≈ {task_ms/1000/cpus:.3f}s ideal-parallel)")
 
 
 def main() -> None:

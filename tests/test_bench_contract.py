@@ -122,6 +122,30 @@ def test_band_calibration_reads_committed_file():
     assert cal is not None and 0.5 < cal < 60.0
 
 
+def test_band_notes_match_generator():
+    """The committed BENCH_BANDS.json notes are the generator's ASCII
+    constant byte for byte, and the file ends with one newline, so a
+    regeneration leaves no spurious diff in either."""
+    import importlib.util
+    import json
+    import os
+
+    root = os.path.dirname(os.path.abspath(bench.__file__))
+    spec = importlib.util.spec_from_file_location(
+        "make_bench_bands", os.path.join(root, "scripts", "make_bench_bands.py")
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    assert all(v.isascii() for v in mod.BAND_NOTES.values())
+    with open(os.path.join(root, "BENCH_BANDS.json"), "rb") as fh:
+        raw = fh.read()
+    assert raw.endswith(b"}\n") and not raw.endswith(b"\n\n")
+    assert json.loads(raw)["notes"] == mod.BAND_NOTES
+    # byte-level: the notes block serializes exactly as json.dump writes it
+    block = json.dumps({"notes": mod.BAND_NOTES}, indent=1)[2:-2]
+    assert block.encode() in raw
+
+
 def test_band_check_zero_duck_timing_is_not_a_missing_twin():
     """ADVICE r08: a twin that rounds to 0.0s RAN — it just cannot
     anchor a ratio. It must fall back to sec_hi, not emit the spurious

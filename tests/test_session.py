@@ -7,11 +7,16 @@ splits only yield rows where a row group starts).
 
 from __future__ import annotations
 
+import os
+
 import pyarrow.parquet as pq
 import pytest
 
+from hpat_jl_spark import session
 from hpat_jl_spark.session import (
     _parse_jvm_bytes,
+    driver_memory,
+    local_cpus,
     scan_split_count,
     starved_scan_pin_width,
 )
@@ -25,6 +30,38 @@ def test_parse_jvm_bytes():
     assert _parse_jvm_bytes("512") == 512
     assert _parse_jvm_bytes(42) == 42
     assert _parse_jvm_bytes("2k") == 2048
+
+
+def test_defaults_follow_the_box_when_env_unset(monkeypatch, tmp_path):
+    """Without SPARK_GRAFT_CPUS / SPARK_GRAFT_DRIVER_MEM the session is
+    sized from the machine: the CPUs this process may use, and half the
+    RAM capped at 8g and floored at 1g."""
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    cpus = len(os.sched_getaffinity(0))
+    assert local_cpus() == cpus
+    # the per-core cap binds: 1 MB of input at one partition per byte
+    (tmp_path / "t.parquet").write_bytes(bytes(1 << 20))
+    assert session.sized_shuffle_partitions(
+        str(tmp_path), target_bytes=1, floor=0
+    ) == 4 * cpus
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    assert driver_memory() == f"{max(1024, min(8192, ram_mb // 2))}m"
+    for pages, want in ((1 << 18, "1024m"), (1 << 19, "1024m"),
+                        (3 << 19, "3072m"), (1 << 23, "8192m")):
+        # 4 KiB pages: 1 GiB, 2 GiB, 6 GiB and 32 GiB of RAM
+        monkeypatch.setattr(
+            session.os, "sysconf",
+            lambda name, pages=pages: 4096 if name == "SC_PAGE_SIZE" else pages,
+        )
+        assert driver_memory() == want, pages
+
+
+def test_env_overrides_box_defaults(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "12g")
+    assert local_cpus() == 3
+    assert driver_memory() == "12g"
 
 
 @pytest.mark.parametrize("sf_dir", ["/root/testdata/sf0.001", "/root/testdata/sf0.1"])

@@ -8,9 +8,11 @@ with the batch lag-based plan on session count and totals).
 from __future__ import annotations
 
 import shutil
+import time
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQueryListener
 
 from hpat_jl_spark.streaming.sources import stream_events
 from hpat_jl_spark.streaming.windows import sessionize_stream, tumbling_counts
@@ -430,3 +432,79 @@ def test_dedup_within_watermark_doubled_source_matches_batch(spark, tmp_path):
     got = spark.table("dedup_wm_double").count()
     want = load_table(spark, "events", SF).select("event_id").distinct().count()
     assert got == want
+
+
+# ------------------------------------------- bounded-replay state width
+
+
+class _StateWidths(StreamingQueryListener):
+    """Records each query's first state operator's shuffle-partition
+    count, keyed by query name."""
+
+    def __init__(self):
+        self.widths: dict[str, int] = {}
+
+    def onQueryStarted(self, event):
+        pass
+
+    def onQueryProgress(self, event):
+        p = event.progress
+        if p.stateOperators:
+            self.widths[p.name] = p.stateOperators[0].numShufflePartitions
+
+    def onQueryIdle(self, event):
+        pass
+
+    def onQueryTerminated(self, event):
+        pass
+
+
+@pytest.mark.parametrize(
+    "query, prefix, width",
+    [
+        # one staged file with one row group: one scan split
+        ("stream_tumbling_counts", "stream_tumbling_", 1),
+        # the same file staged twice (copies=2): two scan splits
+        ("stream_dedup_events", "stream_dedup_", 2),
+    ],
+)
+def test_bounded_replay_state_width_follows_input_splits(
+    spark, query, prefix, width
+):
+    """A bounded replay's state store is as wide as its input's scan
+    splits, not the session's shuffle setting, and the session's
+    setting is left as it was."""
+    from hpat_jl_spark import registry
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    assert int(before) > width
+    listener = _StateWidths()
+    spark.streams.addListener(listener)
+    try:
+        registry.queries()[query](spark, SF)
+        deadline = time.monotonic() + 30
+        while not listener.widths and time.monotonic() < deadline:
+            time.sleep(0.1)  # listener events arrive asynchronously
+    finally:
+        spark.streams.removeListener(listener)
+    got = {n: w for n, w in listener.widths.items() if n.startswith(prefix)}
+    assert list(got.values()) == [width], listener.widths
+    assert spark.conf.get(key) == before
+
+
+def test_bounded_replay_restores_shuffle_conf_when_start_fails(spark, events_dir):
+    """Append mode on an aggregation without a watermark fails in
+    .start(); the narrowed shuffle setting must not outlive it."""
+    from pyspark.errors import AnalysisException
+
+    from hpat_jl_spark.plans.streaming import _run_to_memory
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    agg = stream_events(spark, events_dir).groupBy("event_type").count()
+    with pytest.raises(AnalysisException):
+        _run_to_memory(
+            agg, mode="append", prefix="no_watermark", source_dir=events_dir
+        )
+    assert spark.conf.get(key) == before
