@@ -16,39 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hpat_jl_spark.registry import register
-from hpat_jl_spark.tables import load_table
-
-
-def _doc_text_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The bare ``(doc_id, text)`` documents stream with the shared
-    CONDITIONAL split-starvation pin (r13; policy + measurements in
-    session.starved_scan_pin_width): hash-repartition by doc_id only
-    when the documents scan cannot feed at least a quarter of the
-    cores. On the single-row-group bench fixtures the scan reports 1
-    split and every core but one starves; on split-rich input (the
-    staged ×10/×100 tiers, any real lake layout) the exchange of raw
-    text costs more than it parallelizes and is skipped. The split
-    count comes from session.scan_split_count — file listing + footers,
-    not ``.rdd.getNumPartitions()`` (ADVICE r12: the .rdd call forces
-    physical planning at plan-construction time and would run jobs
-    during build if an exchange were ever composed upstream, breaking
-    the prepared-query zero-jobs bench contract)."""
-    from hpat_jl_spark.session import (
-        scan_split_count,
-        sized_shuffle_partitions,
-        starved_scan_pin_width,
-    )
-    from hpat_jl_spark.tables import table_path
-
-    docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
-    width = starved_scan_pin_width(
-        scan_split_count(spark, table_path(sf_dir, "documents")),
-        spark.sparkContext.defaultParallelism,
-        sized_shuffle_partitions(sf_dir),
-    )
-    if width is not None:
-        docs = docs.repartition(width, "doc_id")
-    return docs
+from hpat_jl_spark.tables import doc_text_stream, load_table
 
 
 def _word_grams(
@@ -133,7 +101,7 @@ def benchmark_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # costs more than it parallelizes (×10 tier interleaved min-of-3:
     # 3.02 s pinned vs 2.48 s unpinned) — see
     # session.starved_scan_pin_width.
-    docs = _doc_text_stream(spark, sf_dir)
+    docs = doc_text_stream(spark, sf_dir)
     # r13: per-doc dedup moved INSIDE the gram array (array_distinct —
     # exactly (doc_id, gram) distinct, zero shuffle; see _word_grams).
     grams = _word_grams(docs, 4, distinct_within_doc=True)
@@ -240,12 +208,12 @@ def heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     r13: the r6-era unconditional round-robin ``repartition(par)`` of
     the raw-text stream is now the shared CONDITIONAL pin
-    (_doc_text_stream / session.starved_scan_pin_width) — on split-rich
-    input the blanket exchange was pure tax (the duplicate_span_report
-    class, measured 2.27 vs 0.75 s at ×10), while the starved
-    single-split fixtures keep the fan-out; ×10 A/B for THIS query in
-    OPTIMIZATION_r13.md."""
-    docs = _doc_text_stream(spark, sf_dir)
+    (tables.doc_text_stream / session.starved_scan_pin_width) — on
+    split-rich input the blanket exchange was pure tax (the
+    duplicate_span_report class, measured 2.27 vs 0.75 s at ×10), while
+    the starved single-split fixtures keep the fan-out; ×10 A/B for THIS
+    query in OPTIMIZATION_r13.md."""
+    docs = doc_text_stream(spark, sf_dir)
     return (
         docs.select(F.explode(F.split(F.trim("text"), r"\s+")).alias("token"))
         .groupBy("token")
@@ -292,11 +260,11 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     — each keyed and linear; nothing quadratic, no Python.
 
     r13: unconditional round-robin pin → the shared conditional pin
-    (_doc_text_stream), same rationale as heavy_hitters above; the
+    (tables.doc_text_stream), same rationale as heavy_hitters above; the
     1-row n_docs aggregate reads the bare scan, not the pinned
     stream (no reason to hang a row-count off the exchange)."""
     docs = load_table(spark, "documents", sf_dir)
-    toks = _doc_text_stream(spark, sf_dir).select(
+    toks = doc_text_stream(spark, sf_dir).select(
         "doc_id", F.explode(F.split(F.trim("text"), r"\s+")).alias("term")
     )
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
@@ -366,14 +334,14 @@ def inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     the serialized posting string keeps the oracle hash exact.
 
     r13: unconditional round-robin pin → the shared conditional pin
-    (_doc_text_stream), same rationale as heavy_hitters above; and the
+    (tables.doc_text_stream), same rationale as heavy_hitters above; and the
     per-doc token dedup moved INSIDE the array (array_distinct == the
     old `.distinct()` over (doc_id, token), zero shuffle — the
     benchmark_decontaminate gram-dedup class; the groupBy(token)
     exchange downstream is the only remaining token-stream shuffle)."""
     docs = load_table(spark, "documents", sf_dir)
     n_docs = docs.agg(F.count(F.lit(1)).alias("n_docs"))
-    toks = _doc_text_stream(spark, sf_dir).select(
+    toks = doc_text_stream(spark, sf_dir).select(
         "doc_id",
         F.explode(F.array_distinct(F.split(F.trim("text"), r"\s+"))).alias("token"),
     )

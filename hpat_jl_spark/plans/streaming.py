@@ -71,7 +71,8 @@ def _stage_events_dir(sf_dir: str, copies: int = 1) -> str:
     DIRECTORY of part-files (real lake layout / the scaling probe's
     staged tables) — the file source lists files, not subdirectories,
     so directory sources are staged per part-file."""
-    key = (os.path.abspath(sf_dir), copies)
+    sf_dir = os.path.abspath(sf_dir)  # the links resolve from the temp dir
+    key = (sf_dir, copies)
     cached = _STAGED_DIRS.get(key)
     if cached and os.path.isdir(cached):
         return cached

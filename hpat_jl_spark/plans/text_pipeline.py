@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from hpat_jl_spark.functions import dedup as D
 from hpat_jl_spark.functions import text as X
 from hpat_jl_spark.registry import register
-from hpat_jl_spark.tables import load_table
+from hpat_jl_spark.tables import doc_text_stream, load_table
 
 _STOP_SQL = ", ".join(f"'{w}'" for w in X.STOPWORDS)
 
@@ -62,25 +62,14 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     subexpression elimination doesn't span the lambda functions).
 
     r13: the r6-era unconditional round-robin ``repartition(par)`` of
-    the raw-text stream is now the shared CONDITIONAL pin (same policy
-    as duplicate_span_report below). Interleaved min-of-3 measured
+    the raw-text stream is now the shared CONDITIONAL pin
+    (tables.doc_text_stream). Interleaved min-of-3 measured
     pinned vs unpinned at PARITY at both sf0.1 (0.218 vs 0.221 s) and
     the ×10 tier (0.439 vs 0.450 s) — the per-doc ratio math is light
     enough that the pin buys nothing locally, and at split-rich scale
     a blanket exchange of raw text is pure tax, so the conditional
     form is the only shape with no losing tier."""
-    from hpat_jl_spark.session import scan_split_count, sized_shuffle_partitions
-    from hpat_jl_spark.tables import table_path
-
-    docs = load_table(spark, "documents", sf_dir)
-    width = _starved_scan_pin_width(
-        scan_split_count(spark, table_path(sf_dir, "documents")),
-        spark.sparkContext.defaultParallelism,
-        sized_shuffle_partitions(sf_dir),
-    )
-    if width is not None:
-        docs = docs.repartition(width, "doc_id")
-    staged = docs.select(
+    staged = doc_text_stream(spark, sf_dir).select(
         "doc_id",
         "text",
         X.tokens("text").alias("__toks"),
@@ -667,11 +656,6 @@ HAVING count(DISTINCT doc_id) >= 2
 """
 
 
-# Shared policy for conditionally pinning a light-compute raw-text
-# stream — see session.starved_scan_pin_width for the measurements.
-from hpat_jl_spark.session import starved_scan_pin_width as _starved_scan_pin_width
-
-
 def _sig_fanout(spark: SparkSession, sf_dir: str) -> int:
     """Width for the minhash/simhash signature kernels' pinned
     exchange — the r9 byte-sized rule (CLAUDE.md): a pinned exchange
@@ -702,26 +686,10 @@ def duplicate_span_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partial-countDistinct ran in ONE task — 341 ms of the 0.72 s
     # in-jobs at sf0.1). Unlike benchmark_decontaminate/bpe_encode the
     # chunker's compute is too light to dwarf an exchange of raw text
-    # on a split-rich input — see _starved_scan_pin_width. r13: the
-    # split count now comes from session.scan_split_count (file
-    # listing + parquet footers, row-group-capped) instead of
-    # docs.rdd.getNumPartitions() — the .rdd call forced physical
-    # planning at plan-construction time (ADVICE r12), and the
-    # reported count OVERSTATES effective parallelism on large
-    # single-row-group files (r7 trap) exactly where the pin most
-    # needs to fire; the footer-based count is capped correctly there.
-    from hpat_jl_spark.session import scan_split_count, sized_shuffle_partitions
-    from hpat_jl_spark.tables import table_path
-
-    docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
-    width = _starved_scan_pin_width(
-        scan_split_count(spark, table_path(sf_dir, "documents")),
-        spark.sparkContext.defaultParallelism,
-        sized_shuffle_partitions(sf_dir),
+    # on a split-rich input — see session.starved_scan_pin_width.
+    chunks = X.chunk_documents(
+        doc_text_stream(spark, sf_dir), chunk_size=50, stride=25
     )
-    if width is not None:
-        docs = docs.repartition(width, "doc_id")
-    chunks = X.chunk_documents(docs, chunk_size=50, stride=25)
     return (
         chunks.filter(F.col("n_chunk_tokens") == 50)
         .groupBy("chunk_hash")

@@ -236,6 +236,14 @@ def starved_scan_pin_width(
     return max(default_parallelism, sized_parts)
 
 
+def codegen_compiles(spark: SparkSession) -> int:
+    """Classes Janino has compiled in this JVM so far (Spark's
+    ``CodegenMetrics``); the difference across a pass counts the
+    generated classes it missed in the codegen cache."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def _class_archive_key(spark_home: str) -> str:
     """Hash of the JVM the launcher runs (``java`` and ``libjvm.so``:
     path, size, mtime) and of ``$SPARK_HOME/jars`` (name, size, mtime),
@@ -419,6 +427,18 @@ def get_spark(
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", driver_memory())
+        # Room for every class the registry generates. Spark keeps the
+        # Janino-compiled classes in one JVM-wide LRU cache of 100
+        # entries by default, so a session that cycles over more than
+        # that compiles them again on every pass. Distinct classes in
+        # one session at sf0.01: all 187 queries ~2,110; bench.py's 42
+        # headline queries ~730; perfbench relational ~117 (66-89
+        # recompiled per warm pass at the default, 0.4-0.8 s of Janino
+        # time on a 4-core Xeon VM); llm_ingest 72-76. The full sweep
+        # keeps ~17 MB more metaspace and ~70 MB more live heap at this
+        # cap (CLAUDE.md, codegen-cache traps). A static SQL conf:
+        # cluster executors, which compile their own copies, get it too.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
     )
     conf = dict(extra_conf or {})
     conf_dir = None

@@ -23,7 +23,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from hpat_jl_spark.session import _SCAN_LISTING_CACHE
+from hpat_jl_spark.session import (
+    _SCAN_LISTING_CACHE,
+    scan_split_count,
+    sized_shuffle_partitions,
+    starved_scan_pin_width,
+)
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -241,6 +246,29 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
     # Cache only fully-validated loads (error paths above must re-check).
     _TABLE_CACHE[cache_key] = (spark, df)
     return df
+
+
+def doc_text_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The bare ``(doc_id, text)`` documents stream, hash-repartitioned
+    by doc_id only when the documents scan cannot feed a quarter of the
+    cores (``session.starved_scan_pin_width`` has the policy and its
+    measurements). The single-row-group fixtures report one split and
+    starve every core but one; on split-rich input the exchange of raw
+    text costs more than it parallelizes and is skipped. The split count
+    comes from ``session.scan_split_count`` (file listing and footers),
+    not ``.rdd.getNumPartitions()``, which would plan the query and could
+    run jobs during the build. A small-fixture patch: every light-compute
+    raw-text consumer takes its stream from here, so it can go in one
+    place once inputs are split-rich."""
+    docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
+    width = starved_scan_pin_width(
+        scan_split_count(spark, table_path(sf_dir, "documents")),
+        spark.sparkContext.defaultParallelism,
+        sized_shuffle_partitions(sf_dir),
+    )
+    if width is not None:
+        docs = docs.repartition(width, "doc_id")
+    return docs
 
 
 def load_tables(

@@ -5,7 +5,10 @@ sf0.01 and report failures. Exit 0 iff all green.
 
 Every FAIL line is re-printed in the final summary (VERDICT r03 #3:
 a one-off failure once scrolled out of a captured tail and the flake's
-name was lost — the summary must be self-contained evidence).
+name was lost — the summary must be self-contained evidence). The
+summary also gives the sweep's wall time and how many generated classes
+the session compiled: a count well above the registry's ~2,100
+distinct classes means the codegen cache evicted and recompiled.
 
 Usage: python scripts/oracle_sweep.py [SF_DIR] [--tag TAG]
 
@@ -22,11 +25,12 @@ import time
 sys.path.insert(0, ".")  # run as scripts/oracle_sweep.py from the repo root
 
 from hpat_jl_spark import registry
-from hpat_jl_spark.session import get_spark
+from hpat_jl_spark.session import codegen_compiles, get_spark
 from hpat_jl_spark.testing import check_query
 
 
 def main() -> int:
+    t_start = time.perf_counter()
     p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     p.add_argument("--tag", help="sweep only queries registered with TAG")
     args, sys.argv[1:] = p.parse_known_args()  # leaves the SF_DIR positional
@@ -61,7 +65,11 @@ def main() -> int:
             print(line, flush=True)
         else:
             print(f"ok   {kind} {name} ({dt:.1f}s)", flush=True)
-    print(f"\n{len(qs) - len(failures)}/{len(qs)} green")
+    print(
+        f"\n{len(qs) - len(failures)}/{len(qs)} green in "
+        f"{time.perf_counter() - t_start:.0f}s; "
+        f"{codegen_compiles(spark)} generated classes compiled"
+    )
     for line in failures:
         print(f"  {line}")
     spark.stop()

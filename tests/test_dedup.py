@@ -262,7 +262,7 @@ def test_span_report_pin_is_conditional_on_scan_starvation(spark):
     an unconditional pin was a scale regression. Pure-logic table plus
     a plan assertion on the suite's 4-core session (1 scan split ⇒
     1*4 >= 4 ⇒ no pin)."""
-    from hpat_jl_spark.plans.text_pipeline import _starved_scan_pin_width
+    from hpat_jl_spark.session import starved_scan_pin_width as _starved_scan_pin_width
     from hpat_jl_spark.registry import REGISTRY, load_all_plans
 
     # ADVICE r12: benchmark_decontaminate registers from

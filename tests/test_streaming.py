@@ -508,3 +508,22 @@ def test_bounded_replay_restores_shuffle_conf_when_start_fails(spark, events_dir
             agg, mode="append", prefix="no_watermark", source_dir=events_dir
         )
     assert spark.conf.get(key) == before
+
+
+def test_stream_query_on_relative_sf_dir(spark, monkeypatch):
+    """A relative ``sf_dir`` stages links that still resolve from the
+    temp dir the stream watches (they used to dangle, and the broken
+    dir was memoized for later absolute-path calls too)."""
+    import os
+
+    from hpat_jl_spark.plans import streaming
+    from hpat_jl_spark.testing import check_query
+
+    staged: dict = {}
+    monkeypatch.setattr(streaming, "_STAGED_DIRS", staged)
+    monkeypatch.chdir(os.path.dirname(SF))
+    try:
+        assert check_query(spark, "stream_tumbling_counts", os.path.basename(SF)) == []
+    finally:
+        for d in staged.values():
+            shutil.rmtree(d, ignore_errors=True)
