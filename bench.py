@@ -30,6 +30,9 @@ import os
 import sys
 import time
 
+sys.path.append(os.path.join(os.path.dirname(os.path.abspath(__file__)), "scripts"))
+from probe import yardstick_s  # noqa: E402
+
 HEADLINE = [
     "q1_pricing_summary",
     "q3_shipping_priority",
@@ -229,30 +232,6 @@ def _box_conditions() -> dict:
 # degraded-hypervisor breach must never read as a plan regression, and
 # deliberately never as a green gate either.
 _CAL_DEGRADED_HI = 1.25
-
-
-def _measure_calibration(spark, fold: int = 10_000_000) -> float:
-    """The strong-scaling probe's pure-compute yardstick (128 identical
-    CPU-only tasks, no IO/shuffle payload — scripts/strong_scaling.py
-    _calibration_fn), best-of-3 after a codegen warm run. Same fold as
-    the CORES ×100 calibration so the committed reference is directly
-    comparable."""
-
-    def cal(f):
-        return spark.range(0, 128, 1, 128).selectExpr(
-            "id",
-            f"aggregate(sequence(1, {f}), 0L,"
-            " (a, x) -> a + (x * 37) % 1000003) v",
-        ).agg({"v": "sum"})
-
-    cal(300_000).collect()
-    best = None
-    for _ in range(3):
-        t0 = time.perf_counter()
-        cal(fold).collect()
-        dt = time.perf_counter() - t0
-        best = dt if best is None else min(best, dt)
-    return round(best, 2)
 
 
 def _band_calibration() -> float | None:
@@ -667,7 +646,9 @@ def main() -> None:
 
     # Box-day compute yardstick (r12, see _CAL_DEGRADED_HI): measured
     # only where bands apply (sf0.1) — it costs ~15 s of pure compute.
-    cal_now = _measure_calibration(spark) if str(sf_val) == "0.1" else None
+    # Same fold as the CORES ×100 calibration, so the committed
+    # reference is directly comparable.
+    cal_now = yardstick_s(spark, 10_000_000, 3) if str(sf_val) == "0.1" else None
     if cal_now is not None:
         print(f"# pure-compute calibration: {cal_now}s "
               f"(band source: {_band_calibration()})", file=sys.stderr)

@@ -104,11 +104,11 @@ def sized_shuffle_partitions(
     return max(floor, min(total // target_bytes, per_core_cap * local_cpus()))
 
 
-# Per-path (files, sizes, total_row_groups) listing memo. Fixtures are
+# Per-path listing memo, (size, row groups) per parquet file. Fixtures are
 # immutable per directory (the load_table cache's assumption); conf-
 # dependent packing is recomputed per call so a probe that re-tunes
 # maxPartitionBytes (scaling_probe stages do) still gets fresh counts.
-_SCAN_LISTING_CACHE: dict[str, tuple[list[int], int]] = {}
+_SCAN_LISTING_CACHE: dict[str, list[tuple[int, int]]] = {}
 
 
 def _parse_jvm_bytes(v: str | int) -> int:
@@ -146,15 +146,19 @@ def scan_split_count(spark: SparkSession, path: str) -> int:
       ``getFilePartitions`` — the count ``.rdd.getNumPartitions()``
       reports on a bare scan (validated against it in
       tests/test_session.py across the fixtures and conf settings);
-    - the total parquet ROW-GROUP count (ADVICE r12 / the r7 trap:
-      byte-range splits only yield rows where a row group STARTS, so a
-      large single-row-group file reports many partitions while only
-      one task ever yields rows — the reported count OVERSTATES
+    - the row-producing splits, counted PER FILE (ADVICE r12 / the r7
+      trap: byte-range splits only yield rows where a row group STARTS,
+      so a large single-row-group file reports many partitions while
+      only one task ever yields rows — the reported count OVERSTATES
       effective parallelism exactly where the starved-scan pin most
-      needs to fire).
+      needs to fire). A file yields rows from at most
+      ``min(its splits, its row groups)`` splits; a total row-group cap
+      would let one file's spare row groups stand in for another
+      file's empty splits (ADVICE r13 #3: one big single-group file in
+      3 splits plus a small 8-group file counted 4, not 2).
 
-    ``min(packed, row_groups)`` is the number of scan tasks that can
-    actually produce rows."""
+    ``min(packed, sum(min(splits, row_groups) per file))`` is the number
+    of scan tasks that can actually produce rows."""
     real = os.path.realpath(path)
     cached = _SCAN_LISTING_CACHE.get(real)
     if cached is None:
@@ -166,15 +170,16 @@ def scan_split_count(spark: SparkSession, path: str) -> int:
                 )
         else:
             files = [real]
-        sizes = [os.path.getsize(f) for f in files]
         import pyarrow.parquet as pq
 
-        row_groups = sum(pq.ParquetFile(f).metadata.num_row_groups for f in files)
-        cached = (sizes, row_groups)
+        cached = [
+            (os.path.getsize(f), pq.ParquetFile(f).metadata.num_row_groups)
+            for f in files
+        ]
         _SCAN_LISTING_CACHE[real] = cached
-    sizes, row_groups = cached
-    if not sizes:
+    if not cached:
         return 1
+    sizes = [size for size, _groups in cached]
     max_part = _parse_jvm_bytes(
         spark.conf.get("spark.sql.files.maxPartitionBytes", "128MB")
     )
@@ -195,11 +200,11 @@ def scan_split_count(spark: SparkSession, path: str) -> int:
     max_split = min(max_part, max(open_cost, total // max(min_parts, 1)))
     # byte-range splits of each file, then greedy size-desc bin-pack
     splits: list[int] = []
-    for s in sizes:
-        off = 0
-        while off < s:
-            splits.append(min(max_split, s - off))
-            off += max_split
+    row_splits = 0
+    for s, groups in cached:
+        n = -(-s // max_split)
+        splits += [min(max_split, s - k * max_split) for k in range(n)]
+        row_splits += min(n, groups)
     splits.sort(reverse=True)
     n_partitions, current = 0, 0
     for s in splits:
@@ -209,7 +214,7 @@ def scan_split_count(spark: SparkSession, path: str) -> int:
         current += s + open_cost
     if current > 0:
         n_partitions += 1
-    return max(1, min(n_partitions, row_groups))
+    return max(1, min(n_partitions, row_splits))
 
 
 def starved_scan_pin_width(

@@ -19,28 +19,24 @@ above that indicates a real defect (a shuffle or driver loop that is
 superlinear in edge count), which is exactly what the main tiers could
 never distinguish from densification.
 
-Same discipline as scripts/scaling_probe.py: per-query fresh JVM
-(shared-session JVM pollution measured 31.9s vs 6.8s on
-triangle_count@sf0.01 in r6), sf0.01 warmup for codegen/JIT,
-clearCache between tiers, 128-partition shuffle ceiling, and the probe
-MUST own the box. Writes GRAPH_SCALING.json (consumed by
-scripts/make_capacity.py for graph CAPACITY rows) and splices a marked
-section into SCALING.md.
+Same cells as scripts/scaling_probe.py (probe.run_child + probe.time_cell),
+and the probe MUST own the box. Writes GRAPH_SCALING.json (consumed by
+scripts/make_capacity.py for graph CAPACITY rows) and its table into
+SCALING.md's graph appendix (the GRAPH_TABLE fence).
 
-    python scripts/graph_scaling.py [--restage]
+    python scripts/graph_scaling.py [--restage] [--rerun]
+    python scripts/graph_scaling.py --one NAME   # child: one query's tiers
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
-import subprocess
+import statistics
 import sys
-import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+import probe
+from probe import REPO, SF01
 
 GRAPH_QUERIES = [
     "triangle_count",
@@ -50,12 +46,9 @@ GRAPH_QUERIES = [
     "pagerank_trade_graph",
 ]
 
-BASE = "/root/testdata/sf0.1"
-STAGE = {
-    "gx10": ("/tmp/spark_graft_tier_gx10", 10),
-    "gx100": ("/tmp/spark_graft_tier_gx100", 100),
-}
-_KEY_SHIFT = 10_000_000
+GX10_DIR = "/tmp/spark_graft_tier_gx10"
+GX100_DIR = "/tmp/spark_graft_tier_gx100"
+STAGE = {"gx10": (GX10_DIR, 10), "gx100": (GX100_DIR, 100)}
 # Only the tables the graph family loads; EVERY vertex-forming key is
 # shifted so replicas form disjoint subgraphs (edges replicate, the
 # catalog does not densify).
@@ -63,49 +56,6 @@ _GRAPH_SHIFTS = {
     "lineitem": ["l_orderkey", "l_partkey", "l_suppkey"],
     "orders": ["o_orderkey", "o_custkey"],
 }
-
-
-def _stage(restage: bool = False) -> None:
-    from pyspark.sql import functions as F
-
-    from hpat_jl_spark.session import get_spark
-    from hpat_jl_spark.tables import load_table
-
-    todo = []
-    for d, n in STAGE.values():
-        if restage:
-            shutil.rmtree(d, ignore_errors=True)
-        if not os.path.isfile(os.path.join(d, ".staged")):
-            shutil.rmtree(d, ignore_errors=True)
-            todo.append((d, n))
-    if not todo:
-        return
-    spark = get_spark(app_name="graph-scaling-stage", shuffle_partitions=128)
-    for d, n in todo:
-        print(f"# staging {n}x disjoint graph tier at {d}", file=sys.stderr)
-        for name, keys in _GRAPH_SHIFTS.items():
-            parts = []
-            for i in range(n):
-                df = load_table(spark, name, BASE)
-                for c in keys:
-                    df = df.withColumn(c, F.col(c) + i * _KEY_SHIFT)
-                parts.append(df)
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
-            out.write.mode("overwrite").parquet(f"{d}/{name}.parquet")
-        with open(os.path.join(d, ".staged"), "w") as fh:
-            fh.write("ok\n")
-    spark.stop()
-
-
-def _dir_bytes(d: str) -> int:
-    total = 0
-    for root, _dirs, files in os.walk(d):
-        for f in files:
-            total += os.path.getsize(os.path.join(root, f))
-    return total
-
 
 # g×100 is measured 3× (VERDICT r11 #3): the r11 single-run growths
 # (triangle 11.8×, clustering 13.1×/decade) breached the 10× disjoint-
@@ -117,38 +67,20 @@ def _dir_bytes(d: str) -> int:
 GX100_REPS = 3
 
 
-def _run_one(name: str) -> None:
-    import statistics
-
-    from hpat_jl_spark import registry
-    from hpat_jl_spark.session import get_spark
-
-    spark = get_spark(app_name=f"graph-scaling-{name}", shuffle_partitions=128)
-    registry.load_all_plans()
-    fn = registry.REGISTRY[name].fn
-    fn(spark, "/root/testdata/sf0.01").write.format("noop").mode("overwrite").save()
-    spark.catalog.clearCache()
+def _child(name: str) -> dict:
+    tiers = [("sf0.1", SF01)] + [(label, d) for label, (d, _n) in STAGE.items()]
+    cell = probe.time_cell(name, tiers, reps={"gx100": GX100_REPS})
     out: dict[str, object] = {}
-    tiers = [("sf0.1", BASE)] + [(label, d) for label, (d, _n) in STAGE.items()]
-    for tier, d in tiers:
-        reps = GX100_REPS if tier == "gx100" else 1
-        runs: list[float] = []
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            fn(spark, d).write.format("noop").mode("overwrite").save()
-            runs.append(round(time.perf_counter() - t0, 2))
-            print(f"# {name} @ {tier}: {runs[-1]}s", file=sys.stderr)
-            spark.catalog.clearCache()
-        out[tier] = round(statistics.median(runs), 2)
-        if reps > 1:
-            out[f"{tier}_runs"] = sorted(runs)
+    for tier, runs in cell.items():
+        walls = [r["wall_s"] for r in runs]
+        out[tier] = round(statistics.median(walls), 2)
+        if len(walls) > 1:
+            out[f"{tier}_runs"] = sorted(walls)
     # Record the heap the cells ran under (r12: pagerank's g×100 cell
     # needs SPARK_GRAFT_DRIVER_MEM=12g — 8g OOMs reproducibly since the
     # restage — so cells are no longer all at one implicit budget).
     out["driver_mem"] = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
-    spark.sparkContext.setLogLevel("OFF")
-    spark.stop()
-    print(json.dumps({"name": name, "timings": out}), flush=True)
+    return {"name": name, "timings": out}
 
 
 def _plans_hash() -> str:
@@ -166,73 +98,8 @@ def _plans_hash() -> str:
     return h.hexdigest()
 
 
-def _child_json(args: list[str]) -> dict:
-    proc = subprocess.run(
-        [sys.executable, os.path.abspath(__file__), *args],
-        capture_output=True,
-        text=True,
-        cwd=REPO,
-    )
-    sys.stderr.write(proc.stderr[-4000:])
-    for ln in reversed(proc.stdout.strip().splitlines()):
-        ln = ln.strip()
-        if ln.startswith("{"):
-            return json.loads(ln)
-    raise RuntimeError(
-        f"child {args} produced no JSON (rc={proc.returncode}): "
-        f"{proc.stdout[-500:]}"
-    )
-
-
-_BEGIN = "<!-- GRAPH:BEGIN (scripts/graph_scaling.py) -->"
-_END = "<!-- GRAPH:END -->"
-
-
-def _splice_scaling_md(results: dict[str, dict[str, float]]) -> None:
+def render(results: dict[str, dict[str, float]]) -> list[str]:
     lines = [
-        _BEGIN,
-        "",
-        "## Graph appendix (disjoint-copy tiers)",
-        "",
-        "Generated by `scripts/graph_scaling.py`. The main tiers exclude",
-        "the graph family because fact replication over an unchanged part",
-        "catalog DENSIFIES the graph (superlinear triangle work by problem",
-        "definition). These tiers shift every vertex-forming key per",
-        "replica, so ×N is N disjoint copies of the base graph and the",
-        "output bound is exactly LINEAR (×10/decade) for every query —",
-        "growth above that would be a real plan defect. Fresh JVM per",
-        "query, 128-partition ceiling, sf0.01 warmup; growth ratios are",
-        "the signal, not absolute times. g×100 is the MEDIAN of 3",
-        "same-JVM runs (r12: single-run cells had breached the bound by",
-        "less than this VM's ±50% same-plan noise; the min–max column is",
-        "the spread a future breach must be read against).",
-        "",
-        "First real catch (r10): clustering_coefficient's per-corner",
-        "attribution was a unionAll of three projections of the closed-",
-        "triangle stream — each branch re-ran the array-payload join",
-        "(oriented ⋈ adjacency ×2), and the three concurrent array-heavy",
-        "shuffle re-reads exhausted the box's disk at g×100. Rewritten as",
-        "ONE pass (explode the 3-corner array): g×100 completes, and the",
-        "sf0.1 wall halved (27.9 → 14.4 s).",
-        "",
-        "Bound-breach verdict (VERDICT r11 #3, resolved r12): the r11",
-        "SINGLE-run cells recorded triangle 11.8× and clustering 13.1×",
-        "per decade — above the 10× disjoint-copy output bound. The",
-        "median-of-3 re-measure puts every growth/decade at or below the",
-        "bound (table below), and the recorded g×100 min–max spreads",
-        "(up to ~±35% of the median on this shared VM, same plan, same",
-        "JVM, back-to-back) fully absorb the r11 excess: the breach was",
-        "scheduler/box noise, not a superlinear stage. Any future breach",
-        "must be read against this spread column before being treated",
-        "as a plan defect.",
-        "",
-        "`heap` is the per-cell spark.driver.memory: every query runs at",
-        "the 8g default except pagerank_trade_graph, whose g×100 cell",
-        "needs 12g since the r12 restage — its r10 8g pass was borderline",
-        "(26 GiB mem-spill) and two 8g re-runs now die in the documented",
-        "GCLocker/humongous-allocation storm (MEMORY_PROBE.json carries",
-        "the measured 8g-OOM/12g-ok cells; the fixpoint's floor is 12g).",
-        "",
         "| query | sf0.1 (s) | g×10 (s) | growth | g×100 median (s) | g×100 min–max | growth/decade | heap |",
         "|---|---|---|---|---|---|---|---|",
     ]
@@ -246,31 +113,14 @@ def _splice_scaling_md(results: dict[str, dict[str, float]]) -> None:
             f"| {r['gx100']} | {spread} | {g100}× "
             f"| {r.get('driver_mem', '8g')} |"
         )
-    lines += ["", _END]
-    block = "\n".join(lines)
-    path = os.path.join(REPO, "SCALING.md")
-    with open(path) as fh:
-        text = fh.read()
-    if _BEGIN in text and _END in text:
-        # Replace BEGIN..the END that FOLLOWS it (not the first END in
-        # the file): an orphaned earlier block with a stray END — the
-        # r12 memory_probe marker-eating bug — would otherwise make
-        # this splice scramble the file instead of replacing one block.
-        s = text.index(_BEGIN)
-        e = text.index(_END, s) + len(_END)
-        text = text[:s] + block + text[e:]
-    else:
-        text = text.rstrip("\n") + "\n\n" + block + "\n"
-    with open(path, "w") as fh:
-        fh.write(text)
-    print("# spliced graph section into SCALING.md", file=sys.stderr)
+    return lines
 
 
 def main() -> int:
-    if "--one" in sys.argv:
-        _run_one(sys.argv[sys.argv.index("--one") + 1])
-        return 0
-    _stage(restage="--restage" in sys.argv)
+    probe.stage_once({
+        d: lambda spark, d, n=n: probe.stage_amplified(spark, d, n, _GRAPH_SHIFTS)
+        for d, n in STAGE.values()
+    }, restage="--restage" in sys.argv)
     out_path = os.path.join(REPO, "GRAPH_SCALING.json")
     # Resume committed cells (the memory_probe discipline, ADVICE r09):
     # a killed/timed-out run must not lose every measured query. Pass
@@ -303,10 +153,13 @@ def main() -> int:
                   "(same-plan cells — pass --rerun to remeasure)",
                   file=sys.stderr)
             continue
-        results[name] = _child_json(["--one", name])["timings"]
+        rec = probe.run_child([os.path.abspath(__file__), "--one", name])
+        if not rec.get("ok", True):
+            raise RuntimeError(f"cell {name} failed: {rec['err']}")
+        results[name] = rec["timings"]
         payload = {
             "queries": results,
-            "tier_bytes": {label: _dir_bytes(d)
+            "tier_bytes": {label: probe.dir_bytes(d)
                            for label, (d, _n) in STAGE.items()},
             "threads": 32,
             "plans_hash": _plans_hash(),
@@ -314,11 +167,14 @@ def main() -> int:
         }
         with open(out_path, "w") as fh:
             json.dump(payload, fh, indent=1)
-    _splice_scaling_md(results)
+    probe.splice_block(os.path.join(REPO, "SCALING.md"), "GRAPH_TABLE", render(results))
     print("# wrote GRAPH_SCALING.json + SCALING.md graph appendix",
           file=sys.stderr)
     return 0
 
 
 if __name__ == "__main__":
-    raise SystemExit(main())
+    args = probe.child_args()
+    if args is None:
+        raise SystemExit(main())
+    probe.emit(_child(args[0]))

@@ -28,13 +28,10 @@ from __future__ import annotations
 import json
 import os
 import re
-import sys
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+from probe import REPO, STAGE_X100, dir_bytes, fmt_bytes
 
 THREADS = 32
-X100_DIR = "/tmp/spark_graft_tier_x100"
 # Measured once from the staged tier (du -sb); recorded here so the
 # projection regenerates without the staging present. Refreshed
 # automatically when the staged dir exists at generation time.
@@ -42,14 +39,10 @@ X100_BYTES_DEFAULT = 1_561_000_000  # ~1.45 GiB parquet
 
 
 def _x100_bytes() -> int:
-    total = 0
     try:
-        for root, _dirs, files in os.walk(X100_DIR):
-            for f in files:
-                total += os.path.getsize(os.path.join(root, f))
+        return dir_bytes(STAGE_X100) or X100_BYTES_DEFAULT
     except OSError:
-        total = 0
-    return total or X100_BYTES_DEFAULT
+        return X100_BYTES_DEFAULT
 
 
 def parse_scaling() -> dict[str, dict]:
@@ -290,7 +283,7 @@ def build() -> str:
             f"| {f'{r_prov:.2f}' if (r_prov := r['prov_h_tb']) else '—'} "
             f"| {r['sh_scan'] if r['sh_scan'] is not None else '—'} "
             f"| {r['mem_floor'] or '—'} "
-            f"| {_fmt_bytes(r['spill']) if r['spill'] is not None else '—'} |"
+            f"| {fmt_bytes(r['spill']) if r['spill'] is not None else '—'} |"
         )
     noted = [r["name"] for r in rows if r["name"] in _OC_NOTES]
     if noted:
@@ -563,14 +556,6 @@ def _backend_comparison(results: dict, order: list[str]) -> list[str]:
         "(constant state) can keep the in-memory store.",
     ]
     return lines
-
-
-def _fmt_bytes(n: int) -> str:
-    if n >= 1 << 30:
-        return f"{n / (1 << 30):.1f} GiB"
-    if n >= 1 << 20:
-        return f"{n / (1 << 20):.1f} MiB"
-    return "0" if not n else f"{n / 1024:.0f} KiB"
 
 
 def main() -> int:

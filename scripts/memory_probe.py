@@ -13,33 +13,32 @@ of executor memory on a real cluster (32 task threads sharing it ≈ a
 For each (query, budget) pair a FRESH subprocess (JVM heap size is
 fixed at launch; and probe isolation — CLAUDE.md r6) runs the query at
 the staged ×100 tier (~60M lineitem rows / ~3 GB parquet; stage with
-`python scripts/scaling_probe.py` first) and records from the status
-API: wall seconds, memoryBytesSpilled / diskBytesSpilled and peak
-execution memory summed over completed stages. The probe walks budgets
+`python scripts/scaling_probe.py` first) and records from Spark's
+in-process status store: wall seconds, memoryBytesSpilled / diskBytesSpilled and peak
+execution memory over completed stages. The probe walks budgets
 DOWNWARD (32g reference → 16g → 12g → 8g → 6g) and records the
 smallest budget at which the query still completes ("floor"); an OOM
 or JVM death marks the budget as failed and the walk continues (the
 floor is the smallest SUCCEEDING budget, the verdict's contract).
 
-Output: the `## Memory appendix` section of SCALING.md (replaced
-in-place) + MEMORY_PROBE.json with the raw grid.
+Output: MEMORY_PROBE.json with the raw grid, and its table in
+SCALING.md's memory appendix (the MEMORY fence).
 
 MUST own the box (CLAUDE.md: concurrent Spark work garbles timings).
 
     python scripts/memory_probe.py            # full grid
-    python scripts/memory_probe.py --one dedup_simhash 8g  # child mode
+    python scripts/memory_probe.py --one dedup_simhash 8g [TIER_DIR]  # child
 """
 
 from __future__ import annotations
 
 import json
 import os
-import subprocess
 import sys
-import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+import probe
+from graph_scaling import GX100_DIR
+from probe import REPO, STAGE_X100, fmt_bytes
 
 # The verdict's heavy set: the two sig-banded near-dup self-joins (the
 # widest shuffles in the repo), the broadcast cross-join decontaminator,
@@ -68,8 +67,6 @@ QUERIES = [
 # of JVM/broadcast overhead).
 BUDGETS = ["32g", "16g", "12g", "8g", "6g", "4g", "3g"]
 
-X100_DIR = "/tmp/spark_graft_tier_x100"
-
 # r10: graph-family rows (VERDICT r09 #4 closed the wall-clock axis;
 # this closes the memory one). These run at the GRAPH probe's
 # disjoint-copy g×100 tier (scripts/graph_scaling.py), not the main
@@ -95,145 +92,29 @@ GRAPH_QUERIES = [
 # their 8g floors (re-confirmed by this round's graph_scaling runs
 # at the 8g default).
 GRAPH_BUDGETS = ["32g", "12g", "8g", "4g"]
-GX100_DIR = "/tmp/spark_graft_tier_gx100"
 
 
-def _run_child(name: str, budget: str, tier_dir: str = X100_DIR) -> dict:
-    env = dict(os.environ)
-    env["SPARK_GRAFT_DRIVER_MEM"] = budget
-    try:
-        proc = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--one", name, budget,
-             tier_dir],
-            capture_output=True,
-            text=True,
-            cwd=REPO,
-            env=env,
-            timeout=1800,
-        )
-    except subprocess.TimeoutExpired:
-        # ADVICE r09: an uncaught TimeoutExpired aborted the whole grid
-        # and lost every newly measured cell. A hung cell is a failure
-        # of THAT cell, recorded and walked past.
-        return {
-            "name": name,
-            "budget": budget,
-            "ok": False,
-            "oom": False,
-            "err": "timeout (1800s)",
-        }
-    tail = proc.stderr[-2000:]
-    for ln in reversed(proc.stdout.strip().splitlines()):
-        ln = ln.strip()
-        if ln.startswith("{"):
-            return json.loads(ln)
-    # No JSON line → the child died before printing a result. Classify
-    # heap death vs other failure from the EVIDENCE, not the exit code
-    # (ADVICE r09: a missing staged dir / import error / segfault is
-    # NOT a deployment memory constraint): OOM means the JVM reported
-    # OutOfMemoryError / heap space, or the kernel OOM-killed the
-    # process (negative returncode = died by signal, SIGKILL=-9).
-    blob = proc.stderr + proc.stdout
-    oom = (
-        "OutOfMemoryError" in blob
-        or "Java heap space" in blob
-        or proc.returncode in (-9, 137)
+def _run(name: str, budget: str, tier_dir: str = STAGE_X100) -> dict:
+    rec = probe.run_child(
+        [os.path.abspath(__file__), "--one", name, budget, tier_dir],
+        {"SPARK_GRAFT_DRIVER_MEM": budget},
+        timeout=1800,  # a hung cell is a failed cell, not a lost grid
     )
-    return {
-        "name": name,
-        "budget": budget,
-        "ok": False,
-        "oom": oom,
-        "err": tail.strip().splitlines()[-1] if tail.strip() else f"rc={proc.returncode}",
-    }
+    return rec if rec.get("ok") else {"name": name, "budget": budget, **rec}
 
 
-def _child(name: str, budget: str, tier_dir: str = X100_DIR) -> None:
+def _child(name: str, budget: str, tier_dir: str = STAGE_X100) -> dict:
     """Child mode: run ONE query at the given tier (default ×100; graph
-    queries pass the disjoint-copy g×100 dir) in this process's
-    fresh JVM, print one JSON line. Spill metrics come from the status
-    API (stage-level memoryBytesSpilled/diskBytesSpilled are exact;
-    peakExecutionMemory is the max over stages of the stage's summed
-    task peaks — an upper-bound shape signal, not an exact heap gauge).
-    """
-    import urllib.request
-
-    from hpat_jl_spark import registry
-    from hpat_jl_spark.session import get_spark
-
-    spark = get_spark(
-        app_name=f"memory-probe-{name}-{budget}",
-        shuffle_partitions=128,  # the probes' pinned fan-out
-        extra_conf={"spark.ui.enabled": "true"},
-    )
-    sc = spark.sparkContext
-    base, app = sc.uiWebUrl, sc.applicationId
-    registry.load_all_plans()
-    fn = registry.REGISTRY[name].fn
-    # warmup at sf0.01 absorbs codegen/JIT (same as scaling_probe)
-    fn(spark, "/root/testdata/sf0.01").write.format("noop").mode("overwrite").save()
-    spark.catalog.clearCache()
-
-    def _api(path: str):
-        with urllib.request.urlopen(
-            f"{base}/api/v1/applications/{app}/{path}"
-        ) as r:
-            return json.load(r)
-
-    before = {j["jobId"] for j in _api("jobs")}
-    t0 = time.perf_counter()
-    fn(spark, tier_dir).write.format("noop").mode("overwrite").save()
-    wall = round(time.perf_counter() - t0, 2)
-    jobs = [j for j in _api("jobs") if j["jobId"] not in before]
-    stage_ids = {s for j in jobs for s in j["stageIds"]}
-    stages = [
-        s for s in _api("stages")
-        if s["stageId"] in stage_ids and s["status"] == "COMPLETE"
-    ]
-    out = {
-        "name": name,
-        "budget": budget,
-        "ok": True,
-        "wall_s": wall,
-        "mem_spill_bytes": sum(s.get("memoryBytesSpilled", 0) for s in stages),
-        "disk_spill_bytes": sum(s.get("diskBytesSpilled", 0) for s in stages),
-        "peak_exec_mem_bytes": max(
-            (s.get("peakExecutionMemory", 0) for s in stages), default=0
-        ),
-        "tasks": sum(s["numTasks"] for s in stages),
-    }
-    spark.sparkContext.setLogLevel("OFF")
-    spark.stop()
-    print(json.dumps(out), flush=True)
-
-
-def _fmt_bytes(n: int) -> str:
-    if n >= 1 << 30:
-        return f"{n / (1 << 30):.1f} GiB"
-    if n >= 1 << 20:
-        return f"{n / (1 << 20):.1f} MiB"
-    return "0" if n == 0 else f"{n / 1024:.0f} KiB"
+    queries pass the disjoint-copy g×100 dir) in this process's fresh
+    JVM. Spill metrics are the run's StatusWindow totals."""
+    run = probe.time_cell(name, [(tier_dir, tier_dir)])[tier_dir][0]
+    return {"name": name, "budget": budget, "ok": True,
+            **{k: run[k] for k in ("wall_s", "mem_spill_bytes", "disk_spill_bytes",
+                                   "peak_exec_mem_bytes", "tasks")}}
 
 
 def _render(grid: dict[str, dict[str, dict]]) -> list[str]:
     lines = [
-        "## Memory appendix (constrained-budget ×100 runs)",
-        "",
-        "Generated by `python scripts/memory_probe.py` (raw grid in",
-        "MEMORY_PROBE.json). Each cell is a FRESH JVM running the query",
-        "at the ×100 tier with `spark.driver.memory` set to the budget —",
-        "on local[32] that heap is shared by all 32 task threads, the",
-        "analog of one 32-core executor's memory on a real cluster.",
-        "`floor` is the smallest budget that completes; `spill@floor` is",
-        "memory/disk bytes spilled there (from stage metrics); `slowdown`",
-        "is floor wall vs the 32g reference wall. A query that completes",
-        "at every probed budget with bounded slowdown lives safely in the",
-        "spill regime; an OOM cell is a real deployment constraint and is",
-        "listed explicitly. Graph-family rows (triangle_count,",
-        "clustering_coefficient, pagerank_trade_graph) run at the",
-        "disjoint-copy g×100 tier instead (scripts/graph_scaling.py —",
-        "the main tier densifies the graph) on a reduced 32g/8g/4g walk.",
-        "",
         "| query | 32g wall (s) | floor | floor wall (s) | slowdown | spill@floor (mem / disk) | OOM budgets |",
         "|---|---|---|---|---|---|---|",
     ]
@@ -271,8 +152,8 @@ def _render(grid: dict[str, dict[str, dict]]) -> list[str]:
             else "—"
         )
         spill = (
-            f"{_fmt_bytes(fc['mem_spill_bytes'])} / "
-            f"{_fmt_bytes(fc['disk_spill_bytes'])}"
+            f"{fmt_bytes(fc['mem_spill_bytes'])} / "
+            f"{fmt_bytes(fc['disk_spill_bytes'])}"
         )
         lines.append(
             f"| {name} | {ref.get('wall_s', '—')} | {floor} | {fc['wall_s']} "
@@ -281,42 +162,10 @@ def _render(grid: dict[str, dict[str, dict]]) -> list[str]:
     return lines
 
 
-_MARKER = "## Memory appendix"
-
-
-def _splice_scaling_md(lines: list[str]) -> None:
-    path = os.path.join(REPO, "SCALING.md")
-    with open(path) as fh:
-        text = fh.read()
-    block = "\n".join(lines) + "\n"
-    if _MARKER in text:
-        head, _, rest = text.partition(_MARKER)
-        # The old section runs to the next "## " heading, the next
-        # splice MARKER, or EOF — whichever comes first. The marker
-        # check matters: the graph/streaming blocks open with a
-        # "<!-- X:BEGIN -->" line BEFORE their "## " heading, and
-        # cutting at the heading alone ate that marker line (r12 bug:
-        # SCALING.md accumulated an orphaned, then duplicated, graph
-        # appendix because its BEGIN fence was silently dropped here).
-        cut = [i for i in (rest.find("\n## "), rest.find("\n<!--"))
-               if i != -1]
-        tail = rest[min(cut) + 1:] if cut else ""
-        text = head + block + tail
-    else:
-        text = text.rstrip("\n") + "\n\n" + block
-    with open(path, "w") as fh:
-        fh.write(text)
-
-
 def main() -> int:
-    if "--one" in sys.argv:
-        i = sys.argv.index("--one")
-        tier = sys.argv[i + 3] if len(sys.argv) > i + 3 else X100_DIR
-        _child(sys.argv[i + 1], sys.argv[i + 2], tier)
-        return 0
-    if not os.path.isfile(os.path.join(X100_DIR, ".staged")):
+    if not probe.is_staged(STAGE_X100):
         print(
-            f"×100 tier not staged at {X100_DIR} — run "
+            f"×100 tier not staged at {STAGE_X100} — run "
             "`python scripts/scaling_probe.py` first",
             file=sys.stderr,
         )
@@ -324,72 +173,44 @@ def main() -> int:
     # Resume: cells already measured in a committed MEMORY_PROBE.json
     # are reused (delete the file or pass --rerun for a full refresh) —
     # extending BUDGETS only runs the new cells.
+    grid_path = os.path.join(REPO, "MEMORY_PROBE.json")
     grid: dict[str, dict[str, dict]] = {}
     if "--rerun" not in sys.argv:
         try:
-            with open(os.path.join(REPO, "MEMORY_PROBE.json")) as fh:
+            with open(grid_path) as fh:
                 grid = json.load(fh)
         except (OSError, ValueError):
             grid = {}
-    grid_path = os.path.join(REPO, "MEMORY_PROBE.json")
-
-    def _dump() -> None:
-        # ADVICE r09: write after EVERY cell, not once at the end — a
-        # crash mid-grid keeps everything measured so far and the
-        # resume path (above) picks up from the last completed cell.
-        with open(grid_path, "w") as fh:
-            json.dump(grid, fh, indent=1)
-
-    for name in QUERIES:
-        grid.setdefault(name, {})
-        for budget in BUDGETS:
-            if budget in grid[name]:
+    walks = [(name, BUDGETS, STAGE_X100) for name in QUERIES]
+    if probe.is_staged(GX100_DIR):
+        walks += [(name, GRAPH_BUDGETS, GX100_DIR) for name in GRAPH_QUERIES]
+    else:
+        print(f"# g×100 tier not staged at {GX100_DIR} — graph rows "
+              "skipped (run scripts/graph_scaling.py first)", file=sys.stderr)
+    for name, budgets, tier_dir in walks:
+        cells = grid.setdefault(name, {})
+        for budget in budgets:
+            if budget in cells:
                 continue
-            rec = _run_child(name, budget)
-            grid[name][budget] = rec
-            _dump()
-            if rec.get("ok"):
-                print(
-                    f"# {name} @ {budget}: {rec['wall_s']}s "
-                    f"spill {_fmt_bytes(rec['mem_spill_bytes'])}/"
-                    f"{_fmt_bytes(rec['disk_spill_bytes'])}",
-                    file=sys.stderr,
-                )
-            else:
-                print(
-                    f"# {name} @ {budget}: FAILED "
-                    f"({'OOM' if rec.get('oom') else rec.get('err', '?')})",
-                    file=sys.stderr,
-                )
-    for name in GRAPH_QUERIES:
-        if not os.path.isfile(os.path.join(GX100_DIR, ".staged")):
-            print(
-                f"# g×100 tier not staged at {GX100_DIR} — graph rows "
-                "skipped (run scripts/graph_scaling.py first)",
-                file=sys.stderr,
-            )
-            break
-        grid.setdefault(name, {})
-        for budget in GRAPH_BUDGETS:
-            if budget in grid[name]:
-                continue
-            rec = _run_child(name, budget, GX100_DIR)
-            grid[name][budget] = rec
-            _dump()
+            rec = cells[budget] = _run(name, budget, tier_dir)
+            # ADVICE r09: write after EVERY cell — a crash mid-grid keeps
+            # everything measured so far for the resume path above.
+            with open(grid_path, "w") as fh:
+                json.dump(grid, fh, indent=1)
             status = (
-                f"{rec['wall_s']}s spill "
-                f"{_fmt_bytes(rec['mem_spill_bytes'])}/"
-                f"{_fmt_bytes(rec['disk_spill_bytes'])}"
+                f"{rec['wall_s']}s spill {fmt_bytes(rec['mem_spill_bytes'])}/"
+                f"{fmt_bytes(rec['disk_spill_bytes'])}"
                 if rec.get("ok")
                 else f"FAILED ({'OOM' if rec.get('oom') else rec.get('err', '?')})"
             )
-            print(f"# {name} @ {budget} (g×100): {status}", file=sys.stderr)
-    _dump()
-    _splice_scaling_md(_render(grid))
-    print("# wrote MEMORY_PROBE.json + SCALING.md memory appendix",
-          file=sys.stderr)
+            print(f"# {name} @ {budget} ({tier_dir}): {status}", file=sys.stderr)
+    probe.splice_block(os.path.join(REPO, "SCALING.md"), "MEMORY", _render(grid))
+    print("# wrote MEMORY_PROBE.json + SCALING.md memory appendix", file=sys.stderr)
     return 0
 
 
 if __name__ == "__main__":
-    raise SystemExit(main())
+    args = probe.child_args()
+    if args is None:
+        raise SystemExit(main())
+    probe.emit(_child(*args))

@@ -2,74 +2,51 @@
 """Per-query fixed-cost profiler (VERDICT r06 #1).
 
 Runs ONE registered query at $SPARK_GRAFT_SF_DIR twice (first run pays
-codegen JIT) and decomposes the STEADY-STATE run via the status REST
-API: per-job wall spans and inter-job driver gaps, per-stage task
-counts / executorRunTime, and the wall-vs-work split — the fixed cost
-the sub-second TPC-H queries pay (scheduling, AQE re-planning,
-broadcast builds, codegen) vs actual executor work.
+codegen JIT) and decomposes the STEADY-STATE run from Spark's
+in-process status store (probe.StatusWindow): per-job wall spans and
+inter-job driver gaps, per-stage task counts / executorRunTime, and the
+wall-vs-work split — the fixed cost the sub-second TPC-H queries pay
+(scheduling, AQE re-planning, broadcast builds, codegen) vs actual
+executor work.
 
 Usage: python scripts/profile_query.py q5_local_supplier_volume [...]
 """
 
 from __future__ import annotations
 
-import datetime as _dt
-import json
 import os
 import sys
 import time
-import urllib.request
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
-
-
-def _api(base: str, app: str, path: str):
-    with urllib.request.urlopen(f"{base}/api/v1/applications/{app}/{path}") as r:
-        return json.load(r)
-
-
-def _ts(s: str) -> float:
-    # Spark REST timestamps: '2026-08-15T10:00:00.123GMT'
-    return _dt.datetime.strptime(s.replace("GMT", "+0000"),
-                                 "%Y-%m-%dT%H:%M:%S.%f%z").timestamp()
+import probe
 
 
 def profile(spark, name: str, sf_dir: str) -> None:
     from hpat_jl_spark import registry
+    from hpat_jl_spark.session import local_cpus
 
-    sc = spark.sparkContext
-    base, app = sc.uiWebUrl, sc.applicationId
     fn = registry.queries()[name]
 
     spark.catalog.clearCache()
     t0 = time.perf_counter()
-    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    probe.run_noop(fn(spark, sf_dir))
     warm = time.perf_counter() - t0
 
-    before = {j["jobId"] for j in _api(base, app, "jobs")}
+    window = probe.StatusWindow(spark)
     t0 = time.perf_counter()
-    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    probe.run_noop(fn(spark, sf_dir))
     wall = time.perf_counter() - t0
 
-    jobs = sorted(
-        (j for j in _api(base, app, "jobs") if j["jobId"] not in before),
-        key=lambda j: j["jobId"],
-    )
-    stage_ids = sorted({s for j in jobs for s in j["stageIds"]})
-    stages = {s["stageId"]: s for s in _api(base, app, "stages")
-              if s["stageId"] in set(stage_ids)}
+    jobs = window.jobs()
+    stage_ids = sorted({s for j in jobs for s in j["stage_ids"]})
+    stages = {s["id"]: s for s in window.stages(stage_ids)}  # last attempt
 
     print(f"\n=== {name} @ {sf_dir} ===")
     print(f"warmup run : {warm:.3f}s")
     print(f"steady run : {wall:.3f}s   jobs={len(jobs)} "
           f"stages={len(stage_ids)}")
     # job spans + inter-job gaps (driver-side planning/AQE/broadcasts)
-    spans = []
-    for j in jobs:
-        t_sub = _ts(j["submissionTime"])
-        t_end = _ts(j["completionTime"]) if j.get("completionTime") else t_sub
-        spans.append((j["jobId"], t_sub, t_end))
+    spans = [(j["id"], j["start_s"], j["end_s"] or j["start_s"]) for j in jobs]
     in_jobs = sum(e - s for _, s, e in spans)
     gaps = 0.0
     for (a, b) in zip(spans, spans[1:]):
@@ -82,15 +59,10 @@ def profile(spark, name: str, sf_dir: str) -> None:
     print(f"{'stage':>6} {'tasks':>6} {'runMs':>8} {'status':>9}  name")
     task_ms = 0
     for sid in stage_ids:
-        st = stages.get(sid)
-        if st is None:
-            print(f"{sid:>6}    (skipped — reused exchange)")
-            continue
-        task_ms += st.get("executorRunTime", 0)
-        print(f"{sid:>6} {st['numTasks']:>6} {st.get('executorRunTime', 0):>8}"
+        st = stages[sid]
+        task_ms += st["run_ms"]
+        print(f"{sid:>6} {st['tasks']:>6} {st['run_ms']:>8}"
               f" {st['status']:>9}  {st['name'].splitlines()[0][:60]}")
-    from hpat_jl_spark.session import local_cpus
-
     cpus = local_cpus()
     print(f"sum executorRunTime: {task_ms/1000:.3f}s "
           f"(÷{cpus} threads ≈ {task_ms/1000/cpus:.3f}s ideal-parallel)")
@@ -99,10 +71,8 @@ def profile(spark, name: str, sf_dir: str) -> None:
 def main() -> None:
     from hpat_jl_spark.session import get_spark
 
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark(
-        app_name="profile-query", extra_conf={"spark.ui.enabled": "true"}
-    )
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", probe.SF01)
+    spark = get_spark(app_name="profile-query")
     spark.range(1000).selectExpr("sum(id)").collect()
     for q in sys.argv[1:]:
         profile(spark, q, sf_dir)

@@ -1,14 +1,19 @@
 #!/usr/bin/env python
-"""Scaling probe: measure headline queries at sf0.01, sf0.1, and a
-synthetic 10× sf0.1 (each table unioned 10 times with shifted keys —
-~6M lineitem rows), then write SCALING.md with observed time ratios.
+"""Scaling probe: measure headline queries at sf0.01, sf0.1, and
+synthetic 10× and 100× sf0.1 tiers (facts unioned with shifted keys --
+~6M / ~60M lineitem rows), then write SCALING.md's tier and skew tables.
 
-The point is the TREND: a plan that scales linearly on local[32] from
-60k → 600k → 6M rows has no hidden quadratic/driver bottleneck, which
-is the property that transfers to a real cluster at 100 TB (where the
+The point is the TREND: a plan that scales linearly from 60k → 600k →
+6M rows has no hidden quadratic/driver bottleneck, which is the
+property that transfers to a real cluster at 100 TB (where the
 constant factors come from executors, not this laptop-class run).
 
-    python scripts/scaling_probe.py
+    python scripts/scaling_probe.py [--restage]
+    python scripts/scaling_probe.py --one NAME   # child: one query's tiers
+    python scripts/scaling_probe.py --one _skew  # child: the skew probe
+
+Staging ~3 GB of ×100 parquet costs minutes, so re-runs reuse the staged
+tier dirs; pass --restage to rebuild them after a fixture regeneration.
 """
 
 from __future__ import annotations
@@ -17,14 +22,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, ".")
-
-from pyspark.sql import DataFrame, SparkSession  # noqa: E402
-from pyspark.sql import functions as F  # noqa: E402
-
-from hpat_jl_spark import registry  # noqa: E402
-from hpat_jl_spark.session import get_spark  # noqa: E402
-from hpat_jl_spark.tables import load_table  # noqa: E402
+import probe
+from probe import SF001, SF01, STAGE_X10, STAGE_X100
 
 QUERIES = [
     "q1_pricing_summary",
@@ -76,7 +75,6 @@ QUERIES = [
 ]
 
 REPLICAS = 10
-_KEY_SHIFT = 10_000_000  # keeps replicated keys disjoint
 
 # ×100 tier (VERDICT r04 #5): sf0.1 replicated 100× with disjoint keys
 # (~60M lineitem rows) for the TOP-10 headline queries, so the "still
@@ -171,67 +169,7 @@ X100_QUERIES = [
 ]
 
 
-def _amplified(spark: SparkSession, sf_dir: str, name: str, i: int) -> DataFrame:
-    df = load_table(spark, name, sf_dir)
-    shifts = {
-        "lineitem": ["l_orderkey"],
-        "orders": ["o_orderkey", "o_custkey"],
-        "customer": ["c_custkey"],
-        "documents": ["doc_id"],
-        # r6: embeddings replicas previously kept their vec_id — N
-        # copies of the same id is an identity artifact (merged query
-        # groups, duplicate "neighbors" with equal ids), not corpus
-        # scale. Shifted ids give a genuinely larger corpus while the
-        # fixed vec_id < 8 probe set stays in replica 0 — ANN's real
-        # deployment shape (fixed queries, growing corpus).
-        "embeddings": ["vec_id"],
-        # r10 (VERDICT r09 #5): events replicas previously kept their
-        # ids, so the streaming ×10 rows measured a 10-way-duplicate
-        # stream — dedup state held only the base distinct keys and the
-        # boundedness claim was vacuous at scale. Shifted event/user
-        # ids make tier ×N a genuinely ×N-rate stream over the SAME
-        # event-time range: watermark state must now grow with RATE and
-        # eviction must keep up, which is the claim the ×100 streaming
-        # probe exists to test.
-        "events": ["event_id", "user_id"],
-    }
-    for c in shifts.get(name, []):
-        df = df.withColumn(c, F.col(c) + i * _KEY_SHIFT)
-    return df
-
-
-# Dimension tables are staged as a SINGLE copy, not replicated: their
-# keys carry no shift, so N unshifted replicas would make every dim
-# join (lineitem⋈supplier, customer⋈nation, ...) fan out ×N — a
-# replication artifact, not data scale (caught in r5 when q5@×100 was
-# joining each lineitem row against 100 duplicate supplier rows and
-# nation×region multiplied again on top). Real warehouses scale facts,
-# not dims.
-_DIM_TABLES = {"part", "supplier", "nation", "region"}
-
-
-def _stage_amplified(
-    spark: SparkSession, sf_dir: str, out_dir: str, replicas: int = REPLICAS
-) -> None:
-    """Write the replicated tables as real parquet so the probe measures
-    query time, not union-plan construction."""
-    for name in ["lineitem", "orders", "customer", "part", "supplier",
-                 "nation", "region", "events", "documents", "embeddings"]:
-        n = 1 if name in _DIM_TABLES else replicas
-        parts = [_amplified(spark, sf_dir, name, i) for i in range(n)]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        out.write.mode("overwrite").parquet(f"{out_dir}/{name}.parquet")
-
-
-def _time(fn, spark, sf_dir) -> float:
-    t0 = time.perf_counter()
-    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    return round(time.perf_counter() - t0, 2)
-
-
-def _skew_probe(spark: SparkSession, big_dir: str) -> list[str]:
+def _skew_probe(spark, big_dir: str) -> dict:
     """Measured skew evidence at tier scale (VERDICT r05 #6): a
     zipfian-key variant of the heavy lineitem⋈orders equi-join, run
     with AQE skew-join off vs on, plus the plan marker proving
@@ -248,6 +186,10 @@ def _skew_probe(spark: SparkSession, big_dir: str) -> list[str]:
     exactly as the 100 TB stance scales shuffle-partition counts: at
     production bytes the defaults trigger on the same 5× median
     factor."""
+    from pyspark.sql import functions as F
+
+    from hpat_jl_spark.tables import load_table
+
     li = load_table(spark, "lineitem", big_dir)
     orders = load_table(spark, "orders", big_dir)
     skewed = li.withColumn(
@@ -284,7 +226,7 @@ def _skew_probe(spark: SparkSession, big_dir: str) -> list[str]:
         for flag in ("false", "true"):
             spark.conf.set("spark.sql.adaptive.skewJoin.enabled", flag)
             t0 = time.perf_counter()
-            joined.write.format("noop").mode("overwrite").save()
+            probe.run_noop(joined)
             times[flag] = round(time.perf_counter() - t0, 2)
             if flag == "true":
                 # The write command runs its OWN QueryExecution, so the
@@ -304,301 +246,83 @@ def _skew_probe(spark: SparkSession, big_dir: str) -> list[str]:
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
-    speedup = round(times["false"] / max(times["true"], 1e-9), 2)
-    return [
-        "",
-        "## Skew appendix (zipfian hot-key join, ×10 tier)",
-        "",
-        "~80% of ~6M lineitem rows remapped onto ONE hot order key, then",
-        "the lineitem⋈orders sort-merge join + aggregate, broadcast",
-        "disabled (a broadcast join is shuffle-free and skew-immune — the",
-        "first real mitigation, but it would measure nothing). Skew",
-        "thresholds scaled to tier bytes (16 MB/8 MB vs 256 MB/64 MB",
-        "defaults); at production bytes the defaults trigger on the same",
-        "5× median factor. Salting remains the non-AQE fallback and is",
-        "semantics-gated separately (salted_skew_join/aggregate).",
-        "",
-        "| AQE skew-join | wall (s) | OptimizeSkewedJoin in plan |",
-        "|---|---|---|",
-        f"| off | {times['false']} | — |",
-        f"| on | {times['true']} | {'yes (skew=true)' if marker else 'NO'} |",
-        "",
-        f"Speedup with skew splitting: **{speedup}×**.",
-    ]
+    return {"off": times["false"], "on": times["true"], "marker": marker}
 
 
-# Deterministic staged-tier locations: staging ~3 GB of ×100 parquet
-# costs minutes, so re-runs reuse existing dirs (delete them or pass
-# --restage to rebuild after a fixture regeneration).
-STAGE_X10 = "/tmp/spark_graft_tier_x10"
-STAGE_X100 = "/tmp/spark_graft_tier_x100"
-
-
-def _ensure_staged(restage: bool = False) -> None:
-    import os
-    import shutil
-
-    need = [
-        (STAGE_X10, REPLICAS),
-        (STAGE_X100, REPLICAS_X100),
-    ]
-    todo = []
-    for d, n in need:
-        if restage and os.path.isdir(d):
-            shutil.rmtree(d)
-        # _SUCCESS-style completeness marker: a killed staging run must
-        # not be mistaken for a staged tier
-        if not os.path.isfile(os.path.join(d, ".staged")):
-            if os.path.isdir(d):
-                shutil.rmtree(d)
-            todo.append((d, n))
-    if not todo:
-        return
-    spark = get_spark(app_name="scaling-probe-stage", shuffle_partitions=128)
-    for d, n in todo:
-        print(f"# staging {n}x sf0.1 at {d}", file=sys.stderr)
-        _stage_amplified(spark, "/root/testdata/sf0.1", d, n)
-        with open(os.path.join(d, ".staged"), "w") as fh:
-            fh.write("ok\n")
-    spark.stop()
-
-
-def _run_one(name: str) -> None:
-    """Child mode: measure ONE query across tiers in a fresh process,
-    print one JSON line on stdout. Subprocess-per-query isolation (r6):
-    a shared probe session measurably degrades later queries even with
-    clearCache between them — after the ×100 near-dup runs,
-    triangle_count@sf0.01 measured 31.9s in-session vs 6.8s in a fresh
-    process (JVM-level pollution: old-gen heap, reused python workers,
-    page cache) — so every query gets its own JVM and pays only its
-    own plan's cost. The in-process warmup at sf0.01 still absorbs
-    first-compile codegen/JIT like bench.py's warmup does."""
-    import json
-
-    spark = get_spark(app_name=f"scaling-{name}", shuffle_partitions=128)
-    registry.load_all_plans()
-    fn = registry.REGISTRY[name].fn
-    fn(spark, "/root/testdata/sf0.01").write.format("noop").mode("overwrite").save()
-    spark.catalog.clearCache()
-    tiers = [
-        ("sf0.01", "/root/testdata/sf0.01"),
-        ("sf0.1", "/root/testdata/sf0.1"),
-        (f"sf0.1x{REPLICAS}", STAGE_X10),
-    ]
-    if name in X100_QUERIES:
-        tiers.append((f"sf0.1x{REPLICAS_X100}", STAGE_X100))
-    out: dict[str, float] = {}
-    for tier, d in tiers:
-        out[tier] = _time(fn, spark, d)
-        print(f"# {name} @ {tier}: {out[tier]}s", file=sys.stderr)
-        spark.catalog.clearCache()
-    spark.sparkContext.setLogLevel("OFF")
-    spark.stop()
-    print(json.dumps({"name": name, "timings": out}), flush=True)
-
-
-def _run_skew() -> None:
-    import json
-
-    spark = get_spark(app_name="scaling-skew", shuffle_partitions=128)
-    lines = _skew_probe(spark, STAGE_X10)
-    spark.sparkContext.setLogLevel("OFF")
-    spark.stop()
-    print(json.dumps({"skew_lines": lines}), flush=True)
-
-
-def _child_json(args: list[str]) -> dict:
-    """Run this script in a child process, return its stdout JSON line."""
-    import json
-    import subprocess
-
-    proc = subprocess.run(
-        [sys.executable, os.path.abspath(__file__), *args],
-        capture_output=True,
-        text=True,
-        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    )
-    sys.stderr.write(proc.stderr[-4000:] if len(proc.stderr) > 4000 else proc.stderr)
-    for ln in reversed(proc.stdout.strip().splitlines()):
-        ln = ln.strip()
-        if ln.startswith("{"):
-            return json.loads(ln)
-    raise RuntimeError(
-        f"child {args} produced no JSON (rc={proc.returncode}): "
-        f"{proc.stdout[-500:]}"
-    )
-
-
-def main() -> None:
-    # Shuffle ceiling 128 (not the interactive default 32): the ×100
-    # tier shuffles ~60M-row streams, and a 32-partition ceiling forces
-    # ~2M rows per reducer — spill territory that pollutes the growth
-    # signal. This is exactly the documented 100 TB stance ("set the
-    # ceiling high, let AQE coalesce the small stages"); the small
-    # tiers still coalesce to the same effective fan-out.
-    _ensure_staged(restage="--restage" in sys.argv)
-    tier10 = f"sf0.1x{REPLICAS}"
-    x100_tier = f"sf0.1x{REPLICAS_X100}"
-    results: dict[str, dict[str, float]] = {}
-    for name in QUERIES:
-        results[name] = _child_json(["--one", name])["timings"]
-
+def render_tiers(results: dict[str, dict[str, float]]) -> list[str]:
+    tier10, tier100 = f"sf0.1x{REPLICAS}", f"sf0.1x{REPLICAS_X100}"
     lines = [
-        "# SCALING — headline query times across 4 data tiers (local[32])",
-        "",
-        "Generated by `python scripts/scaling_probe.py`. Tier 3 is sf0.1",
-        f"replicated {REPLICAS}× with disjoint keys (~6M lineitem rows, ~50k docs);",
-        f"tier 4 is sf0.1 replicated {REPLICAS_X100}× (top-10 headline queries only).",
-        "FACTS are replicated; dimension tables (part/supplier/nation/region)",
-        "are staged once — their keys carry no shift, so unshifted replicas",
-        "would fan every dim join out ×N, a replication artifact rather than",
-        "data scale (r5 fix; earlier tier-3 columns carried that artifact).",
-        "Probe sessions use a 128-partition shuffle ceiling (the documented",
-        "'set high, let AQE coalesce' stance) so ×100 shuffles don't spill",
-        "through an interactive 32-partition cap. Because of that ceiling,",
-        "ABSOLUTE times here are not comparable to bench.py or to earlier",
-        "rounds' 32-partition tables (streaming queries in particular pay",
-        "128 state partitions per micro-batch, and multi-stage queries pay",
-        "more task launches at the small tiers) — the growth RATIOS are",
-        "the signal this file exists for.",
-        "Since r6 every query runs in its OWN subprocess (fresh JVM): a",
-        "shared session measurably degrades later queries even with",
-        "clearCache between them (triangle_count@sf0.01 31.9s in-session",
-        "after the ×100 near-dup runs vs 6.8s fresh — old-gen heap, reused",
-        "python workers, page cache), so per-query isolation is the only",
-        "way the tier ratios reflect each PLAN's cost. Earlier rounds'",
-        "tables carried that shared-session artifact.",
-        "The signal is the growth RATE between tiers (10× data each step):",
-        "sub-10× growth = fixed overhead still dominates; ~10× = linear scan",
-        "bound; >>10× would indicate a quadratic/driver bottleneck.",
-        "SHUFFLE.md (scripts/shuffle_audit.py) is the companion BYTE view:",
-        "per-query scan/shuffle volumes from the status API, including a",
-        "duplicate-saturation section on these same staged tiers; CORES.md",
-        "(scripts/strong_scaling.py) is the companion PARALLELISM view:",
-        "fixed-data strong scaling 4→32 threads, calibrated against the",
-        "machine's own deliverable pure-compute speedup.",
-        "",
-        "Note on near-dup queries at this tier: the replicas repeat every",
-        "doc VERBATIM, so each doc has 10 exact copies — candidate-PAIR",
-        "output is inherently quadratic in duplicate multiplicity (10-way",
-        "copies → 45 pairs each), an adversarial duplicate rate no real",
-        "corpus has. The probes have now caught and fixed two successive",
-        "simhash shapes here: r4 (signatures shipped once per shared",
-        "band) and r6 (id-level banding itself — see the ×100 note",
-        "below); the surviving discipline also applies to",
-        "fuzzy_decontaminate's exact-verify join.",
-        "",
-        "The ×100 column (~60M lineitem rows; top-10 relational headliners",
-        "plus, since r6, the LLM-pipeline headliners a 100 TB training-data",
-        "run actually executes: dedup_simhash, fuzzy_decontaminate,",
-        "corpus_prep_pipeline, tokenize_to_ids, knn_lsh, and — late r6 —",
-        "lang_id_ngram, benchmark_decontaminate, sequence_packing,",
-        "duplicate_span_report, hll_distinct_portable, and the persisted-index",
-        "ANN deployment shape knn_ivf_persisted) measures the next decade",
-        "directly: ×10→×100 growth ≤ ~10× is linear in data.",
-        "dedup_minhash is bounded by its pair OUTPUT (C(100,2)=4950",
-        "pairs per 100-way-replicated doc, ~110× the ×10 tier's 45",
-        "pairs), not by its candidate join — its measured growth must",
-        "sit BELOW that ~110× output bound, i.e. the join machinery",
-        "itself stays linear even at an adversarial 100-way-duplicate",
-        "rate. Both near-dup queries now escape even the output bound's",
-        "slope in their JOINS (r6 rewrite, simhash first, then minhash):",
-        "verbatim copies share a full signature, so banding runs over",
-        "DISTINCT sigs (minhash keys them by an md5 fingerprint of the",
-        "32 values) and the C(100,2) id pairs only materialize as the",
-        "final output expansion — the r5 id-level simhash band join",
-        "measured 1189 s at ×100 (2× past the output bound, pre-dedup",
-        "band multiplicity) vs ~9 s sig-level; the id-level minhash join",
-        "measured 317 s under the same probe conditions vs 38 s",
-        "sig-level. The sig-level plan carries ~2× more stages, which at",
-        "the toy tiers shows up as single-run codegen-compile + task-launch",
-        "overhead (sf0.1 7.4 s single-run vs 2.5 s warm min-of-3 at bench",
-        "conditions — bench.py is unchanged at ~2.5 s); that fixed cost is",
-        "what buys the 8.4× at ×100 and the flat growth beyond.",
-        "embedding_dedup_clusters (SemDeDup) joined the same family late in",
-        "r6: its per-bucket gram kernel is O(n²) FLOPs in bucket size, so it",
-        "now runs over one representative per distinct (bucket, vector) and",
-        "verbatim copies rejoin as rep→copy star edges (cosine of identical",
-        "vectors is 1.0, so stars give the same connected components as the",
-        "full pair clique at O(n) edges) — the full-pair shape measured",
-        "106 s at ×100 vs 13 s rep-level under identical conditions.",
-        "fuzzy_decontaminate replicates BOTH",
-        "sides (its eval slice is doc_id % 10 == 0 of the same table and",
-        "the replica shift preserves membership), so its pair output is",
-        "×N² per planted contaminated pair — a ×100 step bound between",
-        "tiers, an artifact of replicating the benchmark with the corpus",
-        "(real deployments hold eval fixed as the bounded broadcast",
-        "side). Its ×100 run is now stage-decomposed (r10,",
-        "scripts/profile_query.py): of 1214 s task time (90% parallel-",
-        "efficient, 38 s ideal on 32 threads), the exact shingle-verify",
-        "join+agg holds 41% — that stage's rows are candidate pairs ×",
-        "shingles-per-doc, i.e. exactly the ×N² OUTPUT bound above, and",
-        "the content-level verify rewrites that would dedupe it were",
-        "measured strictly worse and reverted in r8 (don't retry) — so",
-        "the superlinear tail is output, documented and closed. The",
-        "profile DID catch one real defect: the banded signature stream",
-        "was recomputed once per side-filter (312 s task time, 26%) —",
-        "now a narrow (id, band, bhash) persist filled by the broadcast",
-        "build; ×100 wall 46.9 → 39.8 s (growth/decade 5.7× → 5.4×). knn_lsh probes a FIXED 8-query set against the",
-        "grown corpus — embeddings replicas carry shifted vec_ids as of",
-        "r6 (unshifted copies were an identity artifact: merged query",
-        "groups and duplicate neighbor ids). The graph family is excluded",
-        "HERE because replicating orders over the same part catalog",
-        "DENSIFIES the graph (superlinear triangle work by definition — a",
-        "replication artifact, not a scan signal); it has its own",
-        "disjoint-copy tiers in the Graph appendix below",
-        "(scripts/graph_scaling.py), where the honest bound is linear.",
-        "",
         "| query | sf0.01 (s) | sf0.1 (s) | ×10 (s) | sf0.1→×10 growth | ×100 (s) | ×10→×100 growth |",
         "|---|---|---|---|---|---|---|",
     ]
     for name, r in results.items():
         growth = round(r[tier10] / max(r["sf0.1"], 1e-9), 1)
-        if x100_tier in r:
-            g100 = round(r[x100_tier] / max(r[tier10], 1e-9), 1)
-            x100_cells = f" {r[x100_tier]} | {g100}× |"
+        if tier100 in r:
+            g100 = round(r[tier100] / max(r[tier10], 1e-9), 1)
+            x100_cells = f" {r[tier100]} | {g100}× |"
         else:
             x100_cells = " — | — |"
         lines.append(
             f"| {name} | {r['sf0.01']} | {r['sf0.1']} | {r[tier10]} | {growth}× |"
             + x100_cells
         )
-    lines += _child_json(["--skew"])["skew_lines"]
-    # Preserve the sections other probes splice in (streaming, graph —
-    # marker-fenced — and the memory appendix, which runs to the next
-    # "## " heading or EOF): this full-regen must not drop them.
-    kept_blocks = []
-    try:
-        with open("SCALING.md") as f:
-            old = f.read()
-        for b, e in (
-            ("<!-- STREAMING:BEGIN", "<!-- STREAMING:END -->"),
-            ("<!-- GRAPH:BEGIN", "<!-- GRAPH:END -->"),
-        ):
-            if b in old and e in old:
-                # END must be searched AFTER BEGIN: a malformed file
-                # (e.g. an orphaned block whose BEGIN was eaten by an
-                # earlier splice bug) can carry an END before the real
-                # BEGIN, and slicing to that earlier END keeps garbage.
-                s = old.index(b)
-                kept_blocks.append(old[s: old.index(e, s) + len(e)])
-        mem = "## Memory appendix"
-        if mem in old:
-            rest = old[old.index(mem):]
-            idx = rest.find("\n## ")
-            kept_blocks.append(rest[:idx] if idx != -1 else rest)
-    except OSError:
-        pass
-    tail = "".join("\n" + blk.strip("\n") + "\n" for blk in kept_blocks)
-    with open("SCALING.md", "w") as f:
-        f.write("\n".join(lines) + "\n" + tail)
+    return lines
+
+
+def render_skew(skew: dict) -> list[str]:
+    speedup = round(skew["off"] / max(skew["on"], 1e-9), 2)
+    return [
+        "| AQE skew-join | wall (s) | OptimizeSkewedJoin in plan |",
+        "|---|---|---|",
+        f"| off | {skew['off']} | — |",
+        f"| on | {skew['on']} | {'yes (skew=true)' if skew['marker'] else 'NO'} |",
+        "",
+        f"Speedup with skew splitting: **{speedup}×**.",
+    ]
+
+
+def _ensure_staged(restage: bool = False) -> None:
+    probe.stage_once({
+        STAGE_X10: lambda spark, d: probe.stage_amplified(spark, d, REPLICAS),
+        STAGE_X100: lambda spark, d: probe.stage_amplified(spark, d, REPLICAS_X100),
+    }, restage=restage)
+
+
+def _child(name: str) -> dict:
+    if name == "_skew":
+        from hpat_jl_spark.session import get_spark
+
+        spark = get_spark(app_name="scaling-skew", shuffle_partitions=128)
+        skew = _skew_probe(spark, STAGE_X10)
+        spark.sparkContext.setLogLevel("OFF")
+        spark.stop()
+        return skew
+    tiers = [("sf0.01", SF001), ("sf0.1", SF01), (f"sf0.1x{REPLICAS}", STAGE_X10)]
+    if name in X100_QUERIES:
+        tiers.append((f"sf0.1x{REPLICAS_X100}", STAGE_X100))
+    cell = probe.time_cell(name, tiers)
+    return {"name": name, "timings": {t: runs[0]["wall_s"] for t, runs in cell.items()}}
+
+
+def _run(name: str) -> dict:
+    rec = probe.run_child([os.path.abspath(__file__), "--one", name])
+    if not rec.get("ok", True):
+        raise RuntimeError(f"cell {name} failed: {rec['err']}")
+    return rec
+
+
+def main() -> None:
+    _ensure_staged(restage="--restage" in sys.argv)
+    results = {name: _run(name)["timings"] for name in QUERIES}
+    path = os.path.join(probe.REPO, "SCALING.md")
+    probe.splice_block(path, "TIERS", render_tiers(results))
+    probe.splice_block(path, "SKEW", render_skew(_run("_skew")))
     print("wrote SCALING.md")
 
 
 if __name__ == "__main__":
-    if "--one" in sys.argv:
-        _run_one(sys.argv[sys.argv.index("--one") + 1])
-    elif "--skew" in sys.argv:
-        _run_skew()
-    else:
+    args = probe.child_args()
+    if args is None:
         main()
+    else:
+        probe.emit(_child(args[0]))

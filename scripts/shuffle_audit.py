@@ -3,7 +3,8 @@
 
 Wall-clock tiers (SCALING.md) prove end-to-end growth; this audit
 proves WHY from the engine's own accounting: for every bench headline
-query it records, from Spark's status REST API, the number of jobs,
+query it records, from Spark's in-process status stores (no UI, no
+REST; probe.StatusWindow), the number of jobs,
 completed + skipped (reused) stages, tasks, and the exact input /
 shuffle-read / shuffle-write / output byte volumes — at two fixture
 scales — and reports the shuffle:input ratio and the shuffle growth
@@ -19,32 +20,19 @@ documented output bounds — the audit makes the actual volumes visible
 instead of trusting the argument).
 
 Methodology notes:
-- Job attribution is by jobId DELTA (snapshot before/after each query),
-  not setJobGroup: structured-streaming queries issue jobs from the
-  micro-batch thread where a driver-thread job group would not apply.
-  The harness runs queries strictly sequentially, so deltas are exact.
-- Scan volume comes from the SQL-plan scan nodes' "size of files read"
-  metric, NOT stage-level inputBytes: on Spark 4 + local files the
-  vectorized parquet reader's column-data reads bypass the Hadoop
-  FileSystem statistics that feed task inputMetrics, so a full scan of
-  an 11 MB lineitem reports ~17 KB (footers only). Stage inputBytes DOES
-  correctly count block-manager reads, so it is reported separately as
-  `cache rd` — bytes re-read from persisted frames (iterative queries).
-  Shuffle read/write bytes come from the shuffle writers and are exact.
+- Job attribution, scan volume (SQL scan nodes, not stage inputBytes,
+  which is reported separately as `cache rd`) and skipped stages follow
+  probe.StatusWindow; shuffle read/write bytes come from the shuffle
+  writers and are exact.
 - spark.catalog.clearCache() between queries (CLAUDE.md r6 trap:
   CacheManager entries persist for the session lifetime and later
   queries pay eviction interference; for a byte audit they would also
   report misleadingly small scan volumes on cache hits).
-- Skipped stages are counted separately: a SKIPPED stage is Spark
-  reusing a prior shuffle output — evidence of exchange reuse, not
-  missing work.
-- The audit session enables the UI (the tuned bench session disables
-  it) purely to expose /api/v1; nothing here is timed, so the UI's
-  event-bus overhead is irrelevant.
 
 Usage:
-  python scripts/shuffle_audit.py                # sf0.01 + sf0.1 → SHUFFLE.md
+  python scripts/shuffle_audit.py                # sf0.01 + sf0.1 → SHUFFLE.md table
   python scripts/shuffle_audit.py /root/testdata/sf0.01   # one tier, JSON to stdout
+  python scripts/shuffle_audit.py --saturation   # staged tiers → saturation table
 """
 
 from __future__ import annotations
@@ -52,68 +40,20 @@ from __future__ import annotations
 import json
 import os
 import sys
-import urllib.request
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+import probe
+from probe import REPO, SF001, SF01, STAGE_X10, STAGE_X100
 
-DEFAULT_TIERS = ["/root/testdata/sf0.01", "/root/testdata/sf0.1"]
-
-
-def _api(base: str, app: str, path: str):
-    with urllib.request.urlopen(f"{base}/api/v1/applications/{app}/{path}") as r:
-        return json.load(r)
-
-
-_UNIT = {"B": 1, "KiB": 1 << 10, "MiB": 1 << 20, "GiB": 1 << 30, "TiB": 1 << 40}
-
-
-def _parse_size(text: str) -> int:
-    """Parse Spark's Utils.bytesToString output, e.g. '10.3 MiB'.
-
-    Multi-task metrics render as two lines — a 'total (min, med, max
-    (stageId: taskId))' header, then '13.2 MiB (4.4 MiB, ...)' — so take
-    the leading number+unit pair of the LAST line (the total).
-    """
-    parts = text.strip().splitlines()[-1].split()
-    return int(float(parts[0]) * _UNIT[parts[1]])
-
-
-def _sql_execs(base: str, app: str) -> list[dict]:
-    return _api(base, app, "sql?details=true&planDescription=false&length=10000")
-
-
-def _scan_bytes(execs: list[dict], seen: set[int]) -> int:
-    """Sum 'size of files read' over scan nodes of executions not in `seen`.
-
-    Counts bytes ASSIGNED to file scans (pre column-pruning, post
-    partition-pruning), once per execution — an iterative query that
-    re-scans parquet each pass counts each pass, which is the honest
-    scan volume for the growth ratio.
-    """
-    total = 0
-    for q in execs:
-        if q["id"] in seen:
-            continue
-        for node in q.get("nodes", []):
-            if "Scan" not in node["nodeName"]:
-                continue
-            for m in node.get("metrics", []):
-                if m["name"] == "size of files read":
-                    total += _parse_size(m["value"])
-    return total
+DEFAULT_TIERS = [SF001, SF01]
+_KEYS = ("jobs", "stages", "stages_skipped", "tasks", "scan_bytes", "cache_read_bytes",
+         "shuffle_write_bytes", "shuffle_read_bytes", "output_bytes")
 
 
 def audit_tier(sf_dir: str, names: list[str]) -> dict[str, dict]:
     from hpat_jl_spark import registry
     from hpat_jl_spark.session import get_spark
 
-    spark = get_spark(
-        app_name=f"shuffle-audit-{os.path.basename(sf_dir.rstrip('/'))}",
-        extra_conf={"spark.ui.enabled": "true"},
-    )
-    sc = spark.sparkContext
-    base, app = sc.uiWebUrl, sc.applicationId
+    spark = get_spark(app_name=f"shuffle-audit-{os.path.basename(sf_dir.rstrip('/'))}")
     qs = registry.queries()
     # warmup so session/codegen bootstrap jobs don't attribute to query 1
     spark.range(1000).selectExpr("sum(id)").collect()
@@ -121,36 +61,18 @@ def audit_tier(sf_dir: str, names: list[str]) -> dict[str, dict]:
     out: dict[str, dict] = {}
     for name in names:
         spark.catalog.clearCache()
-        before = {j["jobId"] for j in _api(base, app, "jobs")}
-        execs_before = {q["id"] for q in _sql_execs(base, app)}
+        window = probe.StatusWindow(spark)
         try:
-            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+            probe.run_noop(qs[name](spark, sf_dir))
         except Exception as exc:  # keep auditing the rest
             out[name] = {"error": f"{type(exc).__name__}: {exc}"[:200]}
             continue
-        jobs = [j for j in _api(base, app, "jobs") if j["jobId"] not in before]
-        stage_ids = sorted({s for j in jobs for s in j["stageIds"]})
-        stages = [
-            s
-            for s in _api(base, app, "stages")
-            if s["stageId"] in set(stage_ids)
-        ]
-        done = [s for s in stages if s["status"] == "COMPLETE"]
-        out[name] = {
-            "jobs": len(jobs),
-            "stages": len(done),
-            "stages_skipped": len(stage_ids) - len({s["stageId"] for s in done}),
-            "tasks": sum(s["numTasks"] for s in done),
-            "scan_bytes": _scan_bytes(_sql_execs(base, app), execs_before),
-            "cache_read_bytes": sum(s["inputBytes"] for s in done),
-            "shuffle_write_bytes": sum(s["shuffleWriteBytes"] for s in done),
-            "shuffle_read_bytes": sum(s["shuffleReadBytes"] for s in done),
-            "output_bytes": sum(s["outputBytes"] for s in done),
-        }
-        print(f"# {sf_dir} {name}: jobs={out[name]['jobs']} "
-              f"stages={out[name]['stages']}+{out[name]['stages_skipped']}skip "
-              f"scan={out[name]['scan_bytes']>>20}MB "
-              f"shw={out[name]['shuffle_write_bytes']>>20}MB",
+        totals = window.totals()
+        rec = out[name] = {k: totals[k] for k in _KEYS}
+        print(f"# {sf_dir} {name}: jobs={rec['jobs']} "
+              f"stages={rec['stages']}+{rec['stages_skipped']}skip "
+              f"scan={rec['scan_bytes']>>20}MB "
+              f"shw={rec['shuffle_write_bytes']>>20}MB",
               file=sys.stderr)
     spark.stop()
     return out
@@ -160,26 +82,9 @@ def _mb(n: int) -> str:
     return f"{n / 1048576:.1f}"
 
 
-def render(tiers: dict[str, dict[str, dict]], names: list[str]) -> str:
-    (lo_dir, lo), (hi_dir, hi) = sorted(tiers.items())
+def render(tiers: dict[str, dict[str, dict]], names: list[str]) -> list[str]:
+    (_, lo), (_, hi) = sorted(tiers.items())
     lines = [
-        "# SHUFFLE.md — per-query shuffle-volume audit",
-        "",
-        f"Generated by `scripts/shuffle_audit.py` from Spark's status API",
-        f"at {lo_dir} and {hi_dir} (fixture bytes differ ~10×).",
-        "`scan MB` is the SQL scan nodes' \"size of files read\" — parquet",
-        "bytes assigned to file scans, counted once per pass (stage-level",
-        "inputBytes misses local parquet column reads on Spark 4, so it is",
-        "NOT used; what it does count — block-manager reads of persisted",
-        "frames — is shown as `cache rd`). Shuffle bytes are exact sums",
-        "over COMPLETED stages; `skip` counts SKIPPED stages (reused",
-        "shuffle output). `sh:scan` is shuffle-write / scan at the larger",
-        "tier — bytes crossing the network per parquet byte scanned, THE",
-        "portability number for a 1000-executor cluster. `growΔ` is",
-        "shuffle-write growth between the tiers (≈10× = linear in the",
-        "input; ≪10× = aggregation collapses volume early; ≫10× would",
-        "flag a pair-explosion).",
-        "",
         "| query | jobs | stages (+skip) | tasks | scan MB | cache rd MB | shw MB | shr MB | sh:scan | growΔ |",
         "|---|---|---|---|---|---|---|---|---|---|",
     ]
@@ -198,36 +103,7 @@ def render(tiers: dict[str, dict[str, dict]], names: list[str]) -> str:
             f"| {_mb(h['shuffle_write_bytes'])} | {_mb(h['shuffle_read_bytes'])} "
             f"| {sin:.2f} | {f'{grow:.1f}×' if grow else '—'} |"
         )
-    lines += [
-        "",
-        "Reading `sh:scan`: values ≫1 are not automatically bad — they are",
-        "the algorithm's intrinsic expansion factor. dedup_minhash shuffles",
-        "~14 bytes per scanned byte because each document fans out into",
-        "128 minhash values grouped into band keys (a fixed ×(bands)",
-        "multiplier on the signature stream — the LSH design trade: shuffle",
-        "a constant factor more to avoid an O(n²) comparison);",
-        "corpus_prep_pipeline contains that same minhash stage. What WOULD",
-        "flag a scale problem is growΔ ≫10× (shuffle growing faster than",
-        "the data) — at DATA scale no query shows it: the near-dup",
-        "self-joins' duplicate-saturated ×10/×100 behavior is measured",
-        "directly below and in SCALING.md. The one ≫10× cell in this",
-        "table, q21_waiting_supplier (~32×), is a TOY-tier plan",
-        "discontinuity, not a pair explosion: at sf0.01 AQE runtime-",
-        "converts one join's small side to broadcast (final plan: 4 BHJ,",
-        "3 exchanges), while at sf0.1 that join runs sort-merge with both",
-        "sides shuffled (3 BHJ + 1 SMJ, 5 exchanges) — one exchange of",
-        "coverage appears between the tiers on top of the 10× data. Past",
-        "the broadcast threshold the shape is stable: SCALING.md measures",
-        "q21 at 1.1×/5.2× per decade on the ×10/×100 tiers.",
-        "Conversely `cache rd` ≫ scan (triangle_count,",
-        "corpus_prep, dedup_minhash) is deliberate: an iterative or",
-        "multi-pass plan re-reading a persisted frame from the block",
-        "manager instead of re-deriving it.",
-        "SCALING.md is the companion wall-clock-vs-data view and CORES.md",
-        "(scripts/strong_scaling.py) the wall-clock-vs-parallelism view.",
-        "",
-    ]
-    return "\n".join(lines)
+    return lines
 
 
 # Duplicate-saturation byte audit: the near-dup self-joins on the
@@ -244,23 +120,11 @@ SATURATION_QUERIES = [
     "fuzzy_decontaminate",
     "benchmark_decontaminate",
 ]
-_SAT_MARK = "<!-- saturation-audit -->"
 
 
-def render_saturation(tiers: dict[str, dict[str, dict]]) -> str:
+def render_saturation(tiers: dict[str, dict[str, dict]]) -> list[str]:
     order = list(tiers)
     lines = [
-        _SAT_MARK,
-        "## Near-dup byte volumes under duplicate saturation",
-        "",
-        "Same audit on the scaling probe's staged tiers (sf0.1 facts",
-        "replicated with disjoint keys — every doc a 10-/100-way exact",
-        "duplicate, the worst case for near-dup candidate joins; see",
-        "SCALING.md). `shw growth/decade` is the geometric-mean shuffle-",
-        "write growth per 10× of data: ~10× = linear in the corpus, ~100×",
-        "would mean the join squares through duplicate multiplicity (what",
-        "id-level banding did before the r6 sig-level rewrites).",
-        "",
         "| query | " + " | ".join(f"shw MB {t}" for t in order)
         + " | shw growth/decade | scan growth/decade |",
         "|---|" + "---|" * (len(order) + 2),
@@ -286,40 +150,19 @@ def render_saturation(tiers: dict[str, dict[str, dict]]) -> str:
             f"| {n} | " + " | ".join(cells)
             + f" | {_per_decade(shws)} | {_per_decade(scans)} |"
         )
-    lines += [
-        "",
-        "The three near-dup SELF-joins shuffle sub-linearly (6-9×/decade",
-        "under 10-/100-way duplication) because banding runs over DISTINCT",
-        "signatures — duplicate multiplicity re-enters only as the bounded",
-        "C(N,2)-per-group id-pair OUTPUT. The two decontaminate queries sit",
-        "slightly above linear (~13.6×/decade) for a documented reason",
-        "(SCALING.md): they are two-sided joins where the eval slice",
-        "replicates WITH the corpus, so the matched-pair output itself",
-        "grows ×N² per shared content — the measured growth is that output",
-        "stream (vs its ×100/decade worst-case bound), not join machinery.",
-        "",
-    ]
-    return "\n".join(lines)
+    return lines
 
 
 def run_saturation() -> None:
-    from scaling_probe import STAGE_X10, STAGE_X100  # scripts/ sibling
-
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "32g")  # ×100 OOMs at 8g
     tiers = {
-        "base": audit_tier("/root/testdata/sf0.1", SATURATION_QUERIES),
+        "base": audit_tier(SF01, SATURATION_QUERIES),
         "×10": audit_tier(STAGE_X10, SATURATION_QUERIES),
         "×100": audit_tier(STAGE_X100, SATURATION_QUERIES),
     }
-    section = render_saturation(tiers)
     path = os.path.join(REPO, "SHUFFLE.md")
-    with open(path) as fh:
-        text = fh.read()
-    if _SAT_MARK in text:
-        text = text[: text.index(_SAT_MARK)].rstrip() + "\n"
-    with open(path, "w") as fh:
-        fh.write(text.rstrip() + "\n\n" + section)
-    print(f"appended saturation section to {path}")
+    probe.splice_block(path, "SATURATION_TABLE", render_saturation(tiers))
+    print(f"wrote the saturation table of {path}")
 
 
 def main() -> None:
@@ -334,10 +177,8 @@ def main() -> None:
         print(json.dumps(audit_tier(args[0], names), indent=1))
         return
     tiers = {d: audit_tier(d, names) for d in DEFAULT_TIERS}
-    md = render(tiers, names)
     path = os.path.join(REPO, "SHUFFLE.md")
-    with open(path, "w") as fh:
-        fh.write(md)
+    probe.splice_block(path, "SHUFFLE_TABLE", render(tiers, names))
     print(f"wrote {path}")
 
 

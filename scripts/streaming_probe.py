@@ -20,8 +20,9 @@ watermark delay), NOT by corpus size — state rows must PLATEAU across
 batches and grow ≈linearly with tier event-RATE (events/hour of event
 time), while total input grows 10×/tier. MUST own the box (CLAUDE.md).
 
-Usage: python scripts/streaming_probe.py [--tiers sf0.01,sf0.1,x10]
-Writes a STREAMING section table to stdout (paste into SCALING.md).
+Usage: python scripts/streaming_probe.py [--tiers sf0.01,sf0.1,x10] [--backend rocksdb]
+Merges the grid into STREAMING_PROBE.json and writes its table into
+SCALING.md's streaming section (the STREAMING_TABLE fence).
 """
 
 from __future__ import annotations
@@ -33,58 +34,45 @@ import sys
 import time
 import uuid
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
-sys.path.insert(0, os.path.join(REPO, "scripts"))
+import probe
+from probe import REPO, SF001, SF01, STAGE_X10, STAGE_X100
 
 N_SLICES = 12
 STAGE_ROOT = "/tmp/spark_graft_stream_tiers"
 
 TIERS = {
-    "sf0.01": "/root/testdata/sf0.01",
-    "sf0.1": "/root/testdata/sf0.1",
-    "x10": "/tmp/spark_graft_tier_x10",
+    "sf0.01": SF001,
+    "sf0.1": SF01,
+    "x10": STAGE_X10,
     # VERDICT r09 #5: the ×100 tier (10M events over the SAME
     # event-time range — a ×100 arrival RATE; event/user ids are
     # shifted per replica as of r10, so state must genuinely scale
     # with rate and eviction must keep up).
-    "x100": "/tmp/spark_graft_tier_x100",
+    "x100": STAGE_X100,
 }
 
 
 def _stage_sliced(spark, src_dir: str, label: str) -> str:
     """Stage events as N_SLICES time-ordered files (shared helper:
     hpat_jl_spark/streaming/replay.py, also used by the kill-and-resume
-    tests), memoized behind a content-keyed marker."""
+    tests). The marker is keyed on (source row count, N_SLICES) —
+    ADVICE r07: a bare "ok" marker silently reused stale slices when the
+    fixture or the slice count changed, reporting numbers for old data."""
     from hpat_jl_spark.streaming.replay import stage_time_slices
     from hpat_jl_spark.tables import load_table
 
     out = os.path.join(STAGE_ROOT, label)
-    marker = os.path.join(out, ".staged")
     n = load_table(spark, "events", src_dir).count()
-    # Marker is keyed on (source row count, N_SLICES) — ADVICE r07: a
-    # bare "ok" marker silently reused stale slices when the fixture
-    # or the slice count changed, reporting numbers for old data.
-    expect = f"rows={n} slices={N_SLICES}\n"
-    if os.path.isfile(marker):
-        try:
-            with open(marker) as fh:
-                if fh.read() == expect:
-                    return out
-        except OSError:
-            pass
-    shutil.rmtree(out, ignore_errors=True)
-    stage_time_slices(spark, src_dir, out, N_SLICES)
-    with open(marker, "w") as fh:
-        fh.write(expect)
+    probe.stage_once(
+        {out: lambda spark, d: stage_time_slices(spark, src_dir, d, N_SLICES)},
+        spark=spark, key=f"rows={n} slices={N_SLICES}",
+    )
     return out
 
 
 def _run_stream(spark, make_stream, staged: str, mode: str) -> dict:
     """Run a stream over the sliced dir, one file per micro-batch, to a
     noop sink; return batch-level state metrics from recentProgress."""
-    from pyspark.sql import functions as F
-
     reader = (
         spark.readStream.schema(
             "event_id long, ts timestamp, user_id long, event_type string,"
@@ -131,7 +119,6 @@ def _run_stream(spark, make_stream, staged: str, mode: str) -> dict:
 
 
 def _queries():
-    from pyspark.sql import functions as F
     from hpat_jl_spark.streaming.dedup import dedup_within_watermark
     from hpat_jl_spark.streaming.windows import (
         stream_stream_purchase_after_view,
@@ -217,14 +204,8 @@ def main() -> None:
             shutil.rmtree(os.path.join(STAGE_ROOT, d), ignore_errors=True)
     # Persist the raw grid for make_capacity's streaming rows (state
     # bytes per input TB is the number a 100 TB operator needs).
-    tier_bytes = {}
-    for label in tiers:
-        staged = os.path.join(STAGE_ROOT, label)
-        total = 0
-        for root, _dirs, files in os.walk(staged):
-            for f in files:
-                total += os.path.getsize(os.path.join(root, f))
-        tier_bytes[label] = total
+    tier_bytes = {label: probe.dir_bytes(os.path.join(STAGE_ROOT, label))
+                  for label in tiers}
     payload = {"results": results, "tier_bytes": tier_bytes}
     path = os.path.join(REPO, "STREAMING_PROBE.json")
     prior = {}
@@ -244,46 +225,13 @@ def main() -> None:
     all_tiers = [t for t in TIERS
                  if any(t in tr
                         for tr in prior.setdefault("results", {}).values())]
-    _splice_scaling_md(prior["results"], all_tiers)
+    probe.splice_block(os.path.join(REPO, "SCALING.md"), "STREAMING_TABLE",
+                       render(prior["results"], all_tiers))
     print(json.dumps(results, indent=1))
 
 
-_BEGIN = "<!-- STREAMING:BEGIN (scripts/streaming_probe.py) -->"
-_END = "<!-- STREAMING:END -->"
-
-
-def _splice_scaling_md(results: dict, tier_names: list[str]) -> None:
-    """Write the streaming section into SCALING.md between markers
-    (idempotent; scaling_probe preserves the marked block on regen)."""
+def render(results: dict, tier_names: list[str]) -> list[str]:
     lines = [
-        _BEGIN,
-        "",
-        "## Streaming state boundedness (VERDICT r06 #6)",
-        "",
-        "Generated by `scripts/streaming_probe.py`: each tier's `events`",
-        "is staged as 12 event-time-ordered slices and replayed one file",
-        "per micro-batch (availableNow + maxFilesPerTrigger=1), so the",
-        "watermark advances between batches and eviction actually runs —",
-        "a single-batch replay (the bench shape) never exercises it. The",
-        "scale claim: PEAK state is bounded by arrival-rate × watermark",
-        "delay, not corpus size — final-batch state must sit well below",
-        "total input, and `evicted` must approach total stateful input.",
-        "`median trigger` decomposes the per-batch engine floor from",
-        "state work (the 17 s bench constant ≈ n_batches × floor + state).",
-        "",
-        "Tier semantics (r10): event/user ids are SHIFTED per replica,",
-        "so tier ×N is a genuine ×N-rate stream of distinct keys over",
-        "the same event-time range (pre-r10 tiers replicated ids",
-        "verbatim, which let dedup state stay flat by its own dedup",
-        "contract — a vacuous boundedness check). Expected shapes:",
-        "join/dedup peak state tracks arrival rate ×N with final state",
-        "a small fraction of peak (eviction keeps up); tumbling state",
-        "stays constant (windows × types, never rows);",
-        "running_user_totals state rows track USER cardinality ×N by",
-        "design (NoTimeout per-key state — the operator a 100 TB run",
-        "sizes by keys, not input). Wall per tier ≈ n_batches × trigger",
-        "floor + state work; the floor amortizes with slice size.",
-        "",
         "| query | tier | batches | peak state rows | final rows | evicted"
         " | peak state MB | median trigger (ms) | wall (s) |",
         "|---|---|---|---|---|---|---|---|---|",
@@ -299,26 +247,7 @@ def _splice_scaling_md(results: dict, tier_names: list[str]) -> None:
                 f" | {r['peak_state_mb']} | {r['median_trigger_ms']}"
                 f" | {r['wall_s']} |"
             )
-    lines += ["", _END]
-    block = "\n".join(lines)
-    path = os.path.join(REPO, "SCALING.md")
-    try:
-        with open(path) as fh:
-            text = fh.read()
-    except OSError:
-        text = ""
-    if _BEGIN in text and _END in text:
-        # END searched AFTER BEGIN (r12: an orphaned block with a stray
-        # earlier END — the memory_probe marker-eating bug — must not
-        # scramble the replace).
-        s = text.index(_BEGIN)
-        e = text.index(_END, s) + len(_END)
-        text = text[:s] + block + text[e:]
-    else:
-        text = text.rstrip("\n") + "\n\n" + block + "\n"
-    with open(path, "w") as fh:
-        fh.write(text)
-    print(f"# spliced streaming section into {path}", file=sys.stderr)
+    return lines
 
 
 if __name__ == "__main__":

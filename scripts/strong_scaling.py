@@ -45,7 +45,7 @@ from a contended VM would indict the plans for the hypervisor's
 sins — the ratio to calibration is the portable signal.
 
     python scripts/strong_scaling.py          # writes CORES.md
-    python scripts/strong_scaling.py --cell q05 8   # child mode
+    python scripts/strong_scaling.py --one q05 8 x10   # child mode
 
 NEVER run other Spark work concurrently (CLAUDE.md probe trap): the
 tier timings are only meaningful if the probe owns the box.
@@ -55,13 +55,12 @@ from __future__ import annotations
 
 import json
 import os
-import subprocess
 import sys
-import time
 
-sys.path.insert(0, ".")
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+import probe
+from probe import CALIBRATION as _CALIBRATION
+from probe import REPO, STAGE_X100
+from scaling_probe import REPLICAS, _ensure_staged
 
 CORES = [4, 8, 16, 32]
 
@@ -142,117 +141,34 @@ _SPLIT_CONF = {
 }
 
 
-def _ensure_cpu_staged() -> None:
-    """Stage the ×10 tier repartitioned to _SPLIT_FILES files per fact
-    table (content identical to the scaling probe's tier; only the file
-    layout — and therefore scan-split abundance — differs)."""
-    import shutil
-
-    from hpat_jl_spark.session import get_spark
-    from scaling_probe import _amplified, _DIM_TABLES, REPLICAS
-
-    # Completeness marker written LAST (ADVICE r06: keying the skip on
-    # lineitem.parquet — the FIRST table written — silently reused a
-    # killed staging run; scaling_probe's _ensure_staged fixed the same
-    # bug with a .staged marker).
-    if os.path.isfile(os.path.join(STAGE_CPU, ".staged")):
-        return
-    shutil.rmtree(STAGE_CPU, ignore_errors=True)
-    spark = get_spark(app_name="strong-scaling-stage", shuffle_partitions=128)
-    for name in ["lineitem", "orders", "customer", "part", "supplier",
-                 "nation", "region", "events", "documents", "embeddings"]:
-        n = 1 if name in _DIM_TABLES else REPLICAS
-        parts = [_amplified(spark, "/root/testdata/sf0.1", name, i) for i in range(n)]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        if name not in _DIM_TABLES:
-            out = out.repartition(_SPLIT_FILES)
-        out.write.mode("overwrite").parquet(f"{STAGE_CPU}/{name}.parquet")
-    spark.stop()
-    with open(os.path.join(STAGE_CPU, ".staged"), "w") as fh:
-        fh.write("ok\n")
-    print(f"# staged {STAGE_CPU}", file=sys.stderr)
-
-
-_CALIBRATION = "_pure_compute"
-
-
-def _calibration_fn(spark, fold: int):
-    """128 identical CPU-only tasks: the machine's deliverable-speedup
-    yardstick (no IO, no shuffle payload — anything this job loses to
-    contention is the hypervisor's, not a plan's). ``fold`` sizes the
-    per-task slab so the yardstick's runtime is comparable to the
-    tier's queries."""
-    return spark.range(0, 128, 1, 128).selectExpr(
-        "id",
-        f"aggregate(sequence(1, {fold}), 0L, (a, x) -> a + (x * 37) % 1000003) v",
-    ).agg({"v": "sum"})
-
-
-def _run_cell(name: str, cores: int, tier: str) -> None:
-    """Child: time one query under local[cores] at the given tier."""
-    from hpat_jl_spark import registry
-    from hpat_jl_spark.session import get_spark
-
+def _cell(name: str, cores: str, tier: str) -> dict:
+    """Child: time one query (or the calibration job) under
+    local[cores] at the given tier; min of 2 runs, 1 at ×100 (minutes
+    per cell, so rep noise is proportionally small)."""
     x100 = tier == "x100"
-    spark = get_spark(
-        app_name=f"strong-{name}-{cores}-{tier}",
-        shuffle_partitions=128,
-        extra_conf=_SPLIT_CONF,
-    )
-    reps = 1 if x100 else 2  # ×100 cells are minutes: single cold run
     if name == _CALIBRATION:
-        fold = 10_000_000 if x100 else 3_000_000
-        _calibration_fn(spark, 300_000).collect()  # warm codegen only
-        best = None
-        for _ in range(max(reps, 2)):
-            t0 = time.perf_counter()
-            _calibration_fn(spark, fold).collect()
-            dt = time.perf_counter() - t0
-            best = dt if best is None else min(best, dt)
-    else:
-        registry.load_all_plans()
-        fn = registry.REGISTRY[name].fn
-        # warmup at sf0.01: codegen/JIT compile, parquet footer reads
-        fn(spark, "/root/testdata/sf0.01").write.format("noop").mode(
-            "overwrite"
-        ).save()
-        spark.catalog.clearCache()
-        from scaling_probe import STAGE_X100
+        from hpat_jl_spark.session import get_spark
 
-        data = STAGE_X100 if x100 else STAGE_CPU
-        best = None
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            fn(spark, data).write.format("noop").mode("overwrite").save()
-            dt = time.perf_counter() - t0
-            best = dt if best is None else min(best, dt)
-            spark.catalog.clearCache()
-    spark.sparkContext.setLogLevel("OFF")
-    spark.stop()
-    print(json.dumps({"name": name, "cores": cores, "sec": round(best, 2)}))
+        spark = get_spark(app_name=f"strong-{name}-{cores}-{tier}",
+                          shuffle_partitions=128, extra_conf=_SPLIT_CONF)
+        sec = probe.yardstick_s(spark, 10_000_000 if x100 else 3_000_000, 2)
+        spark.sparkContext.setLogLevel("OFF")
+        spark.stop()
+    else:
+        cell = probe.time_cell(name, [(tier, STAGE_X100 if x100 else STAGE_CPU)],
+                               {tier: 1 if x100 else 2}, _SPLIT_CONF)
+        sec = min(r["wall_s"] for r in cell[tier])
+    return {"name": name, "cores": int(cores), "sec": sec}
 
 
 def _child(name: str, cores: int, tier: str = "x10") -> float:
-    env = dict(os.environ, SPARK_GRAFT_CPUS=str(cores))
-    if tier == "x100":
-        env.setdefault("SPARK_GRAFT_DRIVER_MEM", "32g")  # CLAUDE.md ×100 trap
-    proc = subprocess.run(
-        [sys.executable, os.path.abspath(__file__), "--cell", name,
-         str(cores), tier],
-        capture_output=True,
-        text=True,
-        cwd=REPO,
-        env=env,
-    )
-    for ln in reversed(proc.stdout.strip().splitlines()):
-        if ln.strip().startswith("{"):
-            return json.loads(ln)["sec"]
-    raise RuntimeError(
-        f"cell ({name},{cores}) produced no JSON (rc={proc.returncode}): "
-        f"{proc.stderr[-500:]}"
-    )
+    env = {"SPARK_GRAFT_CPUS": str(cores)}
+    if tier == "x100":  # CLAUDE.md ×100 trap
+        env["SPARK_GRAFT_DRIVER_MEM"] = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g")
+    rec = probe.run_child([os.path.abspath(__file__), "--one", name, str(cores), tier], env)
+    if not rec.get("ok", True):
+        raise RuntimeError(f"cell ({name},{cores}) failed: {rec['err']}")
+    return rec["sec"]
 
 
 CORES_JSON = os.path.join(REPO, "CORES.json")
@@ -287,90 +203,58 @@ def _has_legacy_cells(tier_prior: dict, names: list[str]) -> bool:
     )
 
 
-def _sweep(names: list[str], tier: str) -> dict[str, dict[int, tuple]]:
-    """Per-cell resume via CORES.json (r11 — the probe had no artifact,
-    so extending the query set re-measured EVERY cell; now committed
-    cells are reused and only missing ones run). Invalidate a changed
-    plan's row by deleting it from CORES.json (or the whole file for a
-    full refresh) — the graph_scaling staleness lesson applies: resumed
-    cells are only valid while the plan is unchanged.
-
-    Calibration mixing (ADVICE r11): resuming the CALIBRATION row while
-    measuring new query cells normalized fresh timings against a
-    yardstick from an earlier run's box conditions. Now (1) whenever any
-    query cell must run, the calibration row is RE-MEASURED fresh for
-    this invocation (never resumed), and (2) every query cell stores the
-    same-run calibration sec at its core count ({"sec": s, "calib": c}),
-    so the of-ceiling math normalizes each cell against its OWN run's
-    yardstick — rows whose cells span runs stay comparable. Legacy
-    numeric cells (pre-r12) carry no snapshot and fall back to the
-    tier's COMMITTED calibration row — which is therefore FROZEN
-    (late-r12 fix): while any snapshot-less cell remains in the tier,
-    a fresh invocation must NOT overwrite _pure_compute in CORES.json
-    or the legacy fallback silently re-normalizes those cells against
-    a different box epoch (observed: one re-measured query on a
-    degraded hypervisor day rewrote the row 3.62 → 11.81 s@32thr and
-    every legacy of-ceiling inflated ~3×, q21 0.46 → 1.34). The fresh
-    calibration still runs and is what THIS run's new cells snapshot;
-    only the persisted/displayed row is pinned to the epoch the legacy
-    cells were measured on."""
+def _persist(tier: str, name: str, cores: int, cell) -> None:
     prior = _load_cores_json()
-    tier_prior = prior.get(tier, {})
-    any_missing = any(
-        str(c) not in tier_prior.get(name, {}) for name in names for c in CORES
-    )
-    legacy_in_tier = _has_legacy_cells(tier_prior, names)
-    results: dict[str, dict[int, tuple]] = {}
+    prior.setdefault(tier, {}).setdefault(name, {})[str(cores)] = cell
+    with open(CORES_JSON, "w") as fh:
+        json.dump(prior, fh, indent=1)
 
-    calib: dict[int, float] = {}
-    seeded_calib = tier_prior.get(_CALIBRATION, {})
+
+def _sweep(names: list[str], tier: str) -> None:
+    """Measure the cells of ``names`` that CORES.json lacks, persisting
+    each as it completes (r11: extending the query set used to re-measure
+    EVERY cell). Invalidate a changed plan's row by deleting it from
+    CORES.json (or the whole file for a full refresh): resumed cells are
+    only valid while the plan is unchanged.
+
+    Calibration mixing (ADVICE r11): normalizing fresh timings against a
+    yardstick resumed from an earlier run's box conditions is wrong. So
+    whenever any cell must run, the calibration row is RE-MEASURED for
+    this invocation, and every query cell stores the same-run calibration
+    sec at its core count ({"sec": s, "calib": c}): the of-ceiling math
+    normalizes each cell against its OWN run's yardstick. Legacy numeric
+    cells (pre-r12) carry no snapshot and fall back to the tier's
+    COMMITTED calibration row, which is therefore FROZEN while any such
+    cell remains (late-r12 fix: one re-measured query on a degraded
+    hypervisor day rewrote the row 3.62 → 11.81 s@32thr and every legacy
+    of-ceiling inflated ~3×, q21 0.46 → 1.34). The fresh calibration still
+    runs and is what THIS run's new cells snapshot."""
+    cells = _load_cores_json().get(tier, {})
+    missing = [(n, c) for n in names for c in CORES if str(c) not in cells.get(n, {})]
+    if not missing and all(str(c) in cells.get(_CALIBRATION, {}) for c in CORES):
+        print(f"# [{tier}] resumed from CORES.json", file=sys.stderr)
+        return
+    frozen = _has_legacy_cells(cells, names)
+    calib = {}
     for c in CORES:
-        if not any_missing and str(c) in seeded_calib:
-            calib[c], _ = _cell_parts(seeded_calib[str(c)])
-            continue
         calib[c] = _child(_CALIBRATION, c, tier)
-        print(f"# [{tier}] {_CALIBRATION} @ local[{c}]: {calib[c]}s",
-              file=sys.stderr)
-        if legacy_in_tier and str(c) in seeded_calib:
-            continue  # frozen: legacy cells normalize against this row
-        prior = _load_cores_json()
-        prior.setdefault(tier, {}).setdefault(_CALIBRATION, {})[str(c)] = (
-            calib[c]
-        )
-        with open(CORES_JSON, "w") as fh:
-            json.dump(prior, fh, indent=1)
-    if legacy_in_tier and seeded_calib:
-        display = {
-            c: (_cell_parts(seeded_calib[str(c)])[0]
-                if str(c) in seeded_calib else calib[c])
-            for c in CORES
-        }
-    else:
-        display = dict(calib)
-    results[_CALIBRATION] = {c: (display[c], display[c]) for c in CORES}
+        print(f"# [{tier}] {_CALIBRATION} @ local[{c}]: {calib[c]}s", file=sys.stderr)
+        if not (frozen and str(c) in cells.get(_CALIBRATION, {})):
+            _persist(tier, _CALIBRATION, c, calib[c])
+    for name, c in missing:
+        sec = _child(name, c, tier)
+        print(f"# [{tier}] {name} @ local[{c}]: {sec}s", file=sys.stderr)
+        _persist(tier, name, c, {"sec": sec, "calib": calib[c]})
 
+
+def _results(cells: dict, names: list[str]) -> dict[str, dict[int, tuple]]:
+    """A tier's table rows from its CORES.json cells: the persisted
+    calibration row first, then (sec, calibration snapshot) per query."""
+    rows = {_CALIBRATION: {c: (_cell_parts(cells[_CALIBRATION][str(c)])[0],) * 2
+                           for c in CORES}}
     for name in names:
-        seeded = tier_prior.get(name, {})
-        results[name] = {}
-        dirty = False
-        for c in CORES:
-            if str(c) in seeded:
-                results[name][c] = _cell_parts(seeded[str(c)])
-                continue
-            sec = _child(name, c, tier)
-            results[name][c] = (sec, calib[c])
-            dirty = True
-            print(f"# [{tier}] {name} @ local[{c}]: {sec}s", file=sys.stderr)
-            prior = _load_cores_json()
-            prior.setdefault(tier, {}).setdefault(name, {})[str(c)] = {
-                "sec": sec, "calib": calib[c],
-            }
-            with open(CORES_JSON, "w") as fh:
-                json.dump(prior, fh, indent=1)
-        if not dirty:
-            print(f"# [{tier}] {name}: resumed from CORES.json",
-                  file=sys.stderr)
-    return results
+        rows[name] = {c: _cell_parts(cells[name][str(c)]) for c in CORES}
+    return rows
 
 
 def _table(results: dict[str, dict[int, tuple]]) -> list[str]:
@@ -387,7 +271,7 @@ def _table(results: dict[str, dict[int, tuple]]) -> list[str]:
             of_ceiling = "—"
         else:
             # normalize each endpoint cell against ITS run's calibration
-            # (legacy cells without a snapshot use this run's yardstick)
+            # (legacy cells without a snapshot use the persisted row)
             norm_b = r[base][0] / (r[base][1] or calib[base])
             norm_t = r[top][0] / (r[top][1] or calib[top])
             of_ceiling = f"{norm_b / max(norm_t, 1e-9):.2f}"
@@ -400,165 +284,20 @@ def _table(results: dict[str, dict[int, tuple]]) -> list[str]:
 
 
 def main() -> None:
-    _ensure_cpu_staged()
-    from scaling_probe import _ensure_staged
-
-    _ensure_staged()  # the ×100 table reads the probe's staged tier
-    res_x10 = _sweep(QUERIES, "x10")
-    res_x100 = _sweep(X100_SET, "x100")
-
-    lines = [
-        "# CORES — strong scaling (fixed data, 4→32 threads)",
-        "",
-        "Generated by `python scripts/strong_scaling.py`. Fixed input per",
-        "table, master=local[N] varying only the worker pool. Table 1's",
-        "input is the ×10 tier (~6M lineitem rows / ~50k docs) staged",
-        "split-rich: 64",
-        "part-files per fact table with maxPartitionBytes sized so every",
-        "file is its own scan split (the shared probe tier's ~11-file",
-        "layout coalesces to 1-2 scan splits under the 128 MB default and",
-        "serializes every scan stage — a first run measured the file",
-        "count, not the plans; a 100 TB lake table has thousands of row",
-        "groups, so split abundance is the one resource a local probe must",
-        "emulate, never inherit from a toy fixture). The shuffle-partition",
-        "ceiling is held at 128 for every cell — identical physical plans.",
-        "Every cell is its own subprocess (fresh JVM), min-of-2 after an",
-        "sf0.01 codegen warmup.",
-        "",
-        "**Read this table against the calibration row, not against an",
-        "ideal-linear fantasy.** The first row is a PURE-COMPUTE 128-task",
-        "job (range → integer fold, no IO, no shuffle payload): whatever",
-        "speedup it fails to achieve is the machine's — this is a shared",
-        "VM whose hypervisor delivers only a fraction of its 32 advertised",
-        "threads under full fan-out. `of ceiling` = query speedup 4→32",
-        "divided by the calibration's speedup 4→32: ~1.0 means the plan",
-        "extracted every cycle the box had to give (no serial section, no",
-        "driver bottleneck, no straggler partition); well below 1.0 means",
-        "the plan itself left parallelism unused (fixed job/stage floor,",
-        "broadcast builds, or a stage with fewer tasks than threads).",
-        "On a real cluster the calibration ceiling moves to ~N (each",
-        "executor brings its own memory channels and scheduler); the",
-        "of-ceiling fraction is the part that transfers. Since r12 each",
-        "cell stores the SAME-RUN calibration time at its core count and",
-        "of-ceiling is computed from calibration-normalized endpoints, so",
-        "resumed cells from different runs never mix yardsticks (ADVICE",
-        "r11); pre-r12 cells without a snapshot fall back to the current",
-        "calibration row.",
-        "",
-        "**Strong scaling is input-size-dependent (Amdahl).** At the ×10",
-        "tier most queries carry ~1 core-second of parallel work against a",
-        "~0.5 s serial floor (driver/py4j, job scheduling, broadcast",
-        "builds, AQE stage rounds), so their of-ceiling fractions are low",
-        "BY CONSTRUCTION of the input size, not because the plans",
-        "serialize. Table 2 re-measures the heavy pipeline queries at the",
-        "×100 tier (~60M lineitem rows / ~500k docs, single cold run per",
-        "cell), where parallel work dominates the floor — the of-ceiling",
-        "fraction RISING with input size is the signature of a fixed",
-        "serial floor plus parallel data work, i.e. exactly the profile",
-        "that scales out on a real cluster (at 100 TB the floor is noise).",
-        "",
-        "## Table 1 — ×10 tier (floor-dominated regime)",
-        "",
-        *_table(res_x10),
-        "",
-        "## Table 2 — ×100 tier (compute-dominated regime)",
-        "",
-        *_table(res_x100),
-        "",
-        "Per-query notes (r7 run): q01_copurchase measures 1.00 of",
-        "ceiling — the pinned-fan-out self-join rewrite (VERDICT r06 #2)",
-        "is pure data-parallel pair generation with no serial section;",
-        "its ×10/×100 SCALING rows (4.3×/decade) complete the floor",
-        "analysis the verdict asked for. hll_distinct_portable measures",
-        "ABOVE the pure-compute calibration (≈1.2): the 4-thread cell",
-        "pays md5+distinct hash-map pressure against a shared L3 that",
-        "the 32-thread cell amortizes across more concurrent maps —",
-        "superlinear-vs-calibration is a cache artifact of this VM, read",
-        "it as 'scales at least as well as pure compute'. The classic",
-        "relational headliners (q3 0.47, q9 0.61, q25 0.54, q05 0.48)",
-        "all sit at ~half the machine ceiling at ×100, their remaining",
-        "gap being scan-split scarcity (single-file fixture tables) and",
-        "the per-stage AQE/broadcast rounds that a multi-executor",
-        "cluster overlaps. fuzzy_decontaminate (0.6-0.7 of ceiling) —",
-        "banded candidate generation plus verify join",
-        "is almost pure data-parallel work. corpus_prep_pipeline stays",
-        "floor-bound even at ×100 BY DESIGN: its first stage is exact",
-        "dedup, which collapses the tier's 100-way verbatim replicas to",
-        "the ~5k distinct survivors, so every downstream stage (quality",
-        "gate → near-dup → decontaminate → tokenize → pack) does ×1 work",
-        "however much the corpus is replicated — the pipeline's whole",
-        "point; its low fraction is the multi-stage job floor over a",
-        "collapsed stream, not a serial section (SCALING.md shows the",
-        "same signature: ×10→×100 growth 1.0×).",
-        "",
-        "r12 anomaly resolution (VERDICT r11 #1): the r11 table recorded",
-        "two INVERSE-scaling rows at ×100 — embedding_dedup_clusters",
-        "17.6 s@4thr → 55.4 s@32thr (of-ceiling 0.08) and",
-        "q10_returned_items 12.8 s@8thr → 33.8 s@32thr (0.14). The",
-        "COLLAPSE did not reproduce: re-measuring the exact cells on an",
-        "idle box gave 17.3-17.6 s and 9.3 s at local[32] (3.2× and 3.6×",
-        "faster than the committed cells) — those r11 cells were the",
-        "chronologically-late measurements of a multi-hour sweep on this",
-        "shared VM (cells run in ascending core order, so 16/32-thread",
-        "cells land last), i.e. run-order box contention, not thread",
-        "count. On re-measure q10_returned_items is cleanly monotone",
-        "(16.9 → 9.3 s, of-ceiling 0.41 — the textbook fact⋈fact +",
-        "broadcast-nation shape it always was). embedding_dedup_clusters",
-        "re-measures FLAT (13.1 → 17.6 s), which the per-stage profiles",
-        "explain as a genuine structural bound, not a plan defect: the",
-        "steady-state run is ~8-9 core-s of ideal-parallel work at EITHER",
-        "width inside a ~13 s wall of 62 jobs/115 stages — the connected-",
-        "components fixpoint's sequential sub-second driver rounds are",
-        "the floor — and the per-task executorRunTime inflates 35 → 259",
-        "core-s from 4 → 32 threads (7.4×) because the array-heavy gram/",
-        "CC stages saturate this box's shared memory bandwidth well below",
-        "32 threads. A real cluster hits neither: each executor brings",
-        "its own memory channels, and at 100 TB the per-round parallel",
-        "work dwarfs the fixed ~50-job round floor (SCALING.md's data-",
-        "growth rows for this query are healthy — the floor amortizes",
-        "with input, threads don't change it). The per-cell calibration",
-        "snapshot (above) now pins every cell to its own run's yardstick",
-        "so a contended stretch shows up in the calibration row instead",
-        "of silently inverting a query's fraction.",
-        "",
-        "late-r12 re-measure: embedding_dedup_clusters' cells were re-run",
-        "after its CC fixpoint was REMOVED outright — every SemDeDup edge",
-        "(gram pair or rep→copy star) is label-bucket-local by",
-        "construction, so the components decompose per bucket and one",
-        "Arrow union-find kernel (operators/iterative.",
-        "bucketed_components) replaces the ~20 one-action propagation",
-        "rounds that had profiled as the structural wall. ×100 probe wall",
-        "14.94 → 5.14 s, sf0.1 jobs 49 → 11 across the two rewrites. The",
-        "row is now FLAT at ~6-7.4 s across every width (of-ceiling",
-        "0.20): what remains is the fixed multi-job floor (persist fill,",
-        "gram kernel, union-find, final agg — Python-worker and Arrow",
-        "startup included) plus kernel stages whose parallelism the",
-        "FIXTURE caps at its 8 label buckets — at 100 TB the bucket",
-        "count (IVF cells / LSH bands) exceeds any core count, and the",
-        "floor amortizes with input (SCALING growth 1.5×/2.1× per",
-        "decade). Its calib snapshots also record how chaotic the",
-        "measurement epoch was (25.3 s@4thr against a committed 16.1) —",
-        "per-cell normalization charges that to the calibration column,",
-        "which is exactly its job.",
-        "",
-        "SCALING.md (data tiers) and SHUFFLE.md (byte volumes) are the",
-        "companion axes; all three are regenerated by their scripts with",
-        "the box otherwise idle (run-to-run noise on this VM is 1.5-2×,",
-        "so treat single-cell wiggles as noise and the calibration-",
-        "relative fractions as the signal).",
-        "",
-    ]
-    with open(os.path.join(REPO, "CORES.md"), "w") as f:
-        f.write("\n".join(lines))
+    probe.stage_once({STAGE_CPU: lambda spark, d: probe.stage_amplified(
+        spark, d, REPLICAS, files=_SPLIT_FILES)})
+    _ensure_staged()  # the ×100 table reads the scaling probe's tier
+    path = os.path.join(REPO, "CORES.md")
+    for tier, names, fence in (("x10", QUERIES, "CORES_X10"),
+                               ("x100", X100_SET, "CORES_X100")):
+        _sweep(names, tier)
+        probe.splice_block(path, fence, _table(_results(_load_cores_json()[tier], names)))
     print("wrote CORES.md")
 
 
 if __name__ == "__main__":
-    if "--cell" in sys.argv:
-        i = sys.argv.index("--cell")
-        sys.path.insert(0, os.path.join(REPO, "scripts"))
-        tier = sys.argv[i + 3] if len(sys.argv) > i + 3 else "x10"
-        _run_cell(sys.argv[i + 1], int(sys.argv[i + 2]), tier)
-    else:
-        sys.path.insert(0, os.path.join(REPO, "scripts"))
+    args = probe.child_args()
+    if args is None:
         main()
+    else:
+        probe.emit(_cell(*args))

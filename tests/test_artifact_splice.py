@@ -1,50 +1,34 @@
-"""SCALING.md splice robustness (r12).
-
-Three probe scripts co-own SCALING.md: scaling_probe regenerates the
-base and preserves fenced blocks, memory_probe replaces a heading-
-delimited section, streaming/graph probes replace marker-fenced
-blocks. r12 found the interaction bug: memory_probe cut its section at
-the next "## " heading, which sits INSIDE the graph block AFTER its
-"<!-- GRAPH:BEGIN -->" fence line — the fence was silently dropped,
-the next graph splice saw no BEGIN and appended a duplicate block, and
-the duplicate's stray END would then scramble every later first-END
-splice. These tests pin the fixed behaviors on synthetic files; no
-Spark session involved.
+"""probe.splice_block robustness: the one fence rule every probe uses
+to write its table into a shared artifact (SCALING.md is co-owned by
+five generators). The cases are the r12 interaction bugs: a heading-
+delimited replace ate the next block's BEGIN fence, the next splice
+appended a duplicate block, and the duplicate's stray END scrambled
+every later first-END splice. Synthetic files; no Spark session.
 """
 
-import importlib.util
 import os
-
-import pytest
+import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(REPO, "scripts"))
 
-
-def _load(name: str):
-    path = os.path.join(REPO, "scripts", f"{name}.py")
-    spec = importlib.util.spec_from_file_location(name, path)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
+from probe import splice_block  # noqa: E402
 
 GRAPH_BLOCK = (
     "<!-- GRAPH:BEGIN (scripts/graph_scaling.py) -->\n\n"
     "## Graph appendix (disjoint-copy tiers)\n\nold graph table\n\n"
     "<!-- GRAPH:END -->"
 )
+MEMORY_BLOCK = (
+    "## Memory appendix (constrained-budget)\n\n"
+    "<!-- MEMORY:BEGIN -->\nold memory table\n<!-- MEMORY:END -->\n"
+)
 
 
-def test_memory_splice_preserves_following_fence(tmp_path, monkeypatch):
-    mp = _load("memory_probe")
+def test_memory_splice_preserves_following_fence(tmp_path):
     path = tmp_path / "SCALING.md"
-    path.write_text(
-        "# SCALING\n\n## Memory appendix (constrained-budget)\n\n"
-        "old memory table\n\n" + GRAPH_BLOCK + "\n"
-    )
-    monkeypatch.setattr(mp, "REPO", str(tmp_path))
-    mp._splice_scaling_md(["## Memory appendix (constrained-budget)",
-                           "", "new memory table"])
+    path.write_text("# SCALING\n\n" + MEMORY_BLOCK + GRAPH_BLOCK + "\n")
+    splice_block(str(path), "MEMORY", ["new memory table"])
     text = path.read_text()
     assert "new memory table" in text
     assert "old memory table" not in text
@@ -54,35 +38,27 @@ def test_memory_splice_preserves_following_fence(tmp_path, monkeypatch):
     assert "old graph table" in text
 
 
-def test_memory_splice_still_cuts_at_plain_heading(tmp_path, monkeypatch):
-    mp = _load("memory_probe")
+def test_splice_keeps_unfenced_later_section(tmp_path):
     path = tmp_path / "SCALING.md"
     path.write_text(
-        "# SCALING\n\n## Memory appendix (x)\n\nold memory\n\n"
-        "## Unfenced later section\n\nkeep me\n"
+        "# SCALING\n\n" + MEMORY_BLOCK + "\n## Unfenced later section\n\nkeep me\n"
     )
-    monkeypatch.setattr(mp, "REPO", str(tmp_path))
-    mp._splice_scaling_md(["## Memory appendix (x)", "", "new memory"])
-    text = path.read_text()
-    assert "new memory" in text and "old memory" not in text
-    assert "## Unfenced later section" in text and "keep me" in text
+    splice_block(str(path), "MEMORY", ["new memory"])
+    assert path.read_text() == (
+        "# SCALING\n\n## Memory appendix (constrained-budget)\n\n"
+        "<!-- MEMORY:BEGIN -->\nnew memory\n<!-- MEMORY:END -->\n"
+        "\n## Unfenced later section\n\nkeep me\n"
+    )
 
 
-@pytest.mark.parametrize("script,attr", [
-    ("graph_scaling", "_splice_scaling_md"),
-])
-def test_graph_splice_ignores_stray_earlier_end(tmp_path, monkeypatch,
-                                                script, attr):
-    gs = _load(script)
+def test_graph_splice_ignores_stray_earlier_end(tmp_path):
     path = tmp_path / "SCALING.md"
     # orphaned block (BEGIN eaten) with a stray END before the real one
     path.write_text(
         "# SCALING\n\n## Graph appendix (orphan)\n\nstale table\n\n"
         "<!-- GRAPH:END -->\n\n" + GRAPH_BLOCK + "\n"
     )
-    monkeypatch.setattr(gs, "REPO", str(tmp_path))
-    results = {"triangle_count": {"sf0.1": 1.0, "gx10": 2.0, "gx100": 20.0}}
-    getattr(gs, attr)(results)
+    splice_block(str(path), "GRAPH", ["| triangle_count | 1.0 | 2.0 |"])
     text = path.read_text()
     # replaced the REAL block, left everything before it untouched
     assert "old graph table" not in text
@@ -94,8 +70,7 @@ def test_graph_splice_ignores_stray_earlier_end(tmp_path, monkeypatch,
     assert "<!-- GRAPH:END -->" in text[s:]
 
 
-def test_streaming_splice_ignores_stray_earlier_end(tmp_path, monkeypatch):
-    sp = _load("streaming_probe")
+def test_streaming_splice_ignores_stray_earlier_end(tmp_path):
     path = tmp_path / "SCALING.md"
     block = (
         "<!-- STREAMING:BEGIN (scripts/streaming_probe.py) -->\n\n"
@@ -104,18 +79,23 @@ def test_streaming_splice_ignores_stray_earlier_end(tmp_path, monkeypatch):
     path.write_text(
         "# SCALING\n\nstray\n<!-- STREAMING:END -->\n\n" + block + "\n"
     )
-    monkeypatch.setattr(sp, "REPO", str(tmp_path))
-    results = {
-        "q": {
-            "sf0.01": {
-                "n_batches": 1, "peak_state_rows": 1, "final_state_rows": 1,
-                "rows_evicted": 0, "peak_state_mb": 0.1,
-                "median_trigger_ms": 5, "wall_s": 1.0,
-            }
-        }
-    }
-    sp._splice_scaling_md(results, ["sf0.01"])
+    splice_block(str(path), "STREAMING", ["| q | sf0.01 | 1 |"])
     text = path.read_text()
     assert "old stream table" not in text
     assert text.count("<!-- STREAMING:BEGIN") == 1
     assert "stray" in text
+    # the BEGIN line (with its generator note) is kept as it was
+    assert "<!-- STREAMING:BEGIN (scripts/streaming_probe.py) -->\n| q |" in text
+
+
+def test_splice_appends_fenced_block_when_absent(tmp_path):
+    path = tmp_path / "CORES.md"
+    path.write_text("# CORES\n\nprose\n")
+    splice_block(str(path), "CORES_X10", ["| a |"])
+    splice_block(str(path), "CORES_X10", ["| b |"])
+    assert path.read_text() == (
+        "# CORES\n\nprose\n\n<!-- CORES_X10:BEGIN -->\n| b |\n<!-- CORES_X10:END -->\n"
+    )
+    # a name that prefixes another fence's name is a different block
+    splice_block(str(path), "CORES", ["| c |"])
+    assert "| b |" in path.read_text() and "| c |" in path.read_text()

@@ -64,7 +64,9 @@ def test_env_overrides_box_defaults(monkeypatch):
     assert driver_memory() == "12g"
 
 
-@pytest.mark.parametrize("sf_dir", ["/root/testdata/sf0.001", "/root/testdata/sf0.1"])
+@pytest.mark.parametrize(
+    "sf_dir", ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1"]
+)
 def test_scan_split_count_matches_spark(spark, sf_dir):
     """Against ground truth: min(reported partitions, row groups).
     The .rdd call is fine HERE (a test may plan); the production
@@ -122,6 +124,71 @@ def test_row_group_cap_fires_on_synthetic_single_group(spark, tmp_path):
     finally:
         for k, v in prev.items():
             spark.conf.set(k, v)
+
+
+def _with_confs(spark, confs: dict, fn):
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        return fn()
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def _nonempty_partitions(spark, path: str) -> int:
+    from pyspark.sql import functions as F
+
+    return spark.read.parquet(path).select(F.spark_partition_id().alias("p")).distinct().count()
+
+
+def test_row_group_cap_is_per_file(spark, tmp_path):
+    """ADVICE r13 #3: a big single-row-group file cut into 3 byte ranges
+    yields rows from ONE of them; a small 8-row-group file in one range
+    adds one more. Two scan tasks produce rows, not min(packed, 9)."""
+    import pyarrow as pa
+
+    d = tmp_path / "mixed"
+    d.mkdir()
+    n = 200_000
+    big = pa.table({"x": pa.array(range(n)), "s": pa.array(["y" * 40] * n)})
+    pq.write_table(big, str(d / "big.parquet"), row_group_size=n)
+    small = big.slice(0, 800)
+    pq.write_table(small, str(d / "small.parquet"), row_group_size=100)
+    assert pq.ParquetFile(str(d / "small.parquet")).metadata.num_row_groups == 8
+    split = os.path.getsize(d / "big.parquet") // 3 + 1  # 3 ranges of big
+    confs = {
+        "spark.sql.files.maxPartitionBytes": f"{split}b",
+        "spark.sql.files.openCostInBytes": "1024b",
+        "spark.sql.files.minPartitionNum": "1",
+    }
+
+    def check():
+        assert spark.read.parquet(str(d)).rdd.getNumPartitions() >= 3
+        assert scan_split_count(spark, str(d)) == _nonempty_partitions(spark, str(d)) == 2
+
+    _with_confs(spark, confs, check)
+
+
+def test_scan_split_count_unchanged_on_split_rich_documents(spark, tmp_path):
+    """The split-rich documents layout (8 files x 4 row groups) keeps the
+    value the total row-group cap gave: there the per-file cap does not
+    bind, so stream state widths and scan pins see the same count."""
+    docs = pq.read_table(table_path("/root/testdata/sf0.01", "documents"))
+    d = tmp_path / "documents.parquet"
+    d.mkdir()
+    rows = -(-docs.num_rows // 8)
+    for i in range(8):
+        part = docs.slice(i * rows, rows)
+        pq.write_table(part, str(d / f"part-{i}.parquet"),
+                       row_group_size=max(-(-part.num_rows // 4), 1))
+    reported = spark.read.parquet(str(d)).rdd.getNumPartitions()
+    assert scan_split_count(spark, str(d)) == min(reported, 32)
+    assert scan_split_count(spark, str(d)) == _nonempty_partitions(spark, str(d))
 
 
 def test_invalidate_table_cache_drops_scan_listings(spark, tmp_path):

@@ -1,7 +1,8 @@
-"""Unit tests for scripts/shuffle_audit.py's status-API parsing.
+"""Unit tests for the status parsing in scripts/probe.py that
+scripts/shuffle_audit.py (SHUFFLE.md) and every other probe read.
 
-The audit's conclusions (SHUFFLE.md) hinge on two parsing decisions that
-Spark's REST API makes easy to get silently wrong:
+The audit's conclusions hinge on two parsing decisions that Spark's
+status stores make easy to get silently wrong:
 
 - SQL-node size metrics render either as a bare value ('10.3 MiB') or,
   for multi-task scans, as a two-line 'total (min, med, max (stageId:
@@ -17,29 +18,19 @@ Spark's REST API makes easy to get silently wrong:
 
 from __future__ import annotations
 
-import importlib.util
 import os
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(REPO, "scripts"))
 
-
-def _load_audit():
-    path = os.path.join(REPO, "scripts", "shuffle_audit.py")
-    spec = importlib.util.spec_from_file_location("shuffle_audit", path)
-    mod = importlib.util.module_from_spec(spec)
-    sys.modules.setdefault("shuffle_audit", mod)
-    spec.loader.exec_module(mod)
-    return mod
-
-
-AUDIT = _load_audit()
+import probe  # noqa: E402
 
 
 def test_parse_size_bare_value():
-    assert AUDIT._parse_size("10.3 MiB") == int(10.3 * (1 << 20))
-    assert AUDIT._parse_size("842 B") == 842
-    assert AUDIT._parse_size("  1.5 KiB ") == 1536
+    assert probe.parse_size("10.3 MiB") == int(10.3 * (1 << 20))
+    assert probe.parse_size("842 B") == 842
+    assert probe.parse_size("  1.5 KiB ") == 1536
 
 
 def test_parse_size_distribution_takes_total():
@@ -47,7 +38,7 @@ def test_parse_size_distribution_takes_total():
         "total (min, med, max (stageId: taskId))\n"
         "13.2 MiB (4.4 MiB, 4.4 MiB, 4.4 MiB (stage 4.0: task 7))"
     )
-    assert AUDIT._parse_size(text) == int(13.2 * (1 << 20))
+    assert probe.parse_size(text) == int(13.2 * (1 << 20))
 
 
 def test_scan_bytes_sums_only_new_scan_nodes():
@@ -82,4 +73,32 @@ def test_scan_bytes_sums_only_new_scan_nodes():
             ],
         },
     ]
-    assert AUDIT._scan_bytes(execs, seen={1}) == 2 * (1 << 20) + 512 * (1 << 10)
+    assert probe.scan_bytes(execs, since=2) == 2 * (1 << 20) + 512 * (1 << 10)
+
+
+def test_status_window_reads_the_stores_without_ui(spark, sf_dir):
+    """The in-process stores hold what the REST API served, with the UI
+    off: a window around one query sees exactly the job ids Spark's
+    statusTracker files under the query's job group, its stages, and a
+    non-zero scan volume from the SQL scan nodes."""
+    from hpat_jl_spark import registry
+
+    sc = spark.sparkContext
+    assert sc.getConf().get("spark.ui.enabled") == "false"
+    assert sc.uiWebUrl is None
+    fn = registry.queries()["q5_local_supplier_volume"]
+    window = probe.StatusWindow(spark)
+    sc.setJobGroup("status-window-test", "q5")
+    try:
+        probe.run_noop(fn(spark, sf_dir))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = window.jobs()
+    assert [j["id"] for j in jobs] == sorted(
+        sc.statusTracker().getJobIdsForGroup("status-window-test")
+    )
+    assert all(j["start_s"] <= j["end_s"] for j in jobs)
+    totals = window.totals()
+    assert totals["jobs"] == len(jobs) > 0
+    assert totals["stages"] > 0 and totals["tasks"] >= totals["stages"]
+    assert totals["scan_bytes"] > 0

@@ -18,21 +18,13 @@ These tests pin the cell-format parsing and the freeze predicate.
 
 from __future__ import annotations
 
-import importlib.util
 import os
+import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(REPO, "scripts"))
 
-
-def _load():
-    path = os.path.join(REPO, "scripts", "strong_scaling.py")
-    spec = importlib.util.spec_from_file_location("strong_scaling", path)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
-SS = _load()
+import strong_scaling as SS  # noqa: E402
 
 
 def test_cell_parts_formats():
