@@ -1,8 +1,9 @@
 #!/usr/bin/env python
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
-ONE JSON line: {"metric": ..., "value": N, "unit": "sec",
-"queries": {...}, "sf": ...}.
+"""Benchmark harness: runs the queries registered with the ``headline``
+tag (``registry.tagged``, in registration order; the role tags are
+documented there) at $SPARK_GRAFT_SF_DIR (default: the sf0.1 fixtures)
+on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line: {"metric": ...,
+"value": N, "unit": "sec", "queries": {...}, "sf": ...}.
 
 Each query executes end-to-end via the noop writer (full compute, no
 driver materialization). A tiny warmup query first, so JVM/codegen
@@ -30,130 +31,12 @@ import os
 import sys
 import time
 
-sys.path.append(os.path.join(os.path.dirname(os.path.abspath(__file__)), "scripts"))
+from hpat_jl_spark import registry
+
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.append(os.path.join(ROOT, "scripts"))
 from probe import yardstick_s  # noqa: E402
-
-HEADLINE = [
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
-    "q10_returned_items",
-    "q9_product_type_profit",
-    "q21_waiting_supplier",
-    "q26",
-    "q05",
-    "q25",
-    "q01_copurchase",
-    "asof_join_views",
-    "cumsum_per_user",
-    "sessionize_events",
-    "text_stats",
-    "dedup_exact",
-    "dedup_minhash",
-    "dedup_simhash",
-    "knn_bruteforce",
-    "knn_lsh",
-    "embedding_neardup",
-    "benchmark_decontaminate",
-    "tokenize_to_ids",
-    "sequence_packing",
-    "triangle_count",
-    "corpus_prep_pipeline",
-    "fuzzy_name_pairs",
-    # round 3 additions: new gated surfaces (kept at the tail so the
-    # r1/r2-comparable prefix is unchanged)
-    "lang_id_ngram",
-    "stream_tumbling_counts",
-    # round 4 additions (same tail discipline)
-    "hdf5_ingest_agg",
-    "embedding_dedup_clusters",
-    "duplicate_span_report",
-    "bpe_encode_stats",
-    # round 4, late additions: the portable-arithmetic gated surfaces
-    "hll_distinct_portable",
-    "kmeans_lloyd_exact",
-    "knn_ivf_portable",
-    "knn_pq_portable",
-    "fuzzy_decontaminate",
-    "bpe_encode_fixed",
-    # round 5 additions (same tail discipline): fully-gated BPE
-    # training + composed encode, persisted IVF, bloom-prefiltered
-    # ingest. The new multimodal codec queries are NOT here: their
-    # oracles replay a planted FORMULA over generate_series rather
-    # than performing the codec work, so a Spark-vs-DuckDB time ratio
-    # on them compares real zlib/de-filter decode against arithmetic —
-    # meaningless as a baseline (they are correctness gates in the
-    # sweep, like hdf5's codec-vs-parquet asymmetry already noted).
-    "bpe_train_merges",
-    "bpe_encode_trained",
-    "knn_ivf_persisted",
-    "bloom_prefilter_ingest",
-]
-
-# Prepared-plan timing (VERDICT r06 #1: "the remaining lever is per-
-# query fixed cost, not plans"). For queries whose registered function
-# is a PURE PLAN BUILDER — verified to launch zero Spark jobs and
-# perform no I/O during construction (tests/test_bench_contract.py
-# asserts this with the status tracker) — the bench builds the
-# DataFrame ONCE and times executions of it, recording the build cost
-# separately in BENCH_DETAIL's `plan_build`. Rationale: a DataFrame is
-# an immutable logical plan; re-running fn() per rep re-times py4j
-# call-chains and Column-tree construction (measured 20-830 ms/query,
-# e.g. dedup_minhash's signature expressions), which any deployed
-# pipeline pays once per statement (prepared statements, dashboards,
-# scheduled jobs) while paying execution per run. The DuckDB twin still
-# re-parses its SQL every rep — its parse+plan is ~1 ms, so the
-# comparison becomes execution-vs-execution, which is the honest
-# engine-vs-engine read. Queries whose fn() does eager work (streaming
-# replays, driver-side model fits, index writes, ingest staging) are
-# NOT prepared — for them construction IS part of the query.
-PREPARED = {
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
-    "q10_returned_items",
-    "q9_product_type_profit",
-    "q21_waiting_supplier",
-    "q26",
-    "q05",
-    "q25",
-    "q01_copurchase",
-    "asof_join_views",
-    "cumsum_per_user",
-    "sessionize_events",
-    "text_stats",
-    "dedup_exact",
-    "dedup_minhash",
-    "dedup_simhash",
-    "knn_lsh",
-    "embedding_neardup",
-    "benchmark_decontaminate",
-    "triangle_count",
-    "fuzzy_name_pairs",
-    "lang_id_ngram",
-    # hdf5_ingest_agg is NOT prepared (ADVICE r07): its fn() performs
-    # eager ingest staging (toPandas + classic-HDF5 write) on first
-    # call — memoized, so later builds are cheap, but "no I/O during
-    # construction" does not hold for the first build. Ingest-staging
-    # queries are rebuilt per rep like streaming/fit queries.
-    "duplicate_span_report",
-    "hll_distinct_portable",
-    "fuzzy_decontaminate",
-    "bpe_encode_fixed",
-    "bloom_prefilter_ingest",
-}
-
-# Same-work criterion (VERDICT r05 #4): a vs-DuckDB ratio is a baseline
-# only when the oracle performs the SAME WORK as the Spark plan. Two
-# headline queries fail that test — their oracles are correctness
-# witnesses, not competing implementations — so they stay in the bench
-# (timing evidence) and in the all-queries median, but are excluded
-# from `vs_duckdb_median_samework`:
-#   stream_tumbling_counts — a real micro-batch stateful streaming
-#     engine (state store, epochs, watermarks) vs ONE batch GROUP BY.
-#   hdf5_ingest_agg — a pure-python classic-HDF5 codec doing byte-level
-#     superblock/B-tree/chunk decode vs a DuckDB parquet scan.
-NOT_SAME_WORK = {"stream_tumbling_counts", "hdf5_ingest_agg"}
+from scaling_probe import read_tiers, tier_records  # noqa: E402
 
 
 def _foreign_jvms() -> list[str]:
@@ -234,17 +117,20 @@ def _box_conditions() -> dict:
 _CAL_DEGRADED_HI = 1.25
 
 
+def _committed_bands() -> dict:
+    """BENCH_BANDS.json, or {} when it is absent or unreadable."""
+    try:
+        with open(os.path.join(ROOT, "BENCH_BANDS.json")) as fh:
+            return json.load(fh)
+    except (OSError, ValueError):
+        return {}
+
+
 def _band_calibration() -> float | None:
     """The band-source day's yardstick seconds from BENCH_BANDS.json
     (None when absent — older band files predate the field)."""
-    path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                        "BENCH_BANDS.json")
-    try:
-        with open(path) as fh:
-            v = json.load(fh).get("calibration_s")
-        return float(v) if v else None
-    except (OSError, ValueError):
-        return None
+    v = _committed_bands().get("calibration_s")
+    return float(v) if v else None
 
 
 def _box_degraded(cal_now: float | None, cal_band: float | None) -> bool:
@@ -286,13 +172,7 @@ def _check_bands(
     only: a query getting faster is not a regression). ``bands`` is
     injectable for tests; None loads the committed file."""
     if bands is None:
-        path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                            "BENCH_BANDS.json")
-        try:
-            with open(path) as fh:
-                bands = json.load(fh)["bands"]
-        except (OSError, KeyError, ValueError):
-            return []
+        bands = _committed_bands().get("bands", {})
     breaches = []
     for name, band in bands.items():
         if name in errors:
@@ -411,7 +291,7 @@ def _run_spark_queries(
         # measures the plan's steady cost including its own caches.
         spark.catalog.clearCache()
         df = None
-        if name in PREPARED:  # build the immutable plan once (see above)
+        if "prepared" in registry.REGISTRY[name].tags:  # build once, time runs
             t0 = time.perf_counter()
             try:
                 df = fn(spark, sf_dir)
@@ -443,8 +323,6 @@ def _run_duck(names: list[str], reps: int, sf_dir: str) -> dict[str, float]:
     """Time the DuckDB oracle twins for the named queries (min-of-reps,
     same contract as the Spark side). Empty on any duckdb failure —
     _check_bands then falls back to the absolute sec_hi guards."""
-    from hpat_jl_spark import registry
-
     duck: dict[str, float] = {}
     try:
         from hpat_jl_spark.testing import duckdb_con
@@ -477,26 +355,8 @@ def _run_duck(names: list[str], reps: int, sf_dir: str) -> dict[str, float]:
     return duck
 
 
-# Concurrent-mode query set (VERDICT r07 #7 / r08 #7): a fixed mix of
-# scan-bound TPC-H, shuffle-heavy pipeline, and cache-using plans —
-# the shapes whose mutual interference the repo already measured
-# qualitatively (CacheManager eviction, CLAUDE.md r6). All PREPARED
-# (pure plan builders), so threads share one session safely: a
-# DataFrame is immutable and job submission is thread-safe by design.
-CONCURRENT_SET = [
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q05",
-    "q25",
-    "text_stats",
-    "dedup_exact",
-    "tokenize_to_ids",
-    "sessionize_events",
-]
-
-
 def _concurrent_mode(n_way: int) -> None:
-    """`bench.py --concurrent N`: run CONCURRENT_SET once serially,
+    """`bench.py --concurrent N`: run the ``concurrent`` queries once serially,
     then with N queries in flight at a time (worker threads pulling a
     shared queue, one Spark session, FAIR scheduler so no query's
     stages starve). Prints ONE JSON line with per-query slowdown vs
@@ -508,9 +368,9 @@ def _concurrent_mode(n_way: int) -> None:
     import threading
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from hpat_jl_spark import registry
     from hpat_jl_spark.session import get_spark, sized_shuffle_partitions
 
+    names = registry.tagged("concurrent")
     spark = get_spark(
         app_name=f"hpat_jl_spark-bench-concurrent{n_way}",
         shuffle_partitions=sized_shuffle_partitions(sf_dir),
@@ -518,8 +378,9 @@ def _concurrent_mode(n_way: int) -> None:
     )
     qs = registry.queries()
     spark.range(1000).selectExpr("sum(id)").collect()
-    # Build all plans once, warm each with one untimed pass (codegen).
-    dfs = {name: qs[name](spark, sf_dir) for name in CONCURRENT_SET}
+    # Build all plans serially before any thread starts (so the threads
+    # share one session safely), warm each with one untimed pass.
+    dfs = {name: qs[name](spark, sf_dir) for name in names}
     for df in dfs.values():
         df.write.format("noop").mode("overwrite").save()
 
@@ -528,10 +389,10 @@ def _concurrent_mode(n_way: int) -> None:
         dfs[name].write.format("noop").mode("overwrite").save()
         return round(time.perf_counter() - t0, 3)
 
-    serial = {name: _run(name) for name in CONCURRENT_SET}
+    serial = {name: _run(name) for name in names}
 
     work: queue.Queue[str] = queue.Queue()
-    for name in CONCURRENT_SET:
+    for name in names:
         work.put(name)
     conc: dict[str, float] = {}
     errors: dict[str, str] = {}
@@ -623,7 +484,6 @@ def main() -> None:
             file=sys.stderr,
         )
 
-    from hpat_jl_spark import registry
     from hpat_jl_spark.session import get_spark, sized_shuffle_partitions
 
     # Shuffle-partition ceiling sized by the corpus (VERDICT r06 #1):
@@ -636,6 +496,7 @@ def main() -> None:
     print(f"# shuffle partitions: {nparts}", file=sys.stderr)
     spark = get_spark(app_name="hpat_jl_spark-bench", shuffle_partitions=nparts)
     qs = registry.queries()
+    headline = registry.tagged("headline")
 
     # warmup: session + codegen + parquet footer reads
     spark.range(1000).selectExpr("sum(id)").collect()
@@ -669,7 +530,7 @@ def main() -> None:
     # timings to their plan cost. The first rep still pays codegen JIT.
     reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "5")))
     timings, errors, flaky, plan_build = _run_spark_queries(
-        spark, qs, HEADLINE, reps, sf_dir
+        spark, qs, headline, reps, sf_dir
     )
     # Spark work is done: stop the JVM NOW so its shutdown noise cannot
     # land after the final JSON line (the driver records a 2000-char
@@ -684,7 +545,7 @@ def main() -> None:
     # DuckDB twin: time the oracle SQL for every headline query that has
     # one (rows-only queries have no SQL twin). fetchall() forces full
     # materialization — the moral equivalent of the noop write above.
-    duck = _run_duck(HEADLINE, reps, sf_dir)
+    duck = _run_duck(headline, reps, sf_dir)
 
     box_after = _box_conditions()
 
@@ -703,7 +564,7 @@ def main() -> None:
     self_heal: dict = {}
     loaded_now = box_before["loaded"] or box_after["foreign_spark_jvms"] > 0
     if breaches and loaded_now:
-        names = [n for n in _breach_names(breaches) if n in HEADLINE]
+        names = [n for n in _breach_names(breaches) if n in headline]
         print(
             f"# box loaded + {len(breaches)} breach(es) — self-heal "
             f"re-run of {names}",
@@ -765,13 +626,14 @@ def main() -> None:
     if flaky:
         detail["flaky"] = flaky  # full messages in the detail artifact
     if duck:
+        not_same_work = registry.tagged("not_same_work")
         ratios = sorted(
             round(timings[n] / duck[n], 2) for n in duck if duck[n] > 0
         )
         samework = sorted(
             round(timings[n] / duck[n], 2)
             for n in duck
-            if duck[n] > 0 and n not in NOT_SAME_WORK
+            if duck[n] > 0 and n not in not_same_work
         )
         out["duckdb_total"] = round(sum(duck.values()), 3)
         out["vs_duckdb_median"] = ratios[len(ratios) // 2] if ratios else None
@@ -780,7 +642,7 @@ def main() -> None:
         )
         detail["duckdb"] = duck
         detail["duckdb_total"] = out["duckdb_total"]
-        detail["not_same_work"] = sorted(NOT_SAME_WORK)
+        detail["not_same_work"] = sorted(not_same_work)
         detail["vs_duckdb"] = {
             n: round(timings[n] / duck[n], 2) for n in duck if duck[n] > 0
         }
@@ -819,7 +681,10 @@ def main() -> None:
         out["band_breaches"] = len(breaches)
         for b in breaches:
             print(f"# BAND BREACH: {b}", file=sys.stderr)
-    tiers = _read_scaling_tiers()
+    try:
+        tiers = tier_records(read_tiers())
+    except OSError:
+        tiers = []
     detail["scaling_tiers"] = tiers
     if tiers:
         worst = max(tiers, key=lambda r: r["growth_x10"])
@@ -842,10 +707,8 @@ def main() -> None:
             "(canonical idle artifact preserved)",
             file=sys.stderr,
         )
-    detail_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               detail_name)
     try:
-        with open(detail_path, "w") as fh:
+        with open(os.path.join(ROOT, detail_name), "w") as fh:
             json.dump(detail, fh, indent=1)
         out["detail"] = detail_name
     except OSError as exc:
@@ -862,40 +725,6 @@ def main() -> None:
     print(line, flush=True)
     if "--check" in sys.argv:
         sys.exit(exit_code)
-
-
-def _read_scaling_tiers() -> list[dict]:
-    """Parse SCALING.md's tier table (scripts/scaling_probe.py output)
-    into records for the bench detail artifact (VERDICT r03 #7)."""
-    path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "SCALING.md")
-    rows: list[dict] = []
-    try:
-        with open(path) as fh:
-            for ln in fh:
-                parts = [p.strip() for p in ln.strip().strip("|").split("|")]
-                if len(parts) in (5, 7) and parts[1] not in ("sf0.01 (s)", "---"):
-                    try:
-                        row = {
-                            "query": parts[0],
-                            "sf0.01_s": float(parts[1]),
-                            "sf0.1_s": float(parts[2]),
-                            "x10_s": float(parts[3]),
-                            "growth_x10": float(parts[4].rstrip("×x")),
-                        }
-                    except ValueError:
-                        continue
-                    # ×100 tier (r5): present for the top-10 headline
-                    # queries, "—" otherwise
-                    if len(parts) == 7:
-                        try:
-                            row["x100_s"] = float(parts[5])
-                            row["growth_x100"] = float(parts[6].rstrip("×x"))
-                        except ValueError:
-                            pass
-                    rows.append(row)
-    except OSError:
-        pass
-    return rows
 
 
 if __name__ == "__main__":

@@ -40,7 +40,7 @@ HAVING count(*) > {_Q26_HAVING}
 """
 
 
-@register("q26", oracle=_q26_oracle, tags=("bigbench", "headline"))
+@register("q26", oracle=_q26_oracle, tags=("bigbench", "headline", "prepared"))
 def q26(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BigBench Q26 analogue (reference test/q26_test.jl:63-103).
 
@@ -75,7 +75,9 @@ LIMIT 20
 """
 
 
-@register("q01_copurchase", oracle=_q01_oracle, tags=("bigbench",))
+@register(
+    "q01_copurchase", oracle=_q01_oracle, tags=("bigbench", "headline", "prepared")
+)
 def q01_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BigBench Q01 analogue (reference examples/queries_devel/q01.jl,
     designed-only: top co-purchased item pairs per ticket via
@@ -171,7 +173,9 @@ GROUP BY o_custkey
 """
 
 
-@register("q05", oracle=_q05_oracle, tags=("bigbench", "headline"))
+@register(
+    "q05", oracle=_q05_oracle, tags=("bigbench", "headline", "prepared", "concurrent")
+)
 def q05(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BigBench Q05 analogue (reference test/q05_test.jl:40-74): sentinel
     not-null filter → clicks ⋈ item → per-user conditional aggregate →
@@ -224,7 +228,9 @@ GROUP BY o_custkey
 """
 
 
-@register("q25", oracle=_q25_oracle, tags=("bigbench", "headline"))
+@register(
+    "q25", oracle=_q25_oracle, tags=("bigbench", "headline", "prepared", "concurrent")
+)
 def q25(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BigBench Q25 core analogue (reference test/length_unique_test.jl:
     9-41): per-customer RFM — frequency = length(unique(ticket)) (exact

@@ -252,7 +252,11 @@ FROM est JOIN ex USING (l_returnflag)
 """
 
 
-@register("hll_distinct_portable", oracle=_hll_oracle, tags=("extended", "sketch"))
+@register(
+    "hll_distinct_portable",
+    oracle=_hll_oracle,
+    tags=("extended", "sketch", "headline", "prepared"),
+)
 def hll_distinct_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HyperLogLog count-distinct built from relational primitives with
     a PORTABLE hash — the hash-gated companion to approx_distinct

@@ -98,7 +98,9 @@ SELECT (SELECT count(DISTINCT x)::BIGINT
 """
 
 
-@register("triangle_count", oracle=_triangle_oracle, tags=("graph",))
+@register(
+    "triangle_count", oracle=_triangle_oracle, tags=("graph", "headline", "prepared")
+)
 def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangle counting on the part co-purchase graph (parts appearing
     in the same order are adjacent) — the standard graph-cohesion

@@ -70,7 +70,15 @@ GROUP BY 1
 """
 
 
-@register("hdf5_ingest_agg", oracle=_h5_oracle, tags=("source", "hdf5"))
+# Not "prepared": the first build stages the HDF5 file eagerly (toPandas
+# and a classic-HDF5 write); later builds hit the memo, so "no I/O
+# during construction" fails only on the first build. Like the streaming
+# and fit queries, the bench rebuilds it every rep.
+@register(
+    "hdf5_ingest_agg",
+    oracle=_h5_oracle,
+    tags=("source", "hdf5", "headline", "not_same_work"),
+)
 def hdf5_ingest_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lineitem → classic HDF5 (column-per-dataset) → ONE distributed
     aligned row-range read of both datasets → aggregate. The reference

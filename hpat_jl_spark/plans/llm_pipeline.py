@@ -65,7 +65,11 @@ GROUP BY g.doc_id
 """
 
 
-@register("benchmark_decontaminate", oracle=_decontaminate_oracle, tags=("text", "dedup"))
+@register(
+    "benchmark_decontaminate",
+    oracle=_decontaminate_oracle,
+    tags=("text", "dedup", "headline", "prepared"),
+)
 def benchmark_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination (GPT-3 appendix C / Llama pretraining
     hygiene): flag training documents that share any word n-gram with a
@@ -474,7 +478,9 @@ def encode_corpus_to_ids(
     )
 
 
-@register("tokenize_to_ids", oracle=_tokenize_oracle, tags=("text",))
+@register(
+    "tokenize_to_ids", oracle=_tokenize_oracle, tags=("text", "headline", "concurrent")
+)
 def tokenize_to_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frequency-ranked vocabulary encode (see encode_corpus_to_ids).
     The 65536-entry cap never binds on the fixture vocabulary, so the
@@ -571,7 +577,7 @@ def pack_sequences(
     )
 
 
-@register("sequence_packing", oracle=_packing_oracle, tags=("text",))
+@register("sequence_packing", oracle=_packing_oracle, tags=("text", "headline"))
 def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequence packing: assign documents to fixed-length (512-token)
     training sequences by contiguous fill in deterministic (source,
@@ -679,7 +685,11 @@ FROM packed
 """
 
 
-@register("corpus_prep_pipeline", oracle=_corpus_prep_oracle, tags=("text", "dedup"))
+@register(
+    "corpus_prep_pipeline",
+    oracle=_corpus_prep_oracle,
+    tags=("text", "dedup", "headline"),
+)
 def corpus_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FLAGSHIP composition: exact dedup → benchmark
     decontamination → tokenize-to-ids → sequence packing as ONE lazy
@@ -753,7 +763,9 @@ FROM cand, unnest(generate_series(1, mult)) AS g(k)
 """
 
 
-@register("fuzzy_name_pairs", oracle=_fuzzy_oracle, tags=("dedup",))
+@register(
+    "fuzzy_name_pairs", oracle=_fuzzy_oracle, tags=("dedup", "headline", "prepared")
+)
 def fuzzy_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Edit-distance similarity self-join (fuzzy entity matching): all
     equal-length name pairs within levenshtein distance 1 — for equal

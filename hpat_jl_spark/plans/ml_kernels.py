@@ -146,7 +146,9 @@ def _km_assign_expr(cents: list[tuple[int, int]]):
     return best
 
 
-@register("kmeans_lloyd_exact", oracle=_km_oracle(), tags=("ml", "iterative"))
+@register(
+    "kmeans_lloyd_exact", oracle=_km_oracle(), tags=("ml", "iterative", "headline")
+)
 def kmeans_lloyd_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed Lloyd k-means with fixed-point centroids, fully
     value-hash-gated (see module comment above). K=4, 3 iterations over

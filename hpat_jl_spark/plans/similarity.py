@@ -53,7 +53,7 @@ FROM ranked WHERE knn_rank <= {_K}
 """
 
 
-@register("knn_bruteforce", oracle=_knn_oracle, tags=("similarity",))
+@register("knn_bruteforce", oracle=_knn_oracle, tags=("similarity", "headline"))
 def knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-k: broadcast the query set, score every
     candidate partition-locally (codegen'd higher-order functions, no
@@ -91,7 +91,11 @@ WHERE cosine_sim > {_NEARDUP_THRESHOLD}
 """
 
 
-@register("embedding_neardup", oracle=_neardup_oracle, tags=("similarity", "dedup"))
+@register(
+    "embedding_neardup",
+    oracle=_neardup_oracle,
+    tags=("similarity", "dedup", "headline", "prepared"),
+)
 def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate pairs, bucketed by label so the
     pair space is bounded (the label plays the role an IVF/LSH bucket
@@ -138,7 +142,7 @@ GROUP BY comp
 @register(
     "embedding_dedup_clusters",
     oracle=_emb_cluster_oracle,
-    tags=("similarity", "dedup", "iterative"),
+    tags=("similarity", "dedup", "iterative", "headline"),
 )
 def embedding_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup (Abbas et al. 2023) shape: embedding-cosine near-dup
@@ -515,7 +519,7 @@ def _ivf_probe_frame(spark: SparkSession, cents, q_rows):
     )
 
 
-@register("knn_ivf_portable", oracle=_ivf_oracle(), tags=("similarity",))
+@register("knn_ivf_portable", oracle=_ivf_oracle(), tags=("similarity", "headline"))
 def knn_ivf_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN with every stage hash-gated (see module comment above):
     integer-projection coarse quantizer fit by fixed-point Lloyd, probe
@@ -569,7 +573,7 @@ def knn_ivf_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("knn_ivf_persisted", oracle=_ivf_oracle(), tags=("similarity",))
+@register("knn_ivf_persisted", oracle=_ivf_oracle(), tags=("similarity", "headline"))
 def knn_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The persisted-index IVF path end-to-end under the SAME oracle as
     knn_ivf_portable (VERDICT r04 #7): fit the portable quantizer,
@@ -674,7 +678,9 @@ FROM ranked WHERE knn_rank <= {_K}
 """
 
 
-@register("knn_lsh", oracle=_knn_lsh_oracle, tags=("similarity",))
+@register(
+    "knn_lsh", oracle=_knn_lsh_oracle, tags=("similarity", "headline", "prepared")
+)
 def knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-k via random-hyperplane LSH bucketing — the
     candidate join shuffles on bucket key instead of cross-joining.
@@ -1034,7 +1040,7 @@ def _pq_project_arrow(emb):
     )
 
 
-@register("knn_pq_portable", oracle=_pq_oracle(), tags=("similarity",))
+@register("knn_pq_portable", oracle=_pq_oracle(), tags=("similarity", "headline"))
 def knn_pq_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN with every stage hash-gated (module
     comment above). K=5 over 8 subspaces × 8 codes (24-bit codes), ADC

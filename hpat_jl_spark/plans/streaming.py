@@ -154,7 +154,11 @@ GROUP BY 1, 2
 """
 
 
-@register("stream_tumbling_counts", oracle=_stream_tumbling_oracle, tags=("streaming",))
+@register(
+    "stream_tumbling_counts",
+    oracle=_stream_tumbling_oracle,
+    tags=("streaming", "headline", "not_same_work"),
+)
 def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour per-event-type counts computed BY THE STREAMING
     ENGINE (state store, micro-batches) over a bounded replay of the

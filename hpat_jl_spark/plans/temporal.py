@@ -25,7 +25,9 @@ ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'view') v
 """
 
 
-@register("asof_join_views", oracle=_asof_oracle, tags=("temporal",))
+@register(
+    "asof_join_views", oracle=_asof_oracle, tags=("temporal", "headline", "prepared")
+)
 def asof_join_views(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Each purchase matched to the user's most recent prior view —
     merge-asof via single shuffle + running last_value window

@@ -50,7 +50,11 @@ FROM stats
 """
 
 
-@register("text_stats", oracle=_text_stats_oracle, tags=("text",))
+@register(
+    "text_stats",
+    oracle=_text_stats_oracle,
+    tags=("text", "headline", "prepared", "concurrent"),
+)
 def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting, quality scoring, language-ID heuristic and
     fingerprinting in one scan — all built-in-function compositions
@@ -234,7 +238,11 @@ GROUP BY 1
 """
 
 
-@register("dedup_exact", oracle=_dedup_exact_oracle, tags=("dedup",))
+@register(
+    "dedup_exact",
+    oracle=_dedup_exact_oracle,
+    tags=("dedup", "headline", "prepared", "concurrent"),
+)
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup by normalized-text md5 — one hash aggregate, the
     canonical first pass of any corpus pipeline. At 100 TB this shuffles
@@ -376,7 +384,9 @@ SELECT id_a AS doc_a, id_b AS doc_b, est_jaccard FROM strong
 """
 
 
-@register("dedup_minhash", oracle=_minhash_oracle, tags=("dedup",))
+@register(
+    "dedup_minhash", oracle=_minhash_oracle, tags=("dedup", "headline", "prepared")
+)
 def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup candidates (shingle → 32 minhashes → 8
     bands → bucket self-join). Fully oracle-gated: the portable md5
@@ -432,7 +442,9 @@ WHERE len(list_filter(range(1, 61), i -> substr(sa, i, 1) <> substr(sb, i, 1))) 
 """
 
 
-@register("dedup_simhash", oracle=_simhash_oracle, tags=("dedup",))
+@register(
+    "dedup_simhash", oracle=_simhash_oracle, tags=("dedup", "headline", "prepared")
+)
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup candidates (60-bit portable signature, 4×15-bit
     bands, Hamming ≤ 3). Fully oracle-gated since r4: the md5-derived
@@ -581,7 +593,9 @@ def incremental_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "bloom_prefilter_ingest", oracle=_incr_dedup_oracle, tags=("text", "dedup")
+    "bloom_prefilter_ingest",
+    oracle=_incr_dedup_oracle,
+    tags=("text", "dedup", "headline", "prepared"),
 )
 def bloom_prefilter_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """incremental_dedup_ingest's documented 100 TB companion made
@@ -673,7 +687,11 @@ def _sig_fanout(spark: SparkSession, sf_dir: str) -> int:
     )
 
 
-@register("duplicate_span_report", oracle=_dup_span_oracle, tags=("text", "dedup"))
+@register(
+    "duplicate_span_report",
+    oracle=_dup_span_oracle,
+    tags=("text", "dedup", "headline", "prepared"),
+)
 def duplicate_span_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-document exact duplicate spans: every FULL 50-token window
     (stride 25) hashed, grouped, kept where ≥ 2 distinct docs share it.
@@ -1035,7 +1053,9 @@ FROM pred WHERE rn = 1 GROUP BY lang, plang
 """
 
 
-@register("lang_id_ngram", oracle=_lang_id_oracle, tags=("text",))
+@register(
+    "lang_id_ngram", oracle=_lang_id_oracle, tags=("text", "headline", "prepared")
+)
 def lang_id_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Character-n-gram language identification (Cavnar-Trenkle 1994
     profile matching, simplified): per-lang character-trigram profiles
@@ -1296,7 +1316,7 @@ def _bpe_train_full_oracle() -> str:
 @register(
     "bpe_encode_trained",
     oracle=_bpe_encode_trained_oracle(64),
-    tags=("text", "ml"),
+    tags=("text", "ml", "headline"),
 )
 def bpe_encode_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train 64 BPE merges on the corpus, then encode the corpus with
@@ -1355,7 +1375,9 @@ def bpe_encode_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("bpe_train_merges", oracle=_bpe_train_full_oracle(), tags=("text", "ml"))
+@register(
+    "bpe_train_merges", oracle=_bpe_train_full_oracle(), tags=("text", "ml", "headline")
+)
 def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE tokenizer TRAINING on the corpus (functions/bpe: distributed
     word count → bounded-vocab driver merge loop — the subword-nmt /
@@ -1425,7 +1447,9 @@ FROM documents d LEFT JOIN agg a USING (doc_id)
 
 
 @register(
-    "bpe_encode_stats", oracle=_bpe_encode_stats_oracle(64), tags=("text", "ml")
+    "bpe_encode_stats",
+    oracle=_bpe_encode_stats_oracle(64),
+    tags=("text", "ml", "headline"),
 )
 def bpe_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Encode the corpus with its own trained BPE merges and report
@@ -1710,7 +1734,11 @@ FROM enc
 """
 
 
-@register("bpe_encode_fixed", oracle=_bpe_fixed_oracle(), tags=("text", "ml"))
+@register(
+    "bpe_encode_fixed",
+    oracle=_bpe_fixed_oracle(),
+    tags=("text", "ml", "headline", "prepared"),
+)
 def bpe_encode_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE-encode the corpus under the frozen 16-merge table (module
     comment above) and report per-doc symbol accounting — the
@@ -1865,7 +1893,9 @@ WHERE 2 * n_inter >= ca.c + cb.c - n_inter
 
 
 @register(
-    "fuzzy_decontaminate", oracle=_fuzzy_decon_oracle, tags=("text", "dedup", "llm")
+    "fuzzy_decontaminate",
+    oracle=_fuzzy_decon_oracle,
+    tags=("text", "dedup", "llm", "headline", "prepared"),
 )
 def fuzzy_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate cross-corpus decontamination (module comment

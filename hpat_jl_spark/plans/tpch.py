@@ -30,7 +30,7 @@ FROM lineitem
 WHERE l_shipdate <= TIMESTAMP '2001-09-02 00:00:00'
 GROUP BY l_returnflag, l_linestatus
 """,
-    tags=("tpch", "headline"),
+    tags=("tpch", "headline", "prepared", "concurrent"),
 )
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 shape: scan-heavy single-pass aggregate. The whole query
@@ -67,7 +67,7 @@ WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
   AND l_discount BETWEEN 0.04 AND 0.06
   AND l_quantity < 24
 """,
-    tags=("tpch", "headline"),
+    tags=("tpch",),
 )
 def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6 shape: pure scan + multi-predicate filter + global sum.
@@ -140,7 +140,7 @@ GROUP BY o_orderkey
 ORDER BY revenue DESC, o_orderkey
 LIMIT 10
 """,
-    tags=("tpch", "headline"),
+    tags=("tpch", "headline", "prepared", "concurrent"),
 )
 def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape: selective dim filter → two joins → agg → global

@@ -82,7 +82,7 @@ WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
   AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
 GROUP BY n_name
 """,
-    tags=("tpch", "headline"),
+    tags=("tpch", "headline", "prepared"),
 )
 def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape: 6-table star join with the extra c_nationkey =
@@ -273,7 +273,7 @@ GROUP BY c_custkey, c_name, c_acctbal, n_name
 ORDER BY revenue DESC, c_custkey
 LIMIT 20
 """,
-    tags=("tpch", "headline"),
+    tags=("tpch", "headline", "prepared"),
 )
 def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10 shape: fact⋈fact shuffle join (orders⋈lineitem on

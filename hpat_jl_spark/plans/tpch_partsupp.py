@@ -142,7 +142,7 @@ FROM (SELECT n_name AS nation, year(o_orderdate) AS o_year,
         AND p_name LIKE '%5%') profit
 GROUP BY nation, o_year
 """,
-    tags=("tpch",),
+    tags=("tpch", "headline", "prepared"),
 )
 def q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q9 shape: profit = revenue minus cost, where cost comes

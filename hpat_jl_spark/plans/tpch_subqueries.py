@@ -184,7 +184,7 @@ GROUP BY s_name
 ORDER BY numwait DESC, s_name
 LIMIT 20
 """,
-    tags=("tpch",),
+    tags=("tpch", "headline", "prepared"),
 )
 def q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q21 shape (adapted: lateness = last-to-ship, since the

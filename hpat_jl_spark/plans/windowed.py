@@ -31,7 +31,7 @@ SELECT event_id, user_id,
                               ROWS UNBOUNDED PRECEDING), 4) AS running_value
 FROM events
 """,
-    tags=("window",),
+    tags=("window", "headline", "prepared"),
 )
 def cumsum_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed prefix sum (reference dist_cumsum!: local sum →
@@ -171,7 +171,7 @@ SELECT user_id, session_id,
 FROM numbered
 GROUP BY user_id, session_id
 """,
-    tags=("window", "sessionization"),
+    tags=("window", "sessionization", "headline", "prepared", "concurrent"),
 )
 def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization — the reference's *designed but dead*

@@ -14,7 +14,7 @@ Everything they share is decided here, once:
   in-process status stores: no UI, no REST;
 * ``splice_block`` -- the one rule for writing a generated table into a
   Markdown artifact. Generators own only their fenced tables; the prose
-  around them lives in the artifact.
+  around them lives in the artifact. ``read_block`` reads a table back.
 """
 
 from __future__ import annotations
@@ -446,6 +446,14 @@ def splice_block(path: str, name: str, lines: list[str]) -> None:
         text = text[:s] + body + text[e:]
     with open(path, "w") as fh:
         fh.write(text)
+
+
+def read_block(path: str, name: str) -> list[str]:
+    """The lines between a block's fences: the inverse of ``splice_block``."""
+    with open(path) as fh:
+        text = fh.read()
+    body = text.split(f"<!-- {name}:BEGIN", 1)[1].split(f"<!-- {name}:END -->", 1)[0]
+    return body.split("\n")[1:-1]
 
 
 def fmt_bytes(n: int) -> str:

@@ -249,24 +249,50 @@ def _skew_probe(spark, big_dir: str) -> dict:
     return {"off": times["false"], "on": times["true"], "marker": marker}
 
 
+TIER10, TIER100 = f"sf0.1x{REPLICAS}", f"sf0.1x{REPLICAS_X100}"
+SCALING_MD = os.path.join(probe.REPO, "SCALING.md")
+
+
+def tier_records(results: dict[str, dict[str, float]]) -> list[dict]:
+    """One record per query, as BENCH_DETAIL.json's ``scaling_tiers``
+    and the TIERS table carry them; ×100 fields only where measured."""
+    out = []
+    for name, r in results.items():
+        rec = {"query": name, "sf0.01_s": r["sf0.01"], "sf0.1_s": r["sf0.1"],
+               "x10_s": r[TIER10],
+               "growth_x10": round(r[TIER10] / max(r["sf0.1"], 1e-9), 1)}
+        if TIER100 in r:
+            rec["x100_s"] = r[TIER100]
+            rec["growth_x100"] = round(r[TIER100] / max(r[TIER10], 1e-9), 1)
+        out.append(rec)
+    return out
+
+
 def render_tiers(results: dict[str, dict[str, float]]) -> list[str]:
-    tier10, tier100 = f"sf0.1x{REPLICAS}", f"sf0.1x{REPLICAS_X100}"
     lines = [
         "| query | sf0.01 (s) | sf0.1 (s) | ×10 (s) | sf0.1→×10 growth | ×100 (s) | ×10→×100 growth |",
         "|---|---|---|---|---|---|---|",
     ]
-    for name, r in results.items():
-        growth = round(r[tier10] / max(r["sf0.1"], 1e-9), 1)
-        if tier100 in r:
-            g100 = round(r[tier100] / max(r[tier10], 1e-9), 1)
-            x100_cells = f" {r[tier100]} | {g100}× |"
-        else:
-            x100_cells = " — | — |"
-        lines.append(
-            f"| {name} | {r['sf0.01']} | {r['sf0.1']} | {r[tier10]} | {growth}× |"
-            + x100_cells
-        )
+    for rec in tier_records(results):
+        x100 = (f" {rec['x100_s']} | {rec['growth_x100']}× |" if "x100_s" in rec
+                else " — | — |")
+        lines.append(f"| {rec['query']} | {rec['sf0.01_s']} | {rec['sf0.1_s']} "
+                     f"| {rec['x10_s']} | {rec['growth_x10']}× |" + x100)
     return lines
+
+
+def read_tiers(path: str = SCALING_MD) -> dict[str, dict[str, float]]:
+    """The TIERS block of ``path`` back as the timings ``render_tiers``
+    took: the one reader of SCALING.md's tier table."""
+    results = {}
+    for ln in probe.read_block(path, "TIERS")[2:]:
+        cells = [c.strip() for c in ln.strip("|").split("|")]
+        r = {"sf0.01": float(cells[1]), "sf0.1": float(cells[2]),
+             TIER10: float(cells[3])}
+        if cells[5] != "—":
+            r[TIER100] = float(cells[5])
+        results[cells[0]] = r
+    return results
 
 
 def render_skew(skew: dict) -> list[str]:
@@ -297,9 +323,9 @@ def _child(name: str) -> dict:
         spark.sparkContext.setLogLevel("OFF")
         spark.stop()
         return skew
-    tiers = [("sf0.01", SF001), ("sf0.1", SF01), (f"sf0.1x{REPLICAS}", STAGE_X10)]
+    tiers = [("sf0.01", SF001), ("sf0.1", SF01), (TIER10, STAGE_X10)]
     if name in X100_QUERIES:
-        tiers.append((f"sf0.1x{REPLICAS_X100}", STAGE_X100))
+        tiers.append((TIER100, STAGE_X100))
     cell = probe.time_cell(name, tiers)
     return {"name": name, "timings": {t: runs[0]["wall_s"] for t, runs in cell.items()}}
 
@@ -314,9 +340,8 @@ def _run(name: str) -> dict:
 def main() -> None:
     _ensure_staged(restage="--restage" in sys.argv)
     results = {name: _run(name)["timings"] for name in QUERIES}
-    path = os.path.join(probe.REPO, "SCALING.md")
-    probe.splice_block(path, "TIERS", render_tiers(results))
-    probe.splice_block(path, "SKEW", render_skew(_run("_skew")))
+    probe.splice_block(SCALING_MD, "TIERS", render_tiers(results))
+    probe.splice_block(SCALING_MD, "SKEW", render_skew(_run("_skew")))
     print("wrote SCALING.md")
 
 

@@ -166,9 +166,9 @@ def run_saturation() -> None:
 
 
 def main() -> None:
-    import bench  # repo-root bench.py: the canonical headline list
+    from hpat_jl_spark import registry
 
-    names = list(bench.HEADLINE)
+    names = registry.tagged("headline")
     args = [a for a in sys.argv[1:] if not a.startswith("-")]
     if "--saturation" in sys.argv:
         run_saturation()

@@ -257,30 +257,39 @@ def _results(cells: dict, names: list[str]) -> dict[str, dict[int, tuple]]:
     return rows
 
 
-def _table(results: dict[str, dict[int, tuple]]) -> list[str]:
+def of_ceiling(results: dict[str, dict[int, tuple]], name: str) -> float:
+    """``name``'s 4→32 speedup as a fraction of the machine's pure-compute
+    speedup over the same thread counts. Each endpoint cell is normalized
+    against ITS run's calibration (legacy cells without a snapshot use
+    the persisted row)."""
     base, top = CORES[0], CORES[-1]
-    calib = {c: v[0] for c, v in results[_CALIBRATION].items()}
+    calib, r = results[_CALIBRATION], results[name]
+    norm_b = r[base][0] / (r[base][1] or calib[base][0])
+    norm_t = r[top][0] / (r[top][1] or calib[top][0])
+    return round(norm_b / max(norm_t, 1e-9), 2)
+
+
+def _table(results: dict[str, dict[int, tuple]]) -> list[str]:
     lines = [
         "| query | local[4] (s) | local[8] (s) | local[16] (s) | local[32] (s) | speedup 4→32 | of ceiling |",
         "|---|---|---|---|---|---|---|",
     ]
     for name, r in results.items():
-        sp = r[base][0] / max(r[top][0], 1e-9)
-        label = "machine ceiling (pure compute)" if name == _CALIBRATION else name
+        sp = r[CORES[0]][0] / max(r[CORES[-1]][0], 1e-9)
         if name == _CALIBRATION:
-            of_ceiling = "—"
+            label, oc = "machine ceiling (pure compute)", "—"
         else:
-            # normalize each endpoint cell against ITS run's calibration
-            # (legacy cells without a snapshot use the persisted row)
-            norm_b = r[base][0] / (r[base][1] or calib[base])
-            norm_t = r[top][0] / (r[top][1] or calib[top])
-            of_ceiling = f"{norm_b / max(norm_t, 1e-9):.2f}"
+            label, oc = name, f"{of_ceiling(results, name):.2f}"
         lines.append(
             "| " + label + " | "
             + " | ".join(f"{r[c][0]}" for c in CORES)
-            + f" | {sp:.1f}× | {of_ceiling} |"
+            + f" | {sp:.1f}× | {oc} |"
         )
     return lines
+
+
+# (CORES.json tier, queries, CORES.md fence)
+TIERS = (("x10", QUERIES, "CORES_X10"), ("x100", X100_SET, "CORES_X100"))
 
 
 def main() -> None:
@@ -288,8 +297,7 @@ def main() -> None:
         spark, d, REPLICAS, files=_SPLIT_FILES)})
     _ensure_staged()  # the ×100 table reads the scaling probe's tier
     path = os.path.join(REPO, "CORES.md")
-    for tier, names, fence in (("x10", QUERIES, "CORES_X10"),
-                               ("x100", X100_SET, "CORES_X100")):
+    for tier, names, fence in TIERS:
         _sweep(names, tier)
         probe.splice_block(path, fence, _table(_results(_load_cores_json()[tier], names)))
     print("wrote CORES.md")

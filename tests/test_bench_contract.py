@@ -1,14 +1,19 @@
-"""Contract tests for bench.py's prepared-plan timing (VERDICT r06 #1).
+"""Contract tests for bench.py's query roles and prepared-plan timing
+(VERDICT r06 #1).
 
-bench.PREPARED queries are timed as build-once / execute-per-rep, which
-is only honest if fn() is a PURE plan builder: no Spark jobs, no writes,
-no driver-side fits during construction. These tests pin that contract
-so a future rewrite that adds an eager fit to a PREPARED query fails
-loudly instead of silently being under-timed.
+A query's bench role is a tag on its registration (``registry.tagged``).
+``prepared`` queries are timed as build-once / execute-per-rep, which is
+only honest if fn() is a PURE plan builder: no Spark jobs, no writes, no
+driver-side fits during construction. These tests pin that contract so
+a future rewrite that adds an eager fit to a prepared query fails loudly
+instead of silently being under-timed, and pin the tags to the
+committed bench artifacts.
 """
 
 from __future__ import annotations
 
+import json
+import os
 import sys
 
 import pytest
@@ -19,17 +24,37 @@ import bench  # noqa: E402
 from hpat_jl_spark import registry  # noqa: E402
 
 SF_SMOKE = "/root/testdata/sf0.001"
+ROOT = os.path.dirname(os.path.abspath(bench.__file__))
+
+
+def _artifact(name: str) -> dict:
+    with open(os.path.join(ROOT, name)) as fh:
+        return json.load(fh)
 
 
 def test_prepared_is_subset_of_headline_and_registry():
-    qs = registry.queries()
-    assert bench.PREPARED <= set(bench.HEADLINE)
-    assert bench.PREPARED <= set(qs)
+    headline = set(registry.tagged("headline"))
+    assert headline <= set(registry.queries())
+    for role in ("prepared", "not_same_work", "concurrent"):
+        assert set(registry.tagged(role)) <= headline, role
 
 
-@pytest.mark.parametrize("name", sorted(bench.PREPARED))
+def test_role_tags_match_committed_artifacts():
+    """The tags name exactly the queries the committed bench artifacts
+    were cut from; ``concurrent`` keeps its 8-query mix."""
+    detail = _artifact("BENCH_DETAIL.json")
+    headline = set(registry.tagged("headline"))
+    assert len(headline) == 42
+    assert headline == set(detail["queries"])
+    assert headline == set(_artifact("BENCH_BANDS.json")["bands"])
+    assert set(registry.tagged("prepared")) == set(detail["plan_build"])
+    assert set(registry.tagged("not_same_work")) == set(detail["not_same_work"])
+    assert len(registry.tagged("concurrent")) == 8
+
+
+@pytest.mark.parametrize("name", sorted(registry.tagged("prepared")))
 def test_prepared_builds_run_no_jobs(spark, name):
-    """Every PREPARED fn must construct its DataFrame without launching
+    """Every prepared fn must construct its DataFrame without launching
     a single Spark job (first call may resolve tables — warm that up —
     the contract is on the steady-state build the bench reps rely on).
     """
@@ -42,7 +67,7 @@ def test_prepared_builds_run_no_jobs(spark, name):
     after = set(tracker.getJobIdsForGroup(None) or [])
     assert after == before, (
         f"{name} launched {sorted(after - before)} Spark job(s) during "
-        "plan construction — remove it from bench.PREPARED or make the "
+        "plan construction — drop its \"prepared\" tag or make the "
         "builder lazy"
     )
 
@@ -127,17 +152,14 @@ def test_band_notes_match_generator():
     constant byte for byte, and the file ends with one newline, so a
     regeneration leaves no spurious diff in either."""
     import importlib.util
-    import json
-    import os
 
-    root = os.path.dirname(os.path.abspath(bench.__file__))
     spec = importlib.util.spec_from_file_location(
-        "make_bench_bands", os.path.join(root, "scripts", "make_bench_bands.py")
+        "make_bench_bands", os.path.join(ROOT, "scripts", "make_bench_bands.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     assert all(v.isascii() for v in mod.BAND_NOTES.values())
-    with open(os.path.join(root, "BENCH_BANDS.json"), "rb") as fh:
+    with open(os.path.join(ROOT, "BENCH_BANDS.json"), "rb") as fh:
         raw = fh.read()
     assert raw.endswith(b"}\n") and not raw.endswith(b"\n\n")
     assert json.loads(raw)["notes"] == mod.BAND_NOTES
