@@ -6,8 +6,9 @@ on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line: {"metric": ...,
 "value": N, "unit": "sec", "queries": {...}, "sf": ...}.
 
 Each query executes end-to-end via the noop writer (full compute, no
-driver materialization). A tiny warmup query first, so JVM/codegen
-startup isn't billed to the first headline query.
+driver materialization). A warmup first (``_warmup``: codegen, every
+fixture table's resolution, a few non-headline TPC-H queries), so
+session first-use costs are not billed to the first headline query.
 
 VERDICT r01 #8: BASELINE.md commits no absolute reference timings, so
 "within 2× of baseline" was unfalsifiable. The bench therefore also
@@ -26,6 +27,7 @@ is stopped first so shutdown noise cannot follow it).
 
 from __future__ import annotations
 
+import inspect
 import json
 import os
 import sys
@@ -271,6 +273,39 @@ def _merge_heal_results(
     return self_heal
 
 
+# Non-headline TPC-H shapes (aggregate shuffles, shuffle and broadcast
+# joins) the warmup runs a few times each: the first headline query
+# otherwise pays for a cold JIT of Catalyst and the operators. q26 run
+# first against q26 in 7th place (sf0.01, 4-core Xeon VM): after one
+# run of one simple query it built in 0.58-0.62 s against 0.18-0.25 s;
+# after these it builds in 0.19-0.22 s against 0.15-0.16 s and
+# executes in 0.25-0.29 s against 0.19-0.24 s.
+WARMUP_QUERIES = (
+    "q18_large_orders",
+    "q4_order_priority",
+    "q12_priority_lateness",
+    "q14_promo_revenue",
+)
+
+
+def _warmup(spark, sf_dir: str) -> None:
+    """Pay the session's first-use costs before anything is timed, so
+    the first headline query (and the first to touch each table) does
+    not: codegen, every fixture table's resolution and footer reads,
+    and the WARMUP_QUERIES, each built through its raw builder."""
+    from hpat_jl_spark.tables import load_tables
+
+    spark.range(1000).selectExpr("sum(id)").collect()
+    try:
+        load_tables(spark, sf_dir)
+        for name in WARMUP_QUERIES:
+            df = inspect.unwrap(registry.REGISTRY[name].fn)(spark, sf_dir)
+            for _ in range(3):
+                df.write.format("noop").mode("overwrite").save()
+    except Exception as exc:
+        print(f"# warmup failed (continuing): {exc}", file=sys.stderr)
+
+
 def _run_spark_queries(
     spark, qs: dict, names: list[str], reps: int, sf_dir: str
 ) -> tuple[dict, dict, dict, dict]:
@@ -294,7 +329,9 @@ def _run_spark_queries(
         if "prepared" in registry.REGISTRY[name].tags:  # build once, time runs
             t0 = time.perf_counter()
             try:
-                df = fn(spark, sf_dir)
+                # the raw builder: a plan the registry kept from an
+                # earlier call in this session would time as a ~0 s build
+                df = inspect.unwrap(fn)(spark, sf_dir)
                 plan_build[name] = round(time.perf_counter() - t0, 3)
             except Exception as exc:
                 errors[name] = f"{type(exc).__name__}: {exc}"[:500]
@@ -498,12 +535,7 @@ def main() -> None:
     qs = registry.queries()
     headline = registry.tagged("headline")
 
-    # warmup: session + codegen + parquet footer reads
-    spark.range(1000).selectExpr("sum(id)").collect()
-    try:
-        qs["filter_select"](spark, sf_dir).write.format("noop").mode("overwrite").save()
-    except Exception as exc:
-        print(f"# warmup failed (continuing): {exc}", file=sys.stderr)
+    _warmup(spark, sf_dir)
 
     # Box-day compute yardstick (r12, see _CAL_DEGRADED_HI): measured
     # only where bands apply (sf0.1) — it costs ~15 s of pure compute.

@@ -10,6 +10,8 @@ every computed column is aliased identically on both sides.
 
 from __future__ import annotations
 
+import functools
+import os
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -34,6 +36,41 @@ class QuerySpec:
 
 
 REGISTRY: dict[str, QuerySpec] = {}
+
+# (raw builder, realpath(sf_dir)) -> (session, its SQL conf after the
+# build, analyzed plan), for the builders of ``prepared`` queries.
+_PLAN_CACHE: dict[tuple[QueryFn, str], tuple[SparkSession, object, object]] = {}
+
+
+def _plans_once(fn: QueryFn) -> QueryFn:
+    """``fn`` that builds once per (session, input dir, SQL conf) and
+    afterwards hands out a new Dataset over the kept analyzed plan.
+    Never the built Dataset itself: one Dataset shares one
+    QueryExecution, so a second run of it reuses the first run's
+    shuffle output."""
+
+    @functools.wraps(fn)
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        key = (fn, os.path.realpath(sf_dir))
+        jspark = spark._jsparkSession
+        hit = _PLAN_CACHE.get(key)
+        if hit is not None and hit[0] is spark and hit[1].equals(jspark.conf().getAll()):
+            dataset = spark._jvm.org.apache.spark.sql.classic.Dataset
+            return DataFrame(dataset.ofRows(jspark, hit[2]), spark)
+        df = fn(spark, sf_dir)
+        # read after the build: the first load_table of a session sets
+        # two confs
+        conf = jspark.conf().getAll()
+        plan = df._jdf.logicalPlan()
+        cached = jspark.sharedState().cacheManager().useCachedData(plan)
+        if cached.fastEquals(plan):
+            _PLAN_CACHE[key] = (spark, conf, plan)
+        else:  # the build persisted a fragment; a later clearCache
+            # would leave a kept plan recomputing it
+            _PLAN_CACHE.pop(key, None)
+        return df
+
+    return build
 
 
 def tagged(tag: str) -> list[str]:
@@ -60,6 +97,18 @@ def tagged(tag: str) -> list[str]:
         fn() works eagerly (streaming replays, driver-side fits, index
         writes, ingest staging) is rebuilt every rep: its construction
         is part of the query.
+
+        The engine holds the same contract: ``REGISTRY[name].fn`` of a
+        prepared query builds once per (session, input dir, SQL conf)
+        and keeps the analyzed plan; every later call with the same
+        three gets a new Dataset over it (its own QueryExecution, so
+        nothing of an earlier run is reused). Another session, a
+        changed conf or another input dir rebuilds and replaces the
+        entry, ``tables.invalidate_table_cache()`` drops them all, and
+        a build that registers a cache entry (``.persist()``) is never
+        kept. ``inspect.unwrap(REGISTRY[name].fn)`` is the raw builder
+        for a timed or otherwise fresh build; ``register`` returns it,
+        so module-level names stay uncached.
     ``not_same_work``
         a vs-DuckDB ratio is a baseline only when the oracle does the
         same work as the Spark plan. These oracles are correctness
@@ -87,13 +136,19 @@ def register(
     tags: tuple[str, ...] = (),
     float_tol: tuple[str, ...] = (),
 ):
-    """Decorator: register a (spark, sf_dir) -> DataFrame query plan."""
+    """Decorator: register a (spark, sf_dir) -> DataFrame query plan.
+    A ``prepared`` builder is registered behind ``_plans_once``; the
+    decorator returns the raw builder either way."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")
         REGISTRY[name] = QuerySpec(
-            name=name, fn=fn, oracle=oracle, tags=tags, float_tol=float_tol
+            name=name,
+            fn=_plans_once(fn) if "prepared" in tags else fn,
+            oracle=oracle,
+            tags=tags,
+            float_tol=float_tol,
         )
         return fn
 

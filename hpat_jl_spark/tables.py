@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from hpat_jl_spark.registry import _PLAN_CACHE
 from hpat_jl_spark.session import (
     _SCAN_LISTING_CACHE,
     scan_split_count,
@@ -163,10 +164,12 @@ _TABLE_CACHE: dict[tuple[str, str], tuple[SparkSession, DataFrame]] = {}
 
 
 def invalidate_table_cache() -> None:
-    """Forget every resolved table and every scan listing: both caches
-    assume a path's files never change, so they are dropped together."""
+    """Forget every resolved table, every scan listing and every kept
+    prepared plan (``registry._plans_once``): all three assume a path's
+    files never change, so they are dropped together."""
     _TABLE_CACHE.clear()
     _SCAN_LISTING_CACHE.clear()
+    _PLAN_CACHE.clear()
 
 
 def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:

@@ -12,6 +12,7 @@ adding queries:
 
 from __future__ import annotations
 
+import inspect
 import sys
 
 sys.path.insert(0, ".")
@@ -36,9 +37,12 @@ def main() -> int:
             # any query whose output flows through a persisted fragment
             # would trivially "agree" by reading run a's cached blocks
             # instead of re-executing — exactly the nondeterminism this
-            # sweep exists to catch.
+            # sweep exists to catch. Run b also goes through the raw
+            # builder: fn of a ``prepared`` query would hand back run
+            # a's kept plan and hide a builder that is nondeterministic
+            # at build time.
             spark.catalog.clearCache()
-            b = fn(spark, SF).toPandas()
+            b = inspect.unwrap(fn)(spark, SF).toPandas()
             spark.catalog.clearCache()
         except Exception as exc:  # noqa: BLE001
             bad.append((name, [f"raised: {exc}"]))

@@ -19,6 +19,7 @@ Everything they share is decided here, once:
 
 from __future__ import annotations
 
+import inspect
 import json
 import os
 import shutil
@@ -220,7 +221,7 @@ def time_cell(name: str, tiers: list[tuple[str, str]], reps: dict | None = None,
 
     spark = get_spark(app_name=f"probe-{name}", shuffle_partitions=128, extra_conf=extra_conf)
     registry.load_all_plans()
-    fn = registry.REGISTRY[name].fn
+    fn = inspect.unwrap(registry.REGISTRY[name].fn)  # each wall includes the build
     run_noop(fn(spark, SF001))
     spark.catalog.clearCache()
     out: dict[str, list[dict]] = {}
