@@ -25,7 +25,9 @@ import tempfile
 import threading
 import uuid
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql import functions as F
 
 from hpat_jl_spark.registry import register
@@ -95,10 +97,91 @@ def _stage_events_dir(sf_dir: str, copies: int = 1) -> str:
     return d
 
 
-# Serializes the shuffle-partition override in _run_to_memory, so two
-# replays started from different threads cannot restore each other's
-# narrowed width as the session's value.
-_STATE_WIDTH_LOCK = threading.Lock()
+# Spark's checkpoint manager over Hadoop's FileSystem API. Spark's
+# default, the FileContext-based manager, checks renames and existence
+# with getFileLinkStatus, which Hadoop's RawLocalFileSystem answers
+# without the native library by forking `readlink`.
+_FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+_WIDTH_KEY = "spark.sql.shuffle.partitions"
+
+# Serializes the conf overrides in _start_bounded, so two replays
+# started from different threads cannot restore each other's overrides
+# as the session's values.
+_START_LOCK = threading.Lock()
+
+# how long _start_bounded waits for the stream thread to initialize
+_INIT_TIMEOUT_MS = 60_000
+
+
+def _start_bounded(
+    spark: SparkSession, writer: DataStreamWriter, source_dir: str | None = None
+) -> StreamingQuery:
+    """Start a bounded replay: a stream with a fresh temporary checkpoint
+    (no ``checkpointLocation``) that runs to completion. Two session
+    confs are set from just before ``writer.start()`` until the stream
+    thread has initialized the query (``awaitInitialization``), then
+    restored, or unset again, in ``finally``. The query keeps both for
+    its life (it clones the session conf and creates its logs in that
+    window), so neither reaches the caller. Waiting for initialization
+    matters: the stream thread builds the file source's ``sources/0``
+    log from the caller's session after ``start()`` returns, and a
+    restore right after ``start()`` gave that log the default manager
+    in 5 of 8 ``stream_foreach_batch_upsert`` calls.
+
+    - The checkpoint manager is ``FileSystemBasedCheckpointFileManager``
+      unless the session already names one. Spark's default manager
+      makes Hadoop's local filesystem fork ``readlink`` twice for each
+      checkpoint path it renames or checks: 64 of the 89 processes a
+      ``stream_tumbling_counts`` replay forked, ~3.5 ms each on a 4-core
+      Xeon VM. A temporary checkpoint is a fresh local directory with
+      one writer, so a plain ``File.renameTo`` is all it needs; the
+      ``.crc`` sidecars and the state store checksums stay. The 25
+      ``chmod`` forks that remain (``RawLocalFileSystem.setPermission``
+      on each file, sidecar and directory) need the native Hadoop
+      library to go.
+    - With ``source_dir`` (the directory the stream reads) the query
+      also starts with ``min(spark.sql.shuffle.partitions,
+      scan_split_count(source_dir))`` state partitions. AQE is off for
+      stateful streams, so the shuffle setting is an exact fan-out, not
+      a ceiling: a one-row-group replay would otherwise pay for 8-32
+      state-store tasks that each mostly wait on checkpoint file I/O.
+      A split-rich input at scale gets back the full setting. Leave it
+      out where the width would change other plans (foreachBatch
+      bodies run without AQE too).
+
+    A stream with a persistent checkpoint must not start here: its
+    state width is fixed by the checkpoint, and the checkpoint may sit
+    on HDFS or an object store, where the default manager's atomic
+    rename matters."""
+    overrides = {}
+    with _START_LOCK:
+        if spark.conf.get(_MANAGER_KEY, None) is None:
+            overrides[_MANAGER_KEY] = _FS_CHECKPOINT_MANAGER
+        if source_dir is not None:
+            width = min(
+                int(spark.conf.get(_WIDTH_KEY)), scan_split_count(spark, source_dir)
+            )
+            overrides[_WIDTH_KEY] = str(width)
+        prev = {key: spark.conf.get(key, None) for key in overrides}
+        try:
+            for key, value in overrides.items():
+                spark.conf.set(key, value)
+            q = writer.start()
+            try:
+                q._jsq.streamingQuery().awaitInitialization(_INIT_TIMEOUT_MS)
+            except Py4JJavaError:
+                pass  # the query died; awaitTermination raises its error
+            return q
+        finally:
+            for key, value in prev.items():
+                if value is None:
+                    spark.conf.unset(key)
+                else:
+                    spark.conf.set(key, value)
 
 
 def _run_to_memory(
@@ -109,20 +192,10 @@ def _run_to_memory(
     Unique names: the determinism sweep runs every query twice.
 
     ``source_dir`` is the directory the stream reads (the one
-    ``_stage_events_dir`` returned). The query starts with
-    ``min(spark.sql.shuffle.partitions, scan_split_count(source_dir))``
-    state partitions. AQE is off for stateful streams, so the shuffle
-    setting is an exact fan-out, not a ceiling: a one-row-group replay
-    would otherwise pay for 8-32 state-store tasks that each mostly
-    wait on checkpoint file I/O (174-230 ms per task on 18-31 ms of
-    CPU on a 4-core Xeon VM; CLAUDE.md's streaming-state trap has the
-    breakdown). The conf is set only around ``.start()`` and restored in
-    ``finally``: the query clones the session conf when it starts and
-    keeps its width for its life, and each call gets a fresh temporary
-    checkpoint, so the width is never persisted and never reaches the
-    caller. A split-rich input at scale gets back the full setting.
-    Streams with a persistent checkpoint must not use this: their
-    state width is fixed by the checkpoint."""
+    ``_stage_events_dir`` returned); ``_start_bounded`` narrows the
+    state width to its splits. The sink's temp view is dropped once the
+    returned DataFrame is analyzed: the DataFrame keeps the sink's rows,
+    and the session's catalog does not grow by one view per call."""
     spark = stream_df.sparkSession
     sink = f"{prefix}_{uuid.uuid4().hex[:12]}"
     writer = (
@@ -131,17 +204,10 @@ def _run_to_memory(
         .outputMode(mode)
         .trigger(availableNow=True)
     )
-    key = "spark.sql.shuffle.partitions"
-    with _STATE_WIDTH_LOCK:
-        prev = spark.conf.get(key)
-        width = min(int(prev), scan_split_count(spark, source_dir))
-        spark.conf.set(key, str(width))
-        try:
-            q = writer.start()
-        finally:
-            spark.conf.set(key, prev)
-    q.awaitTermination()
-    return spark.table(sink)
+    _start_bounded(spark, writer, source_dir).awaitTermination()
+    out = spark.table(sink)
+    spark.catalog.dropTempView(sink)
+    return out
 
 
 _stream_tumbling_oracle = """
@@ -475,12 +541,8 @@ def stream_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         latest.write.mode("overwrite").parquet(new_dir)
         state["dir"] = new_dir
 
-    q = (
-        ev.writeStream.foreachBatch(upsert)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    writer = ev.writeStream.foreachBatch(upsert).trigger(availableNow=True)
+    _start_bounded(spark, writer).awaitTermination()
     return spark.read.parquet(state["dir"]).select(
         "user_id",
         F.col("s.event_id").alias("last_event_id"),

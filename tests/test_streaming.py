@@ -19,6 +19,7 @@ from hpat_jl_spark.streaming.windows import sessionize_stream, tumbling_counts
 from hpat_jl_spark.tables import load_table
 
 SF = "/root/testdata/sf0.001"
+MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
 
 
 @pytest.fixture(scope="module")
@@ -495,19 +496,71 @@ def test_bounded_replay_state_width_follows_input_splits(
 
 def test_bounded_replay_restores_shuffle_conf_when_start_fails(spark, events_dir):
     """Append mode on an aggregation without a watermark fails in
-    .start(); the narrowed shuffle setting must not outlive it."""
+    .start(); neither the narrowed shuffle setting nor the checkpoint
+    manager may outlive it."""
     from pyspark.errors import AnalysisException
 
     from hpat_jl_spark.plans.streaming import _run_to_memory
 
     key = "spark.sql.shuffle.partitions"
     before = spark.conf.get(key)
+    assert spark.conf.get(MANAGER_KEY, None) is None
     agg = stream_events(spark, events_dir).groupBy("event_type").count()
     with pytest.raises(AnalysisException):
         _run_to_memory(
             agg, mode="append", prefix="no_watermark", source_dir=events_dir
         )
     assert spark.conf.get(key) == before
+    assert spark.conf.get(MANAGER_KEY, None) is None
+
+
+@pytest.mark.parametrize(
+    "callers, used",
+    [
+        (None, "FileSystemBasedCheckpointFileManager"),
+        ("FileContextBasedCheckpointFileManager", "FileContextBasedCheckpointFileManager"),
+    ],
+)
+def test_bounded_replay_checkpoint_manager(spark, events_dir, callers, used):
+    """A bounded replay checkpoints through Hadoop's FileSystem API
+    unless the session names its own manager; either way the session's
+    setting is the same after the call."""
+    from hpat_jl_spark.plans.streaming import _start_bounded
+
+    package = "org.apache.spark.sql.execution.streaming.checkpointing."
+    if callers:
+        spark.conf.set(MANAGER_KEY, package + callers)
+    sink = f"manager_{used}"
+    try:
+        writer = (
+            stream_events(spark, events_dir).groupBy("event_type").count()
+            .writeStream.format("memory")
+            .queryName(sink)
+            .outputMode("complete")
+            .trigger(availableNow=True)
+        )
+        q = _start_bounded(spark, writer, events_dir)
+        q.awaitTermination(120)
+        manager = q._jsq.streamingQuery().offsetLog().fileManager()
+        assert manager.getClass().getName() == package + used
+        assert spark.conf.get(MANAGER_KEY, None) == (callers and package + callers)
+    finally:
+        spark.conf.unset(MANAGER_KEY)
+        spark.catalog.dropTempView(sink)
+
+
+def test_bounded_replay_drops_its_memory_sink_view(spark):
+    """Each replay's memory sink is a temp view; the returned DataFrame
+    keeps the rows, so the view is dropped and the catalog does not grow
+    call by call."""
+    from hpat_jl_spark import registry
+    from hpat_jl_spark.testing import check_query
+
+    before = sorted(t.name for t in spark.catalog.listTables())
+    for _ in range(3):
+        registry.queries()["stream_tumbling_counts"](spark, SF).collect()
+    assert sorted(t.name for t in spark.catalog.listTables()) == before
+    assert check_query(spark, "stream_tumbling_counts", SF) == []
 
 
 def test_stream_query_on_relative_sf_dir(spark, monkeypatch):
