@@ -119,13 +119,10 @@ def q01_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     holding parts [5,5,7] emits (5,7) twice and never (5,5). Output is
     bounded by Σ_orders k²: ~7 lines/order in TPC-H-like data keeps the
     pair stream linear in the corpus (SCALING.md q01 rows)."""
-    from hpat_jl_spark.session import sized_shuffle_partitions
+    from hpat_jl_spark.session import pinned_width
 
     li = load_table(spark, "lineitem", sf_dir).select("l_orderkey", "l_partkey")
-    width = max(
-        spark.sparkContext.defaultParallelism,
-        sized_shuffle_partitions(sf_dir),
-    )
+    width = pinned_width(spark, sf_dir)
     d = li.repartition(width, "l_orderkey")
     b = d.select(
         F.col("l_orderkey").alias("b_orderkey"),

@@ -145,11 +145,8 @@ GROUP BY GROUPING SETS ((l_returnflag), (o_orderpriority))
 def grouping_sets_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS (neither rollup nor cube): totals by flag
     and, separately, by priority, in one pass over the join."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    li_path = f"{sf_dir}/lineitem.parquet"
-    o_path = f"{sf_dir}/orders.parquet"
-    spark.read.parquet(li_path).createOrReplaceTempView("__gs_lineitem")
-    spark.read.parquet(o_path).createOrReplaceTempView("__gs_orders")
+    load_table(spark, "lineitem", sf_dir).createOrReplaceTempView("__gs_lineitem")
+    load_table(spark, "orders", sf_dir).createOrReplaceTempView("__gs_orders")
     return spark.sql(
         """
         SELECT coalesce(l_returnflag, '(all)') AS flag,

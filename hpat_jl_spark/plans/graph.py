@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hpat_jl_spark.registry import register
-from hpat_jl_spark.session import sized_shuffle_partitions
+from hpat_jl_spark.session import pinned_width
 from hpat_jl_spark.tables import load_table
 
 
@@ -44,10 +44,7 @@ def _graph_width(spark: SparkSession, sf_dir: str) -> int:
     graph-family number in CAPACITY.md: Θ(wedges) array bytes in
     flight need ~0.25 GB/core headroom at this tier regardless of
     exchange width."""
-    return max(
-        spark.sparkContext.defaultParallelism,
-        sized_shuffle_partitions(sf_dir, per_core_cap=16),
-    )
+    return pinned_width(spark, sf_dir, per_core_cap=16)
 
 
 def _copurchase_pairs(li: DataFrame) -> DataFrame:

@@ -9,10 +9,8 @@ gate, not just unit goldens.
 
 from __future__ import annotations
 
-import atexit
 import os
-import shutil
-import tempfile
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -20,45 +18,31 @@ from pyspark.sql import functions as F
 from hpat_jl_spark.registry import register
 from hpat_jl_spark.sources.hdf5 import write_hdf5
 from hpat_jl_spark.tables import load_table
-
-# sf_dir → staged .h5 file (fixture re-encoded once per process; the
-# bench's min-of-reps and the sweeps reuse it)
-_STAGED_H5: dict[str, str] = {}
-
-
-def _cleanup() -> None:
-    for p in _STAGED_H5.values():
-        shutil.rmtree(os.path.dirname(p), ignore_errors=True)
-    _STAGED_H5.clear()
-
-
-atexit.register(_cleanup)
+from hpat_jl_spark.workdirs import staged
 
 
 def _stage_lineitem_h5(spark: SparkSession, sf_dir: str) -> str:
     """Re-encode (l_orderkey, l_quantity) from the parquet fixture as
     two 1-D datasets in one classic HDF5 file — the reference's
-    column-per-dataset layout. Driver-side by design: this builds the
-    INPUT a reference user would already have; the distributed part
-    under test is the read."""
-    key = os.path.abspath(sf_dir)
-    cached = _STAGED_H5.get(key)
-    if cached and os.path.exists(cached):
-        return cached
-    li = load_table(spark, "lineitem", sf_dir)
-    pdf = li.select("l_orderkey", "l_quantity").orderBy(
-        "l_orderkey", "l_linenumber"
-    ).toPandas()
-    path = os.path.join(tempfile.mkdtemp(prefix="hpat_h5_"), "lineitem.h5")
-    write_hdf5(
-        path,
-        {
-            "orderkey": pdf["l_orderkey"].to_numpy("<i8"),
-            "quantity": pdf["l_quantity"].to_numpy("<f8"),
-        },
-    )
-    _STAGED_H5[key] = path
-    return path
+    column-per-dataset layout — once per process (the bench's
+    min-of-reps and the sweeps reuse it). Driver-side by design: this
+    builds the INPUT a reference user would already have; the
+    distributed part under test is the read."""
+
+    def build(d: str) -> None:
+        li = load_table(spark, "lineitem", sf_dir)
+        pdf = li.select("l_orderkey", "l_quantity").orderBy(
+            "l_orderkey", "l_linenumber"
+        ).toPandas()
+        write_hdf5(
+            os.path.join(d, "lineitem.h5"),
+            {
+                "orderkey": pdf["l_orderkey"].to_numpy("<i8"),
+                "quantity": pdf["l_quantity"].to_numpy("<f8"),
+            },
+        )
+
+    return os.path.join(staged("stage_h5", sf_dir, build), "lineitem.h5")
 
 
 _h5_oracle = """
@@ -110,36 +94,27 @@ def hdf5_ingest_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 # schema, aggregate, and hash-check against DuckDB over the UNTOUCHED
 # parquet — any quoting/escaping/typing bug in either direction of the
 # round trip breaks the value hash.
-_STAGED_FMT: dict[tuple[str, str], str] = {}
+_ORDERS_COLS = (
+    "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
+    "o_orderpriority",
+)
 
 
-def _stage_orders(spark: SparkSession, sf_dir: str, fmt: str) -> str:
-    key = (os.path.abspath(sf_dir), fmt)
-    cached = _STAGED_FMT.get(key)
-    if cached and os.path.exists(cached):
-        return cached
-    from hpat_jl_spark.sources import io as SIO
+def _stage_orders(
+    spark: SparkSession,
+    sf_dir: str,
+    fmt: str,
+    write: Callable[[DataFrame, str], None],
+) -> str:
+    """Write the ``_ORDERS_COLS`` slice of orders once per process with
+    ``write(frame, path)`` and return the written path."""
 
-    orders = load_table(spark, "orders", sf_dir).select(
-        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-        "o_orderpriority",
-    )
-    path = os.path.join(tempfile.mkdtemp(prefix=f"hpat_{fmt}_"), f"orders_{fmt}")
-    if fmt == "csv":
-        SIO.write_csv(orders, path)
-    else:
-        SIO.write_json(orders, path)
-    _STAGED_FMT[key] = path
-    return path
+    def build(d: str) -> None:
+        orders = load_table(spark, "orders", sf_dir).select(*_ORDERS_COLS)
+        write(orders, os.path.join(d, f"orders_{fmt}"))
 
+    return os.path.join(staged(f"stage_{fmt}", sf_dir, build), f"orders_{fmt}")
 
-def _cleanup_fmt() -> None:
-    for p in _STAGED_FMT.values():
-        shutil.rmtree(os.path.dirname(p), ignore_errors=True)
-    _STAGED_FMT.clear()
-
-
-atexit.register(_cleanup_fmt)
 
 _ORDERS_SCHEMA = (
     "o_orderkey long, o_custkey long, o_orderstatus string, "
@@ -164,9 +139,9 @@ def csv_ingest_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-pass (no inference scan)."""
     from pyspark.sql import types as T
 
-    from hpat_jl_spark.sources.io import read_csv
+    from hpat_jl_spark.sources.io import read_csv, write_csv
 
-    path = _stage_orders(spark, sf_dir, "csv")
+    path = _stage_orders(spark, sf_dir, "csv", write_csv)
     schema = T._parse_datatype_string(_ORDERS_SCHEMA)
     df = read_csv(spark, path, schema)
     return df.groupBy("o_orderstatus", "o_orderpriority").agg(
@@ -183,9 +158,9 @@ def json_ingest_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     text-pipeline tooling uses."""
     from pyspark.sql import types as T
 
-    from hpat_jl_spark.sources.io import read_json
+    from hpat_jl_spark.sources.io import read_json, write_json
 
-    path = _stage_orders(spark, sf_dir, "json")
+    path = _stage_orders(spark, sf_dir, "json", write_json)
     schema = T._parse_datatype_string(_ORDERS_SCHEMA)
     df = read_json(spark, path, schema)
     return df.groupBy("o_orderstatus", "o_orderpriority").agg(
@@ -200,19 +175,9 @@ def orc_ingest_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """orders → ORC → distributed read → aggregate, oracle on the
     untouched parquet — the Hive-warehouse interchange path, same
     round-trip gate as csv/json/hdf5_ingest_agg."""
-    from hpat_jl_spark.sources import io as SIO
+    from hpat_jl_spark.sources.io import read_orc, write_orc
 
-    key = (os.path.abspath(sf_dir), "orc")
-    path = _STAGED_FMT.get(key)
-    if not (path and os.path.exists(path)):
-        orders = load_table(spark, "orders", sf_dir).select(
-            "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-            "o_orderpriority",
-        )
-        path = os.path.join(tempfile.mkdtemp(prefix="hpat_orc_"), "orders_orc")
-        SIO.write_orc(orders, path)
-        _STAGED_FMT[key] = path
-    df = SIO.read_orc(spark, path)
+    df = read_orc(spark, _stage_orders(spark, sf_dir, "orc", write_orc))
     return df.groupBy("o_orderstatus", "o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.round(F.sum("o_totalprice"), 2).alias("total_price"),
@@ -230,23 +195,18 @@ def lines_ingest_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     the crawl-dump ingestion path."""
     from hpat_jl_spark.sources import io as SIO
 
-    key = (os.path.abspath(sf_dir), "lines")
-    path = _STAGED_FMT.get(key)
-    if not (path and os.path.exists(path)):
-        orders = load_table(spark, "orders", sf_dir).select(
-            F.concat_ws(
-                "|",
-                F.col("o_orderkey"),
-                F.col("o_custkey"),
-                F.col("o_orderstatus"),
-                F.col("o_totalprice").cast("string"),
-                F.col("o_orderpriority"),
-            ).alias("value")
+    def write(orders: DataFrame, path: str) -> None:
+        line = F.concat_ws(
+            "|",
+            F.col("o_orderkey"),
+            F.col("o_custkey"),
+            F.col("o_orderstatus"),
+            F.col("o_totalprice").cast("string"),
+            F.col("o_orderpriority"),
         )
-        path = os.path.join(tempfile.mkdtemp(prefix="hpat_lines_"), "orders_txt")
-        SIO.write_text_lines(orders, path)
-        _STAGED_FMT[key] = path
-    lines = SIO.read_text_lines(spark, path)
+        SIO.write_text_lines(orders.select(line.alias("value")), path)
+
+    lines = SIO.read_text_lines(spark, _stage_orders(spark, sf_dir, "lines", write))
     p = F.split(F.col("value"), r"\|")
     df = lines.select(
         p.getItem(1).cast("long").alias("o_custkey"),
@@ -342,20 +302,12 @@ def compaction_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     must actually shrink (asserted in tests/test_sources.py)."""
     from hpat_jl_spark.sources.io import compact_parquet
 
-    key = (os.path.abspath(sf_dir), "compacted")
-    path = _STAGED_FMT.get(key)
-    if not (path and os.path.exists(path)):
-        orders = load_table(spark, "orders", sf_dir).select(
-            "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-            "o_orderpriority",
-        )
-        base = tempfile.mkdtemp(prefix="hpat_compact_")
-        shattered = os.path.join(base, "shattered")
+    def write(orders: DataFrame, path: str) -> None:
+        shattered = path + "_shattered"
         orders.repartition(64).write.mode("overwrite").parquet(shattered)
-        path = os.path.join(base, "compacted")
         compact_parquet(spark, shattered, path)
-        _STAGED_FMT[key] = path
-    df = spark.read.parquet(path)
+
+    df = spark.read.parquet(_stage_orders(spark, sf_dir, "compacted", write))
     return df.groupBy("o_orderstatus", "o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.round(F.sum("o_totalprice"), 2).alias("total_price"),

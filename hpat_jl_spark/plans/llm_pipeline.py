@@ -806,7 +806,7 @@ def fuzzy_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     amplified tiers. Net: 2.41 → 0.63 s at sf0.1 (3.8×), rows
     identical. The oracle mirrors the same decomposition; both forms
     verified value-identical at sf0.01/sf0.1."""
-    from hpat_jl_spark.session import sized_shuffle_partitions
+    from hpat_jl_spark.session import pinned_width
 
     cust = load_table(spark, "customer", sf_dir).select(
         F.col("c_name").alias("name")
@@ -826,10 +826,7 @@ def fuzzy_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("pos", "variant"),
     )
-    width = max(
-        spark.sparkContext.defaultParallelism,
-        sized_shuffle_partitions(sf_dir),
-    )
+    width = pinned_width(spark, sf_dir)
     pinned = variants.repartition(width, "pos", "variant")
     a = pinned.alias("a")
     b = pinned.alias("b").hint("merge")

@@ -19,9 +19,8 @@ would otherwise sit unemitted behind the watermark at end-of-stream.
 
 from __future__ import annotations
 
-import atexit
 import os
-import tempfile
+import shutil
 import threading
 import uuid
 
@@ -34,6 +33,7 @@ from hpat_jl_spark.registry import register
 from hpat_jl_spark.session import scan_split_count
 from hpat_jl_spark.streaming.sources import stream_events
 from hpat_jl_spark.tables import load_table
+from hpat_jl_spark.workdirs import session_workdir, staged
 from hpat_jl_spark.streaming.windows import (
     sessionize_stream,
     sliding_counts,
@@ -42,59 +42,35 @@ from hpat_jl_spark.streaming.windows import (
 )
 
 
-# (sf_dir, copies) → staged dir. Staging is idempotent, so the sweep /
-# min-of-reps bench reuse one symlink dir per source instead of leaking
-# a fresh mkdtemp per invocation (ADVICE r03); atexit removes them all.
-_STAGED_DIRS: dict[tuple[str, int], str] = {}
-
-
-# scratch dirs (foreachBatch state versions etc.) removed at exit too
-_SCRATCH_DIRS: list[str] = []
-
-
-def _cleanup_staged_dirs() -> None:
-    import shutil
-
-    for d in list(_STAGED_DIRS.values()) + _SCRATCH_DIRS:
-        shutil.rmtree(d, ignore_errors=True)
-    _STAGED_DIRS.clear()
-    _SCRATCH_DIRS.clear()
-
-
-atexit.register(_cleanup_staged_dirs)
-
-
 def _stage_events_dir(sf_dir: str, copies: int = 1) -> str:
     """File-source streams watch directories; symlink the fixture
-    parquet into a temp dir (no copy), cached per (sf_dir, copies).
+    parquet into a staged dir (no copy), built once per process for
+    each (sf_dir, copies), so the sweeps and the bench's reps reuse it.
     ``copies`` > 1 stages the same data under several names — an
     exact-duplicate replay for dedup tests. Handles both fixture
     layouts: a single events.parquet FILE (driver testdata) and a
     DIRECTORY of part-files (real lake layout / the scaling probe's
     staged tables) — the file source lists files, not subdirectories,
     so directory sources are staged per part-file."""
-    sf_dir = os.path.abspath(sf_dir)  # the links resolve from the temp dir
-    key = (sf_dir, copies)
-    cached = _STAGED_DIRS.get(key)
-    if cached and os.path.isdir(cached):
-        return cached
-    d = tempfile.mkdtemp(prefix="hpat_stream_")
-    src = os.path.join(sf_dir, "events.parquet")
-    if os.path.isdir(src):
-        parts = sorted(
-            f for f in os.listdir(src)
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        )
-        for i in range(copies):
-            for p in parts:
-                os.symlink(
-                    os.path.join(src, p), os.path.join(d, f"events_{i}_{p}")
-                )
-    else:
-        for i in range(copies):
-            os.symlink(src, os.path.join(d, f"events_{i}.parquet"))
-    _STAGED_DIRS[key] = d
-    return d
+    # the links resolve from the staged dir, not the working directory
+    src = os.path.join(os.path.abspath(sf_dir), "events.parquet")
+
+    def build(d: str) -> None:
+        if os.path.isdir(src):
+            parts = sorted(
+                f for f in os.listdir(src)
+                if f.endswith(".parquet") and not f.startswith(("_", "."))
+            )
+            for i in range(copies):
+                for p in parts:
+                    os.symlink(
+                        os.path.join(src, p), os.path.join(d, f"events_{i}_{p}")
+                    )
+        else:
+            for i in range(copies):
+                os.symlink(src, os.path.join(d, f"events_{i}.parquet"))
+
+    return staged(f"stage_events{copies}", sf_dir, build)
 
 
 # Spark's checkpoint manager over Hadoop's FileSystem API. Spark's
@@ -516,14 +492,16 @@ def stream_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     matching proves the upsert is idempotent under at-least-once
     redelivery, which is the property foreachBatch sinks must have.
     Deterministic tiebreak: (ts, event_id) struct max == ORDER BY ts
-    DESC, event_id DESC."""
-    import tempfile
+    DESC, event_id DESC.
 
+    The versions land in a session workdir, cleared at the start of
+    every call as ``checkpointed_pagerank`` clears its snapshots, so a
+    call's frame must be read before the next call of the query."""
     ev = stream_events(
         spark, _stage_events_dir(sf_dir, copies=2), max_files_per_trigger=1
     )
-    root = tempfile.mkdtemp(prefix="hpat_upsert_")
-    _SCRATCH_DIRS.append(root)
+    root = os.path.join(session_workdir("stream_upsert", sf_dir), "versions")
+    shutil.rmtree(root, ignore_errors=True)
     state: dict[str, str] = {}
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:

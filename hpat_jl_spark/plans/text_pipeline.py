@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from hpat_jl_spark.functions import dedup as D
 from hpat_jl_spark.functions import text as X
 from hpat_jl_spark.registry import register
+from hpat_jl_spark.session import pinned_width
 from hpat_jl_spark.tables import doc_text_stream, load_table
 
 _STOP_SQL = ", ".join(f"'{w}'" for w in X.STOPWORDS)
@@ -395,7 +396,7 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     by tests/test_dedup.py. (Reference analogue: test/join_test1.jl's
     exact-golden discipline applied to the LSH path.)"""
     docs = load_table(spark, "documents", sf_dir)
-    out = D.minhash_candidates(docs, fanout=_sig_fanout(spark, sf_dir)).filter(
+    out = D.minhash_candidates(docs, fanout=pinned_width(spark, sf_dir)).filter(
         F.col("est_jaccard") >= 0.5
     )
     return out.select(
@@ -452,7 +453,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     set, and the Hamming filter exactly; planted-dup recall pinned in
     tests/test_dedup.py."""
     docs = load_table(spark, "documents", sf_dir)
-    return D.simhash_candidates(docs, fanout=_sig_fanout(spark, sf_dir)).select(
+    return D.simhash_candidates(docs, fanout=pinned_width(spark, sf_dir)).select(
         F.col("id_a").alias("doc_a"),
         F.col("id_b").alias("doc_b"),
         "hamming",
@@ -668,23 +669,6 @@ FROM h
 GROUP BY chunk_hash
 HAVING count(DISTINCT doc_id) >= 2
 """
-
-
-def _sig_fanout(spark: SparkSession, sf_dir: str) -> int:
-    """Width for the minhash/simhash signature kernels' pinned
-    exchange — the r9 byte-sized rule (CLAUDE.md): a pinned exchange
-    that feeds per-task partial-agg state must be
-    max(defaultParallelism, sized_shuffle_partitions(sf_dir)), not
-    bare defaultParallelism — every downstream per-task buffer is
-    corpus/width bytes, and at amplified tiers a width pinned to the
-    local core count concentrates it (the q01 ×100 OOM class). At
-    sf0.1 both terms are ≤ the core count, so bench plans are
-    unchanged; only amplified corpora widen."""
-    from hpat_jl_spark.session import sized_shuffle_partitions
-
-    return max(
-        spark.sparkContext.defaultParallelism, sized_shuffle_partitions(sf_dir)
-    )
 
 
 @register(
@@ -1088,12 +1072,7 @@ def lang_id_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sf0.1). The exchange carries only (doc_id, lang, 200-char
     # prefix) — the narrowest projection, guide §2.3 — and the width
     # is the byte-sized r9 rule.
-    from hpat_jl_spark.session import sized_shuffle_partitions
-
-    width = max(
-        spark.sparkContext.defaultParallelism,
-        sized_shuffle_partitions(sf_dir),
-    )
+    width = pinned_width(spark, sf_dir)
     prefix = docs.select(
         "doc_id", "lang", F.substring("text", 1, 200).alias("t")
     ).repartition(width, "doc_id")
@@ -1343,14 +1322,10 @@ def bpe_encode_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     rule. train_bpe keeps its own unpinned scan (its word-count agg
     already fans out through the groupBy exchange)."""
     from hpat_jl_spark.functions.bpe import train_bpe
-    from hpat_jl_spark.session import sized_shuffle_partitions
 
     docs = load_table(spark, "documents", sf_dir)
     merges = train_bpe(docs, num_merges=64, max_words=65536)
-    width = max(
-        spark.sparkContext.defaultParallelism,
-        sized_shuffle_partitions(sf_dir),
-    )
+    width = pinned_width(spark, sf_dir)
     docs = docs.select("doc_id", "text").repartition(width, "doc_id")
     words = F.filter(
         F.split(F.trim(F.col("text")), r"\s+"), lambda w: w != ""
@@ -1759,12 +1734,7 @@ def bpe_encode_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     expansion + 16 sequential whole-string rewrites), so by the §1.3
     napkin math the shuffle is a few percent of the stage at ANY
     scale; width is the byte-sized r9 rule, not a local constant."""
-    from hpat_jl_spark.session import sized_shuffle_partitions
-
-    width = max(
-        spark.sparkContext.defaultParallelism,
-        sized_shuffle_partitions(sf_dir),
-    )
+    width = pinned_width(spark, sf_dir)
     docs = (
         load_table(spark, "documents", sf_dir)
         .select("doc_id", "text")
@@ -1918,7 +1888,7 @@ def fuzzy_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs,
         left_pred=lambda id_: id_ % 10 != 0,
         right_pred=lambda id_: id_ % 10 == 0,
-        fanout=_sig_fanout(spark, sf_dir),
+        fanout=pinned_width(spark, sf_dir),
     ).select(
         F.col("id_left").alias("corpus_doc"),
         F.col("id_right").alias("eval_doc"),

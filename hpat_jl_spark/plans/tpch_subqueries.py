@@ -230,7 +230,7 @@ def q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     SHUFFLE_HASH: the build is the per-(order,supplier) aggregate of
     one nation's suppliers — bounded by corpus/width like q01's build —
     and the hint keeps the wide fl stream un-sorted."""
-    from hpat_jl_spark.session import sized_shuffle_partitions
+    from hpat_jl_spark.session import pinned_width
 
     li = load_table(spark, "lineitem", sf_dir)
     orders = load_table(spark, "orders", sf_dir)
@@ -245,10 +245,7 @@ def q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # semi-ish join shuffles (or AQE-broadcasts) on orderkey; the pinned
     # repartition right after it is the ONE line-stream exchange every
     # downstream stage reuses.
-    width = max(
-        spark.sparkContext.defaultParallelism,
-        sized_shuffle_partitions(sf_dir),
-    )
+    width = pinned_width(spark, sf_dir)
     # Explicit not-null filters make the two consumers' scan predicates
     # IDENTICAL: the line-match join infers isnotnull(suppkey/shipdate)
     # constraints and pushes them below the exchange on its branch

@@ -104,6 +104,23 @@ def sized_shuffle_partitions(
     return max(floor, min(total // target_bytes, per_core_cap * local_cpus()))
 
 
+def pinned_width(spark: SparkSession, sf_dir: str, per_core_cap: int = 4) -> int:
+    """Width of an explicit ``repartition(width, key)`` pin — the r9
+    byte-sized rule (CLAUDE.md): a pinned exchange that feeds per-task
+    partial-agg state or a pair stream is
+    ``max(defaultParallelism, sized_shuffle_partitions(sf_dir))``, not
+    bare defaultParallelism. Every downstream per-task buffer is
+    corpus/width bytes, and at amplified tiers a width pinned to the
+    local core count concentrates it (the q01 ×100 OOM class). At sf0.1
+    both terms are ≤ the core count, so bench plans keep the core
+    count; only amplified corpora widen. ``per_core_cap`` is passed to
+    ``sized_shuffle_partitions`` (graph kernels raise it)."""
+    return max(
+        spark.sparkContext.defaultParallelism,
+        sized_shuffle_partitions(sf_dir, per_core_cap=per_core_cap),
+    )
+
+
 # Per-path listing memo, (size, row groups) per parquet file. Fixtures are
 # immutable per directory (the load_table cache's assumption); conf-
 # dependent packing is recomputed per call so a probe that re-tunes

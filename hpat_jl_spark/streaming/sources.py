@@ -11,8 +11,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from hpat_jl_spark.tables import SCHEMAS, normalize_timestamp, pin_timestamp_confs
 
 # events_dir → probed parquet encoding of `ts` (see stream_events).
 # The probe is a batch spark.read.parquet per invocation (~80-110 ms of
@@ -20,18 +21,6 @@ from pyspark.sql import types as T
 # fixture's encoding cannot change under a running process — the staged
 # dirs are themselves memoized symlink farms — so probe once per dir.
 _PROBED_TS: dict[str, T.DataType] = {}
-
-def _events_schema(ts_type: T.DataType) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", ts_type),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
 
 
 def stream_events(
@@ -49,26 +38,23 @@ def stream_events(
     Declaring the wrong one is not an error but a silent 1000x timestamp
     shrink (the round-2 `stream_tumbling_counts` wrong-answer). So the
     encoding is PROBED from the parquet footers with a one-off batch read
-    (driver-side, metadata only) and the declared schema + normalization
-    branch follow the probe, mirroring tables.load_table:
-      long → timestamp_micros(ts div 1000); NTZ → cast (UTC session tz);
-      TIMESTAMP → passthrough.
+    (driver-side, metadata only); the declared schema is
+    ``tables.SCHEMAS["events"]`` with the probed `ts` type, normalized
+    by ``tables.normalize_timestamp`` as ``load_table`` does.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")  # as tables.load_table
+    pin_timestamp_confs(spark)
     key = os.path.abspath(events_dir)
     probed = _PROBED_TS.get(key)
     if probed is None:
         probed = spark.read.parquet(events_dir).schema["ts"].dataType
         _PROBED_TS[key] = probed
-    reader = spark.readStream.schema(_events_schema(probed)).format("parquet")
+    schema = T.StructType(
+        [
+            T.StructField(f.name, probed if f.name == "ts" else f.dataType)
+            for f in SCHEMAS["events"].fields
+        ]
+    )
+    reader = spark.readStream.schema(schema).format("parquet")
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    raw = reader.load(events_dir)
-    if isinstance(probed, T.LongType):
-        return raw.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    if isinstance(probed, T.TimestampNTZType):
-        return raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    if isinstance(probed, T.TimestampType):
-        return raw
-    raise TypeError(f"events.ts: unsupported parquet encoding {probed.simpleString()}")
+    return normalize_timestamp(reader.load(events_dir), "ts", probed, "events stream")

@@ -30,6 +30,7 @@ from hpat_jl_spark.session import (
     sized_shuffle_partitions,
     starved_scan_pin_width,
 )
+from hpat_jl_spark.workdirs import _STAGED
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -164,12 +165,64 @@ _TABLE_CACHE: dict[tuple[str, str], tuple[SparkSession, DataFrame]] = {}
 
 
 def invalidate_table_cache() -> None:
-    """Forget every resolved table, every scan listing and every kept
-    prepared plan (``registry._plans_once``): all three assume a path's
-    files never change, so they are dropped together."""
+    """Forget every resolved table, every scan listing, every kept
+    prepared plan (``registry._plans_once``) and every staged input
+    (``workdirs.staged``): all four assume a path's files never change,
+    so they are dropped together."""
     _TABLE_CACHE.clear()
     _SCAN_LISTING_CACHE.clear()
     _PLAN_CACHE.clear()
+    _STAGED.clear()
+
+
+def pin_timestamp_confs(spark: SparkSession) -> None:
+    """Set the two session confs every fixture read relies on: raw
+    ns-int64 timestamps read as long (``nanosAsLong``), and the session
+    timezone pinned to UTC. The NTZ branch of
+    :func:`normalize_timestamp` and every date_trunc/window downstream
+    assume UTC; a vanilla session inherits the machine tz, so it is
+    pinned here (engine sessions already set it). Overwriting a session
+    that INTENTIONALLY runs another timezone changes semantics of its
+    already-planned frames — warn, don't be silent about it (ADVICE
+    r03)."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    prev_tz = spark.conf.get("spark.sql.session.timeZone", None)
+    if prev_tz and prev_tz != "UTC":
+        warnings.warn(
+            f"fixture reads pin spark.sql.session.timeZone=UTC, overriding "
+            f"the session's explicit {prev_tz!r}; timestamps in frames "
+            f"planned before this call may shift",
+            stacklevel=3,
+        )
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
+def normalize_timestamp(
+    df: DataFrame, column: str, actual: T.DataType, where: str
+) -> DataFrame:
+    """``column`` of ``df`` as the declared TimestampType, from any
+    parquet encoding the driver has ever emitted (read under
+    :func:`pin_timestamp_confs`):
+
+    - raw ns-int64 → read as long (legacy.parquet.nanosAsLong), integer
+      div to micros (ns epoch exceeds double's 2^53 precision; truncation
+      matches DuckDB/pandas), timestamp_micros.
+    - TIMESTAMP_NTZ (timestamp[us] parquet) → cast to TIMESTAMP. The
+      session timezone is pinned UTC, so wall-clock == epoch and the
+      cast reinterprets the same micros value losslessly.
+    - TIMESTAMP → passthrough.
+
+    Any other ``actual`` type raises TypeError naming ``where``."""
+    if isinstance(actual, T.LongType):
+        return df.withColumn(column, F.expr(f"timestamp_micros({column} div 1000)"))
+    if isinstance(actual, T.TimestampNTZType):
+        return df.withColumn(column, F.col(column).cast("timestamp"))
+    if isinstance(actual, T.TimestampType):
+        return df
+    raise TypeError(
+        f"{where}: column {column!r} declared TIMESTAMP but parquet holds "
+        f"{actual.simpleString()}"
+    )
 
 
 def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
@@ -179,15 +232,8 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
 
     The fixture encoding has changed between driver generations (ns-int64,
     then timestamp[us] which Spark 4 reads as TIMESTAMP_NTZ under
-    inferTimestampNTZ), so every timestamp encoding the driver has ever
-    emitted is normalized here to the declared TimestampType:
-
-    - raw ns-int64 → read as long (legacy.parquet.nanosAsLong), integer
-      div to micros (ns epoch exceeds double's 2^53 precision; truncation
-      matches DuckDB/pandas), timestamp_micros.
-    - TIMESTAMP_NTZ (timestamp[us] parquet) → cast to TIMESTAMP. The
-      session timezone is pinned UTC (session.py), so wall-clock == epoch
-      and the cast is value-preserving.
+    inferTimestampNTZ), so every timestamp column goes through
+    :func:`normalize_timestamp` to the declared TimestampType.
 
     Any OTHER divergence from the declared schema raises immediately —
     the reference treats a schema mismatch as an error at declaration
@@ -200,22 +246,7 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
     hit = _TABLE_CACHE.get(cache_key)
     if hit is not None and hit[0] is spark:
         return hit[1]
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # The NTZ branch below and every date_trunc/window downstream assume
-    # UTC; a vanilla session inherits the machine tz, so pin it here the
-    # same way nanosAsLong is pinned (engine sessions already set it).
-    # Overwriting a session that INTENTIONALLY runs another timezone
-    # changes semantics of its already-planned frames — warn, don't be
-    # silent about it (ADVICE r03).
-    prev_tz = spark.conf.get("spark.sql.session.timeZone", None)
-    if prev_tz and prev_tz != "UTC":
-        warnings.warn(
-            f"load_table pins spark.sql.session.timeZone=UTC, overriding "
-            f"the session's explicit {prev_tz!r}; timestamps in frames "
-            f"planned before this call may shift",
-            stacklevel=2,
-        )
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    pin_timestamp_confs(spark)
     df = spark.read.parquet(table_path(sf_dir, name))
     declared = SCHEMAS[name]
     for field in declared.fields:
@@ -226,20 +257,7 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
             )
         actual = df.schema[field.name].dataType
         if isinstance(field.dataType, T.TimestampType):
-            if isinstance(actual, T.LongType):
-                # integer div — ns epoch exceeds double's 2^53 precision
-                df = df.withColumn(
-                    field.name, F.expr(f"timestamp_micros({field.name} div 1000)")
-                )
-            elif isinstance(actual, T.TimestampNTZType):
-                # µs parquet read as NTZ; session tz is UTC so this cast
-                # reinterprets the same micros value losslessly.
-                df = df.withColumn(field.name, F.col(field.name).cast("timestamp"))
-            elif not isinstance(actual, T.TimestampType):
-                raise TypeError(
-                    f"table {name!r}: column {field.name!r} declared TIMESTAMP "
-                    f"but parquet holds {actual.simpleString()}"
-                )
+            df = normalize_timestamp(df, field.name, actual, f"table {name!r}")
         elif actual != field.dataType:
             raise TypeError(
                 f"table {name!r}: column {field.name!r} declared "

@@ -1,4 +1,5 @@
-"""Session-scoped writable working directories for registered queries.
+"""Per-process directories for registered queries: write-side working
+dirs and staged inputs, created, keyed and removed in one place.
 
 VERDICT r09 #1 (the round's one ``weak`` mark): ``checkpointed_pagerank``
 composed its durable-checkpoint dir from a FIXED name under
@@ -6,10 +7,10 @@ composed its durable-checkpoint dir from a FIXED name under
 pytest, or any multi-tenant deployment) raced on ``_latest``/
 ``_temporary`` and failed with FileNotFoundException. The same class
 had already bitten the IVF index dir in r5/r6. This module is now the
-ONLY place in the package allowed to compose ``tempfile.gettempdir()``
-(pinned by tests/test_workdirs.py); every write-side working directory
-a registered query needs goes through :func:`session_workdir`, which
-keys the path by
+ONLY place in the package allowed to compose ``tempfile.gettempdir()``,
+call ``tempfile.mkdtemp`` or register an ``atexit`` hook (pinned by
+tests/test_workdirs.py). Every directory a registered query writes
+goes through :func:`session_workdir`, which keys the path by
 
   * **user** — a mode-0700, ownership-verified per-user parent (the
     r6/r7-hardened logic factored out of plans/similarity.py), so a
@@ -31,6 +32,13 @@ an explicit path; kill-and-resume is pinned by
 tests/test_checkpoint_restart.py with caller-owned paths) — the
 registered queries clear their dir per invocation for deterministic
 fresh runs, so they lose nothing by being session-scoped.
+
+A STAGED input (an input derived from ``sf_dir`` once per process and
+read by every later call: the HDF5/CSV/JSON/ORC/line re-encodings, the
+compacted parquet, the events symlink farm) is a session workdir
+filled by :func:`staged`, which also records that the fill completed.
+``tables.invalidate_table_cache()`` forgets those records with the
+other caches that assume an input path's files never change.
 """
 
 from __future__ import annotations
@@ -42,7 +50,9 @@ import os
 import shutil
 import stat
 import tempfile
+import threading
 import uuid
+from collections.abc import Callable
 
 # One random token per engine session (process). Concurrent sessions on
 # one box get disjoint working trees by construction.
@@ -50,6 +60,11 @@ _SESSION_TOKEN = uuid.uuid4().hex[:12]
 
 _memo: dict[tuple[str, str | None], str] = {}
 _cleanup_registered: set[str] = set()
+# (kind, realpath of sf_dir) of every staged input whose build finished
+_STAGED: set[tuple[str, str]] = set()
+# held across check, build and record, so two threads never build into
+# (and empty) one directory at once
+_STAGE_LOCK = threading.Lock()
 
 
 def _rm(path: str) -> None:
@@ -103,3 +118,26 @@ def session_workdir(kind: str, corpus: str | None = None) -> str:
         atexit.register(_rm, path)
     _memo[key] = path
     return path
+
+
+def staged(kind: str, sf_dir: str, build: Callable[[str], None]) -> str:
+    """Return the session workdir for (``kind``, ``sf_dir``) after
+    ``build(path)`` has filled it once in this process. Keyed by the
+    realpath of ``sf_dir`` like :func:`session_workdir`, so a symlink
+    or a relative spelling reuses the input staged for the target.
+    Builds again when the directory has vanished or the key was
+    forgotten (``tables.invalidate_table_cache``), each time into an
+    emptied directory; a build that raises records nothing. ``build``
+    must not depend on the working directory: resolve ``sf_dir``
+    before composing paths that outlive the call (symlink targets)."""
+    key = (kind, os.path.realpath(sf_dir))
+    with _STAGE_LOCK:
+        path = session_workdir(kind, sf_dir)
+        if key in _STAGED and os.path.isdir(path):
+            return path
+        _STAGED.discard(key)
+        _rm(path)
+        os.makedirs(path, exist_ok=True)
+        build(path)
+        _STAGED.add(key)
+        return path

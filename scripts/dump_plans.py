@@ -1,6 +1,7 @@
 #!/usr/bin/env python
-"""Regenerate PLANS.md: formatted physical plans for the headline
-queries plus automated checks of the scale-critical properties
+"""Regenerate PLANS.md: formatted physical plans for a documented set
+of queries (``DOCUMENTED``, not the bench's ``headline`` tag) plus
+automated checks of the scale-critical properties
 (pushdown, pruning, broadcast, partial aggregation, no Python in
 relational paths). Run after changing any plan:
 
@@ -19,7 +20,8 @@ from hpat_jl_spark.session import get_spark  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
 
-HEADLINE = [
+# query → what its plan shows
+DOCUMENTED = [
     ("q1_pricing_summary", "scan-heavy single-pass aggregate"),
     ("q6_forecast_revenue", "multi-predicate scan + global sum"),
     ("q26", "broadcast dim join + wide conditional aggregate"),
@@ -54,6 +56,8 @@ HEADLINE = [
 
 
 def fmt_plan(df) -> str:
+    """``df.explain("formatted")`` as a string (plan_lint and
+    explain_query import it)."""
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
@@ -90,7 +94,7 @@ def main() -> None:
         "(AQE: `isFinalPlan=false` until executed).",
         "",
     ]
-    for name, desc in HEADLINE:
+    for name, desc in DOCUMENTED:
         df = registry.REGISTRY[name].fn(spark, SF)
         plan = fmt_plan(df)
         notes = check(plan, name)

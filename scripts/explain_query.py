@@ -23,16 +23,14 @@ def main() -> None:
     os.makedirs(outdir, exist_ok=True)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+    from dump_plans import fmt_plan
     from hpat_jl_spark import registry
     from hpat_jl_spark.session import get_spark
 
     spark = get_spark()
     qs = registry.queries()
     for name in names:
-        df = qs[name](spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        plan = fmt_plan(qs[name](spark, sf_dir))
         path = os.path.join(outdir, f"{name}_{suffix}.txt")
         with open(path, "w") as fh:
             fh.write(f"# {name} @ {sf_dir} — explain('formatted')\n\n")

@@ -23,7 +23,7 @@ plan at sf0.001 and fails on scale anti-patterns:
                            row_number. Those are audited by hand; all
                            current ones are over tiny dimension tables.
 
-dump_plans.py documents the headline plans in depth; this linter is the
+dump_plans.py documents a set of plans in depth; this linter is the
 breadth pass — a new query (or a Catalyst regression after a rewrite)
 that sneaks a cross product or row-Python stage into ANY of the
 registered plans turns the build red.
@@ -37,6 +37,7 @@ import sys
 
 sys.path.insert(0, ".")
 
+from dump_plans import fmt_plan
 from hpat_jl_spark import registry
 from hpat_jl_spark.session import get_spark
 
@@ -110,12 +111,6 @@ ALLOW: dict[str, dict[str, str]] = {
 }
 
 BAD = ["BatchEvalPython", "CartesianProduct", "BroadcastNestedLoopJoin"]
-
-
-def fmt_plan(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
 
 
 def _top_level_groups(s: str) -> list[str]:

@@ -17,7 +17,9 @@ from hpat_jl_spark.session import (
     _parse_jvm_bytes,
     driver_memory,
     local_cpus,
+    pinned_width,
     scan_split_count,
+    sized_shuffle_partitions,
     starved_scan_pin_width,
 )
 from hpat_jl_spark.tables import TABLE_NAMES, table_path
@@ -209,3 +211,15 @@ def test_invalidate_table_cache_drops_scan_listings(spark, tmp_path):
     assert scan_split_count(spark, str(d)) == 1  # the stale listing
     invalidate_table_cache()
     assert scan_split_count(spark, str(d)) == 4
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_pinned_width_is_the_r9_rule(spark, sf):
+    """pinned_width is the expression the eight pinned exchanges spelled
+    out before it existed, with the relational and the graph cap."""
+    sf_dir = f"/root/testdata/{sf}"
+    par = spark.sparkContext.defaultParallelism
+    assert pinned_width(spark, sf_dir) == max(par, sized_shuffle_partitions(sf_dir))
+    assert pinned_width(spark, sf_dir, per_core_cap=16) == max(
+        par, sized_shuffle_partitions(sf_dir, per_core_cap=16)
+    )

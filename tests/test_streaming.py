@@ -565,18 +565,14 @@ def test_bounded_replay_drops_its_memory_sink_view(spark):
 
 def test_stream_query_on_relative_sf_dir(spark, monkeypatch):
     """A relative ``sf_dir`` stages links that still resolve from the
-    temp dir the stream watches (they used to dangle, and the broken
+    staged dir the stream watches (they used to dangle, and the broken
     dir was memoized for later absolute-path calls too)."""
     import os
 
-    from hpat_jl_spark.plans import streaming
+    from hpat_jl_spark.plans.streaming import _stage_events_dir
     from hpat_jl_spark.testing import check_query
 
-    staged: dict = {}
-    monkeypatch.setattr(streaming, "_STAGED_DIRS", staged)
+    # a vanished staged dir is staged again, here from the relative path
+    shutil.rmtree(_stage_events_dir(SF))
     monkeypatch.chdir(os.path.dirname(SF))
-    try:
-        assert check_query(spark, "stream_tumbling_counts", os.path.basename(SF)) == []
-    finally:
-        for d in staged.values():
-            shutil.rmtree(d, ignore_errors=True)
+    assert check_query(spark, "stream_tumbling_counts", os.path.basename(SF)) == []
